@@ -38,11 +38,10 @@ object Centroids {
     * (wssse, the BD pair, DB, CH, XB, nearest-assignment, the report
     * roundtrip) re-derived it per query — ~6 recomputes inside the
     * report union alone. Consumers that share a points FRAME (the
-    * per-(session,sf) memoized ground-truth frame in ClusterQueries;
-    * the frame threaded through one allIndices call) now pay the
-    * shuffle once. Identity keying is deliberate: a canonicalized-PLAN
-    * key was tried and COLLIDED between the sweep's per-k MLlib
-    * prediction frames (the k lives in a UDF closure the canonical
+    * per-(session,sf) memoized ground-truth frame in ClusterQueries)
+    * now pay the shuffle once. Identity keying is deliberate: a
+    * canonicalized-PLAN key was tried and COLLIDED between per-k
+    * k-means assignment frames (the k lives in a UDF closure the canonical
     * string does not render), silently serving k=2 centroids to the
     * k=3 indices — object identity can never cross-serve. WeakHashMap:
     * entries die with the input frame; the checkpointed value's plan

@@ -1,5 +1,6 @@
 package graft.engine.cluster
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine.ArrayMath
@@ -155,11 +156,20 @@ object Indices {
         col("wssse") / (col("n") * col("minsep2"))).as("xie_beni"))
   }
 
-  /** All four indices in ONE pass over the point set (plus the tiny
-    * centroid jobs): used by the k-sweep so each k costs one
-    * point-centroid distance scan instead of four independent DAGs.
-    * The k² centroid-pair math runs on the driver — exactly the
-    * reference's topology (SURVEY.md §4.1).
+  /** All four indices of ONE assignment (point cols…, features,
+    * cluster): the one-k case of [[allIndicesByK]]. */
+  def allIndices(points: DataFrame): (Double, Option[Double], Option[Double], Option[Double]) =
+    allIndicesByK(points.select(col("cluster"), col("features")).rdd
+      .map(r => (0, r.getInt(0), r.getSeq[Double](1).toArray)))
+      .getOrElse(0, (0.0, None, None, None))
+
+  /** All four indices for EVERY k of k-keyed assignments (k, cluster,
+    * features) in two passes over them, whatever the number of k: one
+    * for the per-(k, cluster) centroids, one for each point's distances
+    * to the centroids of its k. The k²-sized centroid-pair math runs on
+    * the driver — exactly the reference's topology (SURVEY.md §4.1). A
+    * k-sweep therefore pays two jobs for its whole index table instead
+    * of one index DAG per k.
     *
     * WSSSE is total (always defined on non-empty input); the three
     * validity indices are None when UNDEFINED — a single non-empty
@@ -167,49 +177,82 @@ object Indices {
     * or zero denominators (coincident centroids / zero scatter). The
     * per-index conventions match the DataFrame forms above exactly:
     * silhouette means only the DEFINED per-point terms; DB maxes only
-    * the DEFINED pair terms. */
-  def allIndices(points: DataFrame): (Double, Option[Double], Option[Double], Option[Double]) = {
-    val cent = Centroids.centroids(points)
-    val centArr = cent.collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).sortBy(_._1)
-    // per-point: a = dist to own centroid, b = min dist to others
-    val perPoint = Centroids.pointCentroidDistances(points, cent)
-      .withColumn("dd", sqrt(col("d2")))
-      .groupBy("vec_id", "cluster").agg(
-        min(when(col("cluster") === col("c_cluster"), col("dd"))).as("a"),
-        min(when(col("cluster") =!= col("c_cluster"), col("dd"))).as("b"))
-    val sTerm = when(greatest(col("a"), col("b")) > 0,
-      (col("b") - col("a")) / greatest(col("a"), col("b")))
-    val agg = perPoint.groupBy("cluster").agg(
-      sum(col("a") * col("a")).as("w"), max("a").as("mx"), avg("a").as("s"),
-      sum(sTerm).as("silsum"),
-      count(sTerm).as("silcnt"),
-      count(lit(1)).as("n")).collect()
-    val wssse = agg.map(_.getDouble(1)).sum
-    val maxIntra = agg.map(_.getDouble(2)).max
-    val silCnt = agg.map(_.getLong(5)).sum
-    val sil = if (silCnt == 0) None
-      else Some(agg.flatMap(r => Option(r.get(4)).map(_.asInstanceOf[Double])).sum / silCnt)
-    val sByCluster = agg.map(r => r.getInt(0) -> r.getDouble(3)).toMap
-    def dist(x: Array[Double], y: Array[Double]): Double = {
-      var s0 = 0.0; var i = 0
-      while (i < x.length) { val t = x(i) - y(i); s0 += t * t; i += 1 }
-      math.sqrt(s0)
+    * the DEFINED pair terms. Sums accumulate in point order inside a
+    * partition and in partition order across partitions, so each k's
+    * values are bit-identical run to run and whatever other k share
+    * the input. */
+  def allIndicesByK(rows: RDD[(Int, Int, Array[Double])])
+      : Map[Int, (Double, Option[Double], Option[Double], Option[Double])] = {
+    type Acc = scala.collection.mutable.HashMap[(Int, Int), Array[Double]]
+    def merge(a: Acc, b: Acc, comb: (Array[Double], Array[Double]) => Array[Double]): Acc = {
+      b.foreach { case (key, v) => a(key) = a.get(key).fold(v)(comb(_, v)) }
+      a
     }
-    val pairs = for {
-      (ci, fi) <- centArr; (cj, fj) <- centArr if ci < cj
-    } yield (ci, cj, dist(fi, fj))
-    val dunn = if (pairs.isEmpty || maxIntra <= 0) None
-      else Some(pairs.map(_._3).min / maxIntra)
-    val dbTerms = centArr.flatMap { case (ci, _) =>
-      val rs = pairs.collect {
-        case (a, b, dd) if dd > 0 && a == ci => (sByCluster(ci) + sByCluster(b)) / dd
-        case (a, b, dd) if dd > 0 && b == ci => (sByCluster(ci) + sByCluster(a)) / dd
+    // pass 1: per (k, cluster) [Σx…, n] -> centroid = Σx / n
+    val sums = BatchKMeans.aggregateOrdered(rows, () => new Acc)(
+      { case (m, (k, c, v)) =>
+          val s = m.getOrElseUpdate((k, c), new Array[Double](v.length + 1))
+          for (t <- v.indices) s(t) += v(t)
+          s(v.length) += 1.0
+          m },
+      merge(_, _, BatchKMeans.addInto))
+    val cents: Map[Int, Array[(Int, Array[Double])]] = sums.toSeq
+      .groupBy(_._1._1).map { case (k, cs) =>
+        k -> cs.map { case ((_, c), s) =>
+          val d = s.length - 1
+          (c, Array.tabulate(d)(t => s(t) / s(d)))
+        }.sortBy(_._1).toArray
       }
-      if (rs.isEmpty) None else Some(rs.max)
+    // pass 2: per point a = dist to own centroid, b = min dist to the
+    // other centroids of its k; per (k, cluster)
+    // [Σa², max a, Σa, Σ silhouette term, #defined terms, n]
+    val bc = rows.sparkContext.broadcast(cents)
+    val stats = try BatchKMeans.aggregateOrdered(rows, () => new Acc)(
+      { case (m, (k, c, v)) =>
+          var a2 = 0.0; var b2 = Double.PositiveInfinity
+          bc.value(k).foreach { case (cc, ctr) =>
+            val d2 = BatchKMeans.sqDist(v, ctr)
+            if (cc == c) a2 = d2 else if (d2 < b2) b2 = d2
+          }
+          val a = math.sqrt(a2); val b = math.sqrt(b2)
+          // zero-denominator guard (a point exactly on coincident
+          // centroids has a = b = 0) and no other centroid (b = ∞):
+          // the term is UNDEFINED and leaves the mean
+          val defined = !b2.isInfinite && math.max(a, b) > 0
+          val s = m.getOrElseUpdate((k, c), new Array[Double](6))
+          s(0) += a2; s(1) = math.max(s(1), a); s(2) += a
+          if (defined) { s(3) += (b - a) / math.max(a, b); s(4) += 1.0 }
+          s(5) += 1.0
+          m },
+      merge(_, _, (x, y) => {
+        x(0) += y(0); x(1) = math.max(x(1), y(1))
+        for (i <- 2 until 6) x(i) += y(i)
+        x
+      }))
+    finally bc.destroy()
+    stats.toSeq.groupBy(_._1._1).map { case (k, byCluster) =>
+      val agg = byCluster.map { case ((_, c), s) => (c, s) }.sortBy(_._1)
+      val wssse = agg.map(_._2(0)).sum
+      val maxIntra = agg.map(_._2(1)).max
+      val silCnt = agg.map(_._2(4)).sum
+      val sil = if (silCnt == 0) None else Some(agg.map(_._2(3)).sum / silCnt)
+      val sByCluster = agg.map { case (c, s) => c -> s(2) / s(5) }.toMap
+      val centArr = cents(k)
+      val pairs = for {
+        (ci, fi) <- centArr; (cj, fj) <- centArr if ci < cj
+      } yield (ci, cj, math.sqrt(BatchKMeans.sqDist(fi, fj)))
+      val dunn = if (pairs.isEmpty || maxIntra <= 0) None
+        else Some(pairs.map(_._3).min / maxIntra)
+      val dbTerms = centArr.flatMap { case (ci, _) =>
+        val rs = pairs.collect {
+          case (a, b, dd) if dd > 0 && a == ci => (sByCluster(ci) + sByCluster(b)) / dd
+          case (a, b, dd) if dd > 0 && b == ci => (sByCluster(ci) + sByCluster(a)) / dd
+        }
+        if (rs.isEmpty) None else Some(rs.max)
+      }
+      val db = if (dbTerms.isEmpty) None else Some(dbTerms.sum / dbTerms.length)
+      k -> (wssse, sil, dunn, db)
     }
-    val db = if (dbTerms.isEmpty) None else Some(dbTerms.sum / dbTerms.length)
-    (wssse, sil, dunn, db)
   }
 
   /** Chi-squared external validity over a contingency table of two

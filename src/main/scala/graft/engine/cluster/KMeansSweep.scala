@@ -1,126 +1,75 @@
 package graft.engine.cluster
 
-import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.evaluation.ClusteringEvaluator
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.engine.Tables
 
-/** The reference's flagship entry point rebuilt on the MLlib DataFrame
-  * API (SURVEY.md §2.1 #11–#15, §3.1 EP1–EP3): K-Means over a k-sweep
-  * with all four validity indices per k, plus optimal-k selection and a
-  * report sink.
+/** The reference's flagship entry point (SURVEY.md §2.1 #11–#15, §3.1
+  * EP1–EP3): K-Means over a k-sweep with all four validity indices per
+  * k, plus optimal-k selection and a report sink.
   *
-  * Reference behaviors preserved (SURVEY.md §4.1):
-  *  - the parsed point set is persisted (MEMORY_AND_DISK) before the
-  *    sweep, so each k re-reads cache, not parquet — the reference's
-  *    single most important performance lever (`RDD.cache()`);
-  *  - fixed seed for best-effort determinism (never oracle-checked —
-  *    K-Means is iteration-order dependent; SURVEY §7.5);
-  *  - per-k wall-clock recorded alongside the indices, matching the
-  *    reference's published per-k timing artifacts.
+  * The sweep fits EVERY k in one batched loop ([[BatchKMeans]], MLlib's
+  * algorithm and defaults): the point set becomes dense vectors once,
+  * persisted MEMORY_AND_DISK for the sweep and released after it — the
+  * reference's single most important performance lever
+  * (`RDD.cache()`) — and each init step or Lloyd iteration is ONE job
+  * over that cache for every k still moving, so the cache is scanned
+  * about maxIter + 8 times per sweep, not once per (k, iteration). The
+  * fixed seed makes every fit deterministic (never oracle-checked —
+  * K-Means is iteration-order dependent; SURVEY §7.5).
   *
-  * The index math itself is the decoupled Catalyst DAG in [[Indices]] —
-  * the sweep only swaps the `cluster` column from ground-truth label to
-  * `KMeansModel.transform`'s prediction. The `VectorUDT` boundary is
-  * crossed only here (`array_to_vector`), per SURVEY §1.2.
+  * The index math is [[Indices.allIndicesByK]]: one call over the
+  * k-keyed assignments scores every k in two passes.
   */
 object KMeansSweep {
 
-  /** Fit K-Means for one k; returns the input with a `cluster`
-    * prediction column (id, features, cluster). */
+  /** Fit K-Means for one k — the one-k case of the sweep's batched
+    * kernel; returns (vec_id, features, cluster) with each point at its
+    * nearest final center. An empty input yields an empty assignment;
+    * k above the point count fits at most n distinct centers. */
   def assign(points: DataFrame, k: Int, maxIter: Int = 20, seed: Long = 42L): DataFrame = {
-    val withVec = points.withColumn("fv", array_to_vector(col("features")))
     require(k >= 1, s"assign needs k >= 1, got $k") // empty OUTPUT is the
     // empty-INPUT convention only — an unsatisfiable request stays loud
-    // degenerate-input guards: MLlib's fit aborts on a zero-row input
-    // ("Nothing has been added to this summarizer") and its init
-    // sampling throws a raw ArrayIndexOutOfBounds when k exceeds the
-    // point count — an empty slice yields an empty assignment, and k
-    // is CLAMPED to n (a cluster count above n is unsatisfiable; the
-    // clamp is the nearest defined problem). limit(k).count() bounds
-    // the probe at k rows — never a full count.
-    val nUpToK = withVec.limit(k).count()
-    // built by the same select as the non-empty branches (round-13
-    // ADVICE): a caller passing misnamed columns fails with the same
-    // loud AnalysisException on EVERY path, instead of this one path
-    // silently emitting a filtered-down schema
-    if (nUpToK == 0)
-      return points.select(col("vec_id"), col("features"),
-        lit(0).as("cluster")).limit(0)
-    val kEff = math.min(k.toLong, nUpToK).toInt
-    // MLlib rejects k < 2 outright — and the k=1 solution needs no
-    // solver: every point lands in the single cluster 0
-    if (kEff < 2)
-      return points.select(col("vec_id"), col("features"),
-        lit(0).as("cluster"))
-    val model = new KMeans().setK(kEff).setMaxIter(maxIter).setSeed(seed)
-      .setFeaturesCol("fv").setPredictionCol("prediction")
-      .fit(withVec)
-    model.transform(withVec)
-      .select(col("vec_id"), col("features"), col("prediction").as("cluster"))
+    // one select for every path (round-13 ADVICE): a caller passing
+    // misnamed columns fails with the same loud AnalysisException on
+    // EVERY path, including the empty one
+    val out = points.select(col("vec_id"), col("features"))
+    BatchKMeans.withVectors(out)(BatchKMeans.fit(_, _ => Seq(k), maxIter, seed)) match {
+      case Seq(f) =>
+        val centers = f.centers
+        val nearest = udf((v: Seq[Double]) => BatchKMeans.nearest(centers, v.toArray))
+        out.withColumn("cluster", nearest(col("features")))
+      case _ => out.withColumn("cluster", lit(0)).limit(0)
+    }
   }
 
   /** One row per k: (k, wssse, bd_silhouette, bd_dunn, davies_bouldin,
-    * t_ms). The per-k fits run CONCURRENTLY from a driver thread pool
-    * over the one shared cached point set: each fit is an independent
-    * MLlib job whose stages rarely saturate the executor slots, so the
-    * scheduler interleaves them and the sweep's wall-clock drops
-    * toward max(fit) instead of Σ(fit) — the same lever at 1000
-    * executors, where a single small k leaves most of the cluster
-    * idle. Results are UNCHANGED: every k fits the identical cached
-    * partitioning with the same fixed seed (thread scheduling never
-    * enters the math); t_ms is per-k wall-clock and now overlaps. */
+    * t_ms). All k fit in one batch; `t_ms` is the wall-clock ms from
+    * the start of the sweep until that k stopped (converged or reached
+    * `maxIter`). */
   def sweep(points: DataFrame, kMin: Int, kMax: Int,
             maxIter: Int = 20, seed: Long = 42L): DataFrame = {
     require(kMin <= kMax && kMin >= 1,
       s"k-sweep needs a non-empty range of k >= 1, got [$kMin, $kMax]")
     val spark = points.sparkSession
     import spark.implicits._
-    // an already-persisted input keeps its caller-managed lifetime —
-    // the determinism contract runs TWO sweeps concurrently over one
-    // shared cached point set, and an unconditional unpersist here
-    // would yank the cache out from under the sibling sweep mid-fit
-    val preCached = points.storageLevel != StorageLevel.NONE
-    val cached = if (preCached) points else points.persist(StorageLevel.MEMORY_AND_DISK)
-    val n = cached.count() // materialize once before the sweep
-    // degenerate in, defined out (see assign): only k <= n is
-    // fittable, so the swept range CLAMPS to [kMin, min(kMax, n)] —
-    // empty when even kMin is unsatisfiable (n < kMin; covers the
-    // empty corpus)
-    val kMaxEff = math.min(kMax.toLong, n).toInt
-    if (kMaxEff < kMin) {
-      if (!preCached) cached.unpersist()
-      return Seq.empty[(Int, Double, Double, Double, Double, Long)]
-        .toDF("k", "wssse", "bd_silhouette", "bd_dunn", "davies_bouldin", "t_ms")
-    }
-    val ks = (kMin to kMaxEff).toSeq
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(ks.size)
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val futs = ks.map { k =>
-        Future {
-          val t0 = System.currentTimeMillis()
-          val assigned = assign(cached, k, maxIter, seed)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          try {
-            // sil/dunn/db are Option: NULL when the fit degenerates
-            // (constant corpus -> one non-empty cluster)
-            val (w, sil, dunn, db) = Indices.allIndices(assigned)
-            (k, w, sil, dunn, db, System.currentTimeMillis() - t0)
-          } finally assigned.unpersist()
-        }
+    val t0 = System.currentTimeMillis()
+    val rows = BatchKMeans.withVectors(points) { vecs =>
+      // degenerate in, defined out: only k <= n is fittable, so the
+      // swept range CLAMPS to [kMin, min(kMax, n)] — empty when even
+      // kMin is unsatisfiable (n < kMin; covers the empty corpus)
+      val fits = BatchKMeans.fit(vecs, n => kMin to math.min(kMax.toLong, n).toInt, maxIter, seed)
+      // sil/dunn/db are Option: NULL when the fit degenerates
+      // (constant corpus -> one non-empty cluster)
+      val idx = BatchKMeans.withAssignments(vecs, fits)(Indices.allIndicesByK)
+      fits.map { f =>
+        val (w, sil, dunn, db) = idx(f.k)
+        (f.k, w, sil, dunn, db, f.stoppedAt - t0)
       }
-      val rows = futs.map(Await.result(_, Duration.Inf))
-      rows.toDF("k", "wssse", "bd_silhouette", "bd_dunn", "davies_bouldin", "t_ms")
-    } finally {
-      pool.shutdown()
-      if (!preCached) cached.unpersist()
     }
+    rows.toDF("k", "wssse", "bd_silhouette", "bd_dunn", "davies_bouldin", "t_ms")
   }
 
   /** Sweep results memoized per (session, sfDir, range) so the
@@ -208,7 +157,7 @@ object KMeansSweep {
     // Next-round #5): every other sink grew a `*_roundtrip` oracle
     // query while `writeReport` stayed spec-only, leaving the flagship
     // report's write path unguarded against the drop/mangle/type bug
-    // class the roundtrips catch. The MLlib sweep itself is not
+    // class the roundtrips catch. The k-means sweep itself is not
     // oracle-able (seeded iterative), so the report payload is the
     // DETERMINISTIC index table instead: the four validity indices
     // recomputed on the fixed ground-truth assignment — exactly the
@@ -304,7 +253,7 @@ object KMeansSweep {
     // (round-7 verdict, Next-round #5 — the cms_error_contract
     // pattern applied to the last spec-only shadow): `k_sweep` and
     // `optimal_k_select` are no_oracle by design (seeded iterative
-    // MLlib), and their "deterministic given the fixed seed" claim
+    // k-means), and their "deterministic given the fixed seed" claim
     // lived only in InvariantsSpec. This query runs a SECOND,
     // INDEPENDENT sweep in-session (bypassing the memo — sweepCached
     // would hand back the first run) and declares the equality
@@ -319,7 +268,7 @@ object KMeansSweep {
     // planInputPartitions (first execution, driver-side) via
     // [[graft.engine.source.DeferredContractSource]], so BUILDING this
     // DataFrame is pure plan construction and plan-only tools
-    // (Explain/PlanDump/ScanAudit) no longer pay two MLlib sweeps to
+    // (Explain/PlanDump/ScanAudit) no longer pay two k-means sweeps to
     // look at it. The thunk is registered below at object init.
     "k_sweep_determinism_contract" -> ((s, d) =>
       s.read.format(graft.engine.source.DeferredContractSource.FORMAT)
@@ -344,46 +293,34 @@ object KMeansSweep {
       def best(df: DataFrame) =
         optimalK(df).select("criterion", "best_k").collect()
           .map(r => (r.getString(0), Option(r.get(1)))).toSeq
-      // The two sweeps run CONCURRENTLY over one shared cached point
-      // set (persisted here, so `sweep` leaves its lifetime alone):
-      // each is 5 small independent MLlib fits that never saturate the
-      // executor slots, so overlapping them drops the contract's wall
-      // toward max(sweep) instead of Σ(sweep) — on a 1000-executor
-      // cluster the serial form idles the fleet twice over. This also
-      // STRENGTHENS the determinism claim: the two fits of every k now
-      // interleave on the scheduler, so a thread-order-dependent
-      // reduction or an unseeded sample flips the verdict exactly as
-      // before, plus under contention. Seeded results are unchanged —
-      // both sweeps fit the identical cached partitioning.
-      val cached = pts.persist(StorageLevel.MEMORY_AND_DISK)
-      cached.count()
+      // The two sweeps run CONCURRENTLY on two threads, each over its
+      // own vector cache: their init and Lloyd jobs interleave on the
+      // scheduler, so a thread-order-dependent reduction or an unseeded
+      // sample flips the verdict under contention too, not only run to
+      // run — the property the kernel's ordered merges must keep.
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
       try {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        try {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          import scala.concurrent.duration.Duration
-          implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-          val fMemo = Future {
-            val m = sweepCached(cached, d, 2, 6, 10); (table(m), best(m))
-          }
-          val fFresh = Future {
-            val f = sweep(cached, 2, 6, 10); (table(f), best(f))
-          }
-          // await BOTH legs (as Try) before either finally runs: a
-          // failed fMemo rethrown directly would reach the unpersist
-          // below while fFresh is still mid-fit on the pool thread —
-          // yanking the shared cache out from under its running jobs
-          val tMemo = Await.ready(fMemo, Duration.Inf).value.get
-          val tFresh = Await.ready(fFresh, Duration.Inf).value.get
-          val (a, bestMemo) = tMemo.get
-          val (b, bestFresh) = tFresh.get
-          Seq(Seq(2, 6, a.length.toLong, a == b, bestMemo == bestFresh))
-        } finally pool.shutdown()
-      } finally cached.unpersist()
+        import scala.concurrent.{Await, ExecutionContext, Future}
+        import scala.concurrent.duration.Duration
+        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+        val fMemo = Future {
+          val m = sweepCached(pts, d, 2, 6, 10); (table(m), best(m))
+        }
+        val fFresh = Future {
+          val f = sweep(pts, 2, 6, 10); (table(f), best(f))
+        }
+        // await BOTH legs (as Try) before either failure is rethrown:
+        // the contract never returns while a sweep is still running
+        val tMemo = Await.ready(fMemo, Duration.Inf).value.get
+        val tFresh = Await.ready(fFresh, Duration.Inf).value.get
+        val (a, bestMemo) = tMemo.get
+        val (b, bestFresh) = tFresh.get
+        Seq(Seq(2, 6, a.length.toLong, a == b, bestMemo == bestFresh))
+      } finally pool.shutdown()
     }
   }
 
-  /** None of these are DuckDB-expressible (iterative MLlib); the index
+  /** None of these are DuckDB-expressible (iterative k-means); the index
     * recomputation path is oracle-covered by ClusterQueries #5–#10. */
   /** MLlib squared-euclidean silhouette, reproduced from cluster
     * sufficient statistics (see the `silhouette_mllib` query note). */
@@ -457,7 +394,7 @@ object KMeansSweep {
     // the determinism contract's oracle is the constant verdict row
     // (the cms_error_contract pattern): the engine computes the
     // booleans from two independent seeded sweeps, DuckDB states what
-    // they must be — any nondeterminism in the MLlib fit chain lands
+    // they must be — any nondeterminism in the k-means fit chain lands
     // as a hash mismatch on this row.
     // n_rows derives from the (gated) corpus: the sweep clamps its
     // range to [2, min(6, n)] (only k <= n is fittable), so rows =

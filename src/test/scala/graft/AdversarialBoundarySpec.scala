@@ -171,6 +171,17 @@ class AdversarialBoundarySpec extends SparkSpec {
     // wssse IS defined (0.0 — all points on their centroid)
     val w = SparkEntry.queries("wssse")(spark, constDir).collect()
     assert(w.length == 1 && w(0).getDouble(0) == 0.0)
+    // the k-means fit collapses to ONE center for every k (one distinct
+    // candidate), so each sweep row is WSSSE 0 with the three validity
+    // indices undefined
+    val sweep = SparkEntry.queries("k_sweep")(spark, constDir).collect()
+    assert(sweep.nonEmpty, "the constant corpus still sweeps k = 2..6")
+    sweep.foreach { r =>
+      assert(r.getAs[Double]("wssse") == 0.0, s"constant-corpus wssse must be 0: $r")
+      Seq("bd_silhouette", "bd_dunn", "davies_bouldin").foreach { c =>
+        assert(r.isNullAt(r.fieldIndex(c)), s"$c must be NULL on a one-cluster fit: $r")
+      }
+    }
   }
 
   test("MLlib silhouette scores a = b = 0 points as 0.0 AND keeps them in the mean") {

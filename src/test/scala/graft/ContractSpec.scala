@@ -17,7 +17,7 @@ class ContractSpec extends AnyFunSuite {
 
   test("the no-oracle set is exactly the documented ⚙️ list") {
     // each of these is `N` in the SURVEY §2 legend: seeded iterative
-    // MLlib (kmeans_train / k_sweep / optimal_k_select),
+    // k-means (kmeans_train / k_sweep / optimal_k_select),
     // engine-specific sketch hashes (q_agg_approx / heavy_hitters_cms),
     // or a decode DuckDB cannot run (multimodal_phash, PhashSpec-gated).
     // Each no-oracle VALUE surface now has an ORACLED contract sibling:

@@ -5,7 +5,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 /** The deferred-contract mechanism (engine/source/DeferredContract
   * .scala; round-9 verdict #4): the two contract queries whose
   * verdicts must come from real executions — `k_sweep_determinism_
-  * contract` (two seeded MLlib sweeps) and `q_join_skew_aqe` (a join
+  * contract` (two seeded k-means sweeps) and `q_join_skew_aqe` (a join
   * under session-scoped AQE skew confs) — used to run that work
   * eagerly at DataFrame BUILD, so plan-only tools paid sweeps and
   * joins to merely look at them. Now the work runs at the scan's

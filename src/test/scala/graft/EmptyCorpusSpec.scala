@@ -9,8 +9,8 @@ import graft.engine.text.TextOps
   * frames, never as a throw. At 100 TB this is not hypothetical — a
   * lang/source/date filter routinely leaves zero rows, and a pipeline
   * stage that crashes on its first empty slice is a production pager.
-  * (MLlib-backed sweeps are exempt by contract: KMeans on zero rows is
-  * a caller error; these chains are pure relational plans.)
+  * (the k-means sweeps are covered by AdversarialBoundarySpec's
+  * empty-corpus list; these chains are pure relational plans.)
   */
 class EmptyCorpusSpec extends SparkSpec {
 

@@ -136,7 +136,7 @@ class InvariantsSpec extends SparkSpec {
 
   test("seeded k-sweep and optimal-k selection are run-to-run deterministic") {
     // `k_sweep`/`optimal_k_select` are no_oracle by design (seeded
-    // iterative MLlib) — this contract converts their "deterministic
+    // iterative k-means) — this contract converts their "deterministic
     // given the fixed seed" claim from comment to checked fact (the
     // cms_error_contract pattern): two INDEPENDENT sweep runs (the
     // memo is bypassed — sweepCached would return the first run) must
@@ -157,6 +157,63 @@ class InvariantsSpec extends SparkSpec {
       KMeansSweep.optimalK(rows.toSeq.toDF("k", "wssse", "bd_silhouette", "bd_dunn", "davies_bouldin"))
         .select("criterion", "best_k").collect().map(r => (r.getString(0), r.getInt(1))).toSeq
     assert(pick(a) == pick(b))
+    // batching changes nothing per k: every row of the batched sweep
+    // equals, bit for bit, the one-k fit of that k scored alone — on
+    // the one-partition fixture and on an 8-partition copy, whose
+    // per-partition partials merge on the driver in partition order
+    def bits(x: Option[Double]) = x.map(java.lang.Double.doubleToLongBits)
+    val split = pts.repartition(8, col("vec_id")).sortWithinPartitions("vec_id")
+    assert(split.rdd.getNumPartitions == 8)
+    Seq(pts, split).foreach { input =>
+      val swept = KMeansSweep.sweep(input, 2, 10).orderBy("k").collect()
+      assert(swept.map(_.getInt(0)).toSeq == (2 to 10))
+      swept.foreach { r =>
+        val k = r.getInt(0)
+        val (w, sil, dunn, db) = Indices.allIndices(KMeansSweep.assign(input, k))
+        val row = Seq(Some(r.getDouble(1))) ++ (2 to 4).map(i => Option(r.get(i)).map(_.asInstanceOf[Double]))
+        assert(row.map(bits) == Seq(Some(w), sil, dunn, db).map(bits),
+          s"k=$k: batched sweep row ${row.mkString(", ")} != one-k fit ${(w, sil, dunn, db)}")
+      }
+    }
+  }
+
+  test("a k = 2..10 sweep launches at most maxIter + 15 Spark jobs (one per step for all k)") {
+    // one job per init step and per Lloyd iteration for EVERY k, plus
+    // a fixed handful — a return to per-k fits (about 30 jobs per k)
+    // breaks this bound many times over
+    import graft.engine.cluster.KMeansSweep
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val pts = graft.engine.Tables.points(spark, sf0001)
+    pts.count() // the table's first-load checks run outside the count
+    val group = "kmeans-job-pin"; val marker = "kmeans-job-pin-drained"
+    @volatile var jobs = 0
+    @volatile var drained = false
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs += 1
+          case Some(`marker`) => drained = true
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "k-sweep job-count pin")
+      val rows = KMeansSweep.sweep(pts, 2, 10, maxIter = 20).collect()
+      assert(rows.length == 9)
+      // the bus delivers in order: once the marker job's start arrives,
+      // every sweep job's start has been counted
+      sc.setJobGroup(marker, "k-sweep job-count pin: bus drain")
+      sc.parallelize(Seq(1), 1).count()
+      var waited = 0
+      while (!drained && waited < 10000) { Thread.sleep(50); waited += 50 }
+      assert(drained, "listener bus did not deliver the marker job")
+      assert(jobs > 0 && jobs <= 20 + 15, s"the sweep launched $jobs jobs")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("assign fails loudly on misnamed columns on EVERY path, including zero rows") {
@@ -207,9 +264,9 @@ class InvariantsSpec extends SparkSpec {
   }
 
   test("sweep leaves a caller-persisted point set cached; releases one it persisted itself") {
-    // the ownership contract the determinism contract's CONCURRENT
-    // sweeps rely on: an unconditional unpersist inside sweep() would
-    // yank the shared cache out from under the sibling sweep mid-fit
+    // the ownership contract: a cache the caller owns is never
+    // touched — an unpersist inside sweep() would yank it out from
+    // under every other reader of the same frame
     import graft.engine.cluster.KMeansSweep
     import org.apache.spark.storage.StorageLevel
     val pts = graft.engine.Tables.points(spark, sf0001)
@@ -220,9 +277,13 @@ class InvariantsSpec extends SparkSpec {
         "sweep must not unpersist a caller-managed cache")
     } finally cached.unpersist()
     // self-persisted path: the input arrives uncached and must leave
-    // uncached (sweep persists, fits, and releases its own cache)
+    // uncached, and the sweep's own vector cache is released by the
+    // time it returns
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     KMeansSweep.sweep(pts, 2, 3, 5).collect()
     assert(pts.storageLevel == StorageLevel.NONE,
-      "sweep must release the cache it created itself")
+      "sweep must not persist the caller's point set")
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"sweep must release the cache it created itself: RDDs $leaked")
   }
 }

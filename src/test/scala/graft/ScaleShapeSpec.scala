@@ -107,7 +107,11 @@ class ScaleShapeSpec extends SparkSpec {
       .queryExecution.optimizedPlan.toString
     assert(declared.contains("windowspecdefinition(doc_id"),
       s"declared ngram_jaccard_dedup must carry the doc_id-partitioned prefix window:\n$declared")
-    assert(!declared.replace("windowspecdefinition(doc_id", "").contains("windowspecdefinition"),
+    // anchored on the attribute boundary: a window on doc_idx must not
+    // pass for one on doc_id
+    val onDocId = """windowspecdefinition\(doc_id#\d+""".r.findAllIn(declared).size
+    val windows = """windowspecdefinition\(""".r.findAllIn(declared).size
+    assert(onDocId > 0 && onDocId == windows,
       s"declared ngram_jaccard_dedup must have no window on any other key:\n$declared")
   }
 
