@@ -17,17 +17,30 @@ object ClusterQueries {
   /** The ground-truth point frame memoized per (session, sfDir) as an
     * EAGER checkpoint — the reference's own `.cache()` lever (SURVEY
     * §1.1: "the single most important performance behavior to
-    * preserve"). The former plan-only memo still re-scanned parquet
-    * once per aggregate term (the round-8 plan audit counted SIX
-    * scans inside calinski_harabasz alone: n, k, global mean,
-    * centroids, sizes, wssse); every index query now reads the
-    * materialized rows. Sharing ONE DataFrame object is also what
-    * lets Centroids.centroids' identity-keyed memo serve its
-    * checkpointed centroid table across queries. */
+    * preserve"): the profile's two passes and the nearest-centroid
+    * argmin read the materialized rows, never parquet again. */
   private val ptsCache = new graft.engine.SessionCache[DataFrame]
   private[cluster] def pts(s: SparkSession, d: String): DataFrame =
     ptsCache.get(s, d)(Tables.points(s, d).localCheckpoint(true))
 
+  /** The ground-truth [[Indices.Profile]], memoized like [[pts]] (so a
+    * fresh memo epoch rebuilds both): every index query below is a
+    * small local frame over it, and the whole validity report costs
+    * the profile's two passes over the points. */
+  private val profileCache = new graft.engine.SessionCache[Indices.Profile]
+  private[cluster] def profile(s: SparkSession, d: String): Indices.Profile =
+    profileCache.get(s, d)(Indices.profile(pts(s, d)))
+
+  /** One-row index frame (NULL when undefined or over no points),
+    * ROUND(·, 6) like every float output. */
+  private def indexRow(s: SparkSession, name: String, v: Option[Double]): DataFrame = {
+    import s.implicits._
+    Seq(v).toDF(name).select(round(col(name), 6).as(name))
+  }
+
+  // The per-cluster frames are local relations built in key order:
+  // the rows already carry the declared total order, and an ORDER BY
+  // would plan a range shuffle of a few rows
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "vector_scan" -> ((s, d) =>
       Tables.embeddings(s, d)
@@ -36,56 +49,53 @@ object ClusterQueries {
           round(col("v").cast("double"), 6).as("val"), col("label"))
         .orderBy("vec_id", "i")),
 
-    "centroids_from_assignment" -> ((s, d) =>
-      Centroids.centroidDims(pts(s, d))
-        .select(col("cluster"), (col("pos") + 1).cast("long").as("i"), round(col("c"), 6).as("c"))
-        .orderBy("cluster", "i")),
-
-    "cluster_sizes" -> ((s, d) =>
-      Centroids.clusterSizes(pts(s, d)).orderBy("cluster")),
-
-    "assign_nearest_centroid" -> ((s, d) => {
-      val p = pts(s, d)
-      Centroids.assignNearest(p, Centroids.centroids(p))
-        .select(col("vec_id"), col("assigned"), round(sqrt(col("d2")), 6).as("dist"))
-        .orderBy("vec_id")
+    "centroids_from_assignment" -> ((s, d) => {
+      import s.implicits._
+      profile(s, d).clusters
+        .flatMap(c => c.centroid.indices.map(t => (c.cluster, t + 1L, c.centroid(t))))
+        .toDF("cluster", "i", "c").select(col("cluster"), col("i"), round(col("c"), 6).as("c"))
     }),
 
-    "wssse" -> ((s, d) =>
-      Indices.wssse(pts(s, d)).select(round(col("wssse"), 6).as("wssse"))),
+    "cluster_sizes" -> ((s, d) => {
+      import s.implicits._
+      profile(s, d).clusters.map(c => (c.cluster, c.n)).toDF("cluster", "n")
+    }),
 
-    "intra_cluster_stats" -> ((s, d) =>
-      Indices.intraClusterStats(pts(s, d))
+    "assign_nearest_centroid" -> ((s, d) =>
+      Centroids.assignNearest(pts(s, d), Centroids.table(s, profile(s, d)))
+        .select(col("vec_id"), col("assigned"), round(sqrt(col("d2")), 6).as("dist"))
+        .orderBy("vec_id")),
+
+    "wssse" -> ((s, d) => indexRow(s, "wssse", profile(s, d).wssse)),
+
+    "intra_cluster_stats" -> ((s, d) => {
+      import s.implicits._
+      profile(s, d).clusters.map(c => (c.cluster, c.n, c.meanA, c.maxA))
+        .toDF("cluster", "n", "mean_dist", "max_dist")
         .select(col("cluster"), col("n"),
           round(col("mean_dist"), 6).as("mean_dist"), round(col("max_dist"), 6).as("max_dist"))
-        .orderBy("cluster")),
+    }),
 
-    "inter_centroid_dist" -> ((s, d) =>
-      Indices.interCentroidDist(pts(s, d))
+    "inter_centroid_dist" -> ((s, d) => {
+      import s.implicits._
+      profile(s, d).pairs.toDF("ci", "cj", "dist")
         .select(col("ci"), col("cj"), round(col("dist"), 6).as("dist"))
-        .orderBy("ci", "cj")),
+    }),
 
-    "bd_silhouette" -> ((s, d) =>
-      Indices.bdSilhouette(pts(s, d))
-        .select(round(col("bd_silhouette"), 6).as("bd_silhouette"))),
+    "bd_silhouette" -> ((s, d) => indexRow(s, "bd_silhouette", profile(s, d).bdSilhouette)),
 
-    "bd_dunn" -> ((s, d) =>
-      Indices.bdDunn(pts(s, d)).select(round(col("bd_dunn"), 6).as("bd_dunn"))),
+    "bd_dunn" -> ((s, d) => indexRow(s, "bd_dunn", profile(s, d).bdDunn)),
 
-    "davies_bouldin" -> ((s, d) =>
-      Indices.daviesBouldin(pts(s, d))
-        .select(round(col("davies_bouldin"), 6).as("davies_bouldin"))),
+    "davies_bouldin" -> ((s, d) => indexRow(s, "davies_bouldin", profile(s, d).daviesBouldin)),
 
     "external_validity_chi2" -> ((s, d) =>
       Indices.chiSquared(Tables.documents(s, d), "lang", "source")
         .select(round(col("chi2"), 6).as("chi2"))),
 
     "calinski_harabasz" -> ((s, d) =>
-      Indices.calinskiHarabasz(pts(s, d))
-        .select(round(col("calinski_harabasz"), 6).as("calinski_harabasz"))),
+      indexRow(s, "calinski_harabasz", profile(s, d).calinskiHarabasz)),
 
-    "xie_beni" -> ((s, d) =>
-      Indices.xieBeni(pts(s, d)).select(round(col("xie_beni"), 6).as("xie_beni"))),
+    "xie_beni" -> ((s, d) => indexRow(s, "xie_beni", profile(s, d).xieBeni)),
   )
 
   /** Shared oracle CTEs: exploded points + centroids from labels.
@@ -147,7 +157,7 @@ object ClusterQueries {
          |$CDIST
          |SELECT ci, cj, ROUND(dist, 6) AS dist FROM cdist ORDER BY ci, cj""".stripMargin,
 
-    // degenerate-corpus guards (mirroring Indices): a zero
+    // degenerate-corpus guards (mirroring Indices.Profile): a zero
     // denominator makes the index term UNDEFINED — it leaves the
     // aggregate (CASE -> NULL skips; dist > 0 filters), and an
     // all-undefined index is a NULL row, never a crash

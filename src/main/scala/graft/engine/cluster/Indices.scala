@@ -3,192 +3,130 @@ package graft.engine.cluster
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.engine.ArrayMath
 
 /** The reference's core surface: centroid-based ("Big Data") clustering
-  * validity indices — WSSSE, BD-Silhouette, BD-Dunn, Davies-Bouldin
-  * (SURVEY.md §2.1 #5–#10; formulas normative per Luna-Romera et al.,
-  * Prog. Artif. Intell. 2018, DOI 10.1007/s13748-017-0135-3).
+  * validity indices — WSSSE, BD-Silhouette, BD-Dunn, Davies-Bouldin,
+  * plus Calinski-Harabasz and Xie-Beni (SURVEY.md §2.1 #5–#10; formulas
+  * normative per Luna-Romera et al., Prog. Artif. Intell. 2018, DOI
+  * 10.1007/s13748-017-0135-3).
   *
-  * Every index is O(n·k) with one or two shuffle-bounded aggregations
-  * over the point set — the paper's contribution vs O(n²) classic
-  * Silhouette/Dunn — and a broadcast of the k·d centroid table. All
-  * input is (id, features: array<double>, cluster: int); assignments
-  * are an *input*, so the same operators serve ground-truth labels
-  * (oracle-checked) and K-Means output (sweep).
+  * Every index is computed from ONE per-cluster [[Profile]] of an
+  * assignment, built in two ordered passes over the points whatever
+  * the number of indices asked of it: O(n·k) work and no shuffle of
+  * the point set — the paper's contribution vs O(n²) classic
+  * Silhouette/Dunn. The k²-sized centroid-pair math runs on the
+  * driver, the reference's topology (SURVEY.md §4.1). Assignments are
+  * an *input* (cluster, features), so the same kernel scores
+  * ground-truth labels (oracle-checked) and K-Means output (sweep).
   */
 object Indices {
 
-  /** Each point with the distance to its OWN centroid:
-    * (point cols…, d2, d). One broadcast hash join, no extra shuffle
-    * of the point set. */
-  def ownCentroidDistances(points: DataFrame): DataFrame = {
-    graft.engine.expr.GraftFunctions.register(points.sparkSession)
-    val c = broadcast(Centroids.centroids(points)
-      .withColumnRenamed("cluster", "c_cluster"))
-    points.join(c, points("cluster") === c("c_cluster"))
-      .withColumn("d2", ArrayMath.sqDistNative(col("features"), col("centroid")))
-      .withColumn("d", sqrt(col("d2")))
-      .drop("c_cluster", "centroid")
+  /** One cluster of an assignment: its id, size, Σx and centroid
+    * (Σx ÷ n), and over its points, with a = distance to the own
+    * centroid and b = distance to the nearest other centroid: Σa²,
+    * max a, Σa, the Σ of the DEFINED silhouette terms (b−a)/max(a, b)
+    * and their count. A term is undefined when there is no other
+    * centroid or a = b = 0 (a point on coincident centroids). */
+  final case class ClusterStats(cluster: Int, n: Long, sum: Array[Double], centroid: Array[Double],
+                                sumA2: Double, maxA: Double, sumA: Double,
+                                silSum: Double, silCount: Long) {
+    /** Sᵢ: mean distance to the centroid. */
+    def meanA: Double = sumA / n
   }
 
-  /** WSSSE = Σᵢ ‖xᵢ − c(xᵢ)‖² — reference `model.computeCost` parity
-    * (#5). Single-row DataFrame (wssse). */
-  def wssse(points: DataFrame): DataFrame =
-    ownCentroidDistances(points).agg(sum("d2").as("wssse"))
+  /** The per-cluster profile of one assignment, clusters in id order;
+    * empty for an empty point set. Each index is None where it is
+    * UNDEFINED — no points, a single cluster, or a zero denominator
+    * (coincident centroids, zero scatter) — the NULL of the SQL forms.
+    * Cross-cluster sums run in cluster-id order, so values are
+    * bit-identical run to run. */
+  final case class Profile(clusters: IndexedSeq[ClusterStats]) {
+    def n: Long = clusters.map(_.n).sum
+    def k: Int = clusters.length
 
-  /** Per-cluster Sᵢ (mean dist to own centroid), diameter proxy
-    * (max dist), and size (#6): (cluster, n, mean_dist, max_dist). */
-  def intraClusterStats(points: DataFrame): DataFrame =
-    ownCentroidDistances(points)
-      .groupBy("cluster")
-      .agg(count(lit(1)).as("n"), avg("d").as("mean_dist"), max("d").as("max_dist"))
+    /** Every centroid pair i < j with d(cᵢ, cⱼ), in (ci, cj) order. */
+    lazy val pairs: IndexedSeq[(Int, Int, Double)] = for {
+      i <- clusters.indices; j <- i + 1 until k
+    } yield (clusters(i).cluster, clusters(j).cluster,
+      math.sqrt(BatchKMeans.sqDist(clusters(i).centroid, clusters(j).centroid)))
 
-  /** All pairwise centroid distances d(cᵢ,cⱼ), i<j (#7):
-    * (ci, cj, dist). k² rows — tiny for any real k. */
-  def interCentroidDist(points: DataFrame): DataFrame = {
-    val c = Centroids.centroids(points)
-    val a = c.select(col("cluster").as("ci"), col("centroid").as("ca"))
-    val b = c.select(col("cluster").as("cj"), col("centroid").as("cb"))
-    a.join(broadcast(b), col("ci") < col("cj"))
-      .select(col("ci"), col("cj"),
-        ArrayMath.dist(col("ca"), col("cb")).as("dist"))
+    /** WSSSE = Σᵢ ‖xᵢ − c(xᵢ)‖² — reference `model.computeCost` parity. */
+    def wssse: Option[Double] =
+      if (clusters.isEmpty) None else Some(clusters.map(_.sumA2).sum)
+
+    /** BD-Silhouette: the mean of the defined per-point terms. */
+    def bdSilhouette: Option[Double] = {
+      val cnt = clusters.map(_.silCount).sum
+      if (cnt == 0) None else Some(clusters.map(_.silSum).sum / cnt)
+    }
+
+    /** BD-Dunn: min inter-centroid distance ÷ max point-to-own-centroid
+      * distance; undefined when every point sits on its centroid. */
+    def bdDunn: Option[Double] = {
+      val maxIntra = clusters.map(_.maxA).maxOption.getOrElse(0.0)
+      if (pairs.isEmpty || maxIntra <= 0) None else Some(pairs.map(_._3).min / maxIntra)
+    }
+
+    /** Davies-Bouldin: mean over clusters of maxⱼ≠ᵢ (Sᵢ+Sⱼ)/d(cᵢ,cⱼ).
+      * A pair of coincident centroids (d = 0) leaves the max, and a
+      * cluster with no defined pair leaves the mean. */
+    def daviesBouldin: Option[Double] = {
+      val s = clusters.map(c => c.cluster -> c.meanA).toMap
+      val terms = clusters.flatMap { c =>
+        pairs.collect {
+          case (a, b, d) if d > 0 && a == c.cluster => (s(a) + s(b)) / d
+          case (a, b, d) if d > 0 && b == c.cluster => (s(b) + s(a)) / d
+        }.maxOption
+      }
+      if (terms.isEmpty) None else Some(terms.sum / terms.length)
+    }
+
+    /** Calinski-Harabasz: [B/(k−1)] / [W/(n−k)], B = Σᵢ nᵢ‖cᵢ − c̄‖²
+      * against the global mean c̄ = Σx ÷ n, W = WSSSE; needs k > 1,
+      * n > k and W > 0. */
+    def calinskiHarabasz: Option[Double] = wssse.filter(w => k > 1 && n > k && w > 0).map { w =>
+      val total = n.toDouble
+      val g = Array.tabulate(clusters.head.sum.length)(t => clusters.map(_.sum(t)).sum / total)
+      val b = clusters.map(c => c.n * BatchKMeans.sqDist(c.centroid, g)).sum
+      (b / (k - 1)) / (w / (total - k))
+    }
+
+    /** Xie-Beni: WSSSE / (n · minᵢ<ⱼ d(cᵢ,cⱼ)²), the squared distance
+      * taken as (√d²)² like the SQL form; undefined for a single
+      * cluster or coincident centroids. */
+    def xieBeni: Option[Double] =
+      pairs.map(p => p._3 * p._3).minOption.filter(n * _ > 0).map(m => wssse.get / (n * m))
   }
 
-  /** BD-Silhouette (#8, the paper's core contribution): per point
-    * a = d(x, own centroid), b = min over OTHER centroids d(x, cⱼ),
-    * s = (b−a)/max(a,b); index = mean(s). Single row (bd_silhouette).
-    *
-    * One broadcast of all k centroids + one pass over the points: the
-    * per-pair rows never shuffle (min/avg have map-side partials). */
-  def bdSilhouette(points: DataFrame): DataFrame = {
-    val perPair = Centroids.pointCentroidDistances(points, Centroids.centroids(points))
-      .withColumn("dd", sqrt(col("d2")))
-    val perPoint = perPair.groupBy("vec_id").agg(
-      min(when(col("cluster") === col("c_cluster"), col("dd"))).as("a"),
-      min(when(col("cluster") =!= col("c_cluster"), col("dd"))).as("b"))
-    perPoint
-      // zero-denominator guard (constant corpus: a point exactly on
-      // coincident centroids has a = b = 0): its s is UNDEFINED and
-      // leaves the mean — AVG skips NULL — rather than crashing (ANSI
-      // throws on any zero divisor). All-undefined => NULL index.
-      // The oracle carries the same CASE.
-      .select(when(greatest(col("a"), col("b")) > 0,
-        (col("b") - col("a")) / greatest(col("a"), col("b"))).as("s"))
-      .agg(avg("s").as("bd_silhouette"))
-  }
-
-  /** BD-Dunn (#9): min inter-centroid distance ÷ max point-to-own-
-    * centroid distance. Single row (bd_dunn). */
-  def bdDunn(points: DataFrame): DataFrame = {
-    val minInter = interCentroidDist(points).agg(min("dist").as("min_inter"))
-    val maxIntra = ownCentroidDistances(points).agg(max("d").as("max_intra"))
-    minInter.crossJoin(maxIntra)
-      // max_intra = 0 (every point ON its centroid): Dunn's
-      // separation/compactness ratio is undefined — NULL, not a crash
-      .select(when(col("max_intra") > 0,
-        col("min_inter") / col("max_intra")).as("bd_dunn"))
-  }
-
-  /** Davies-Bouldin (#10): (1/k) Σᵢ maxⱼ≠ᵢ (Sᵢ+Sⱼ)/d(cᵢ,cⱼ),
-    * Sᵢ = mean dist to centroid. Single row (davies_bouldin). */
-  def daviesBouldin(points: DataFrame): DataFrame = {
-    val s = intraClusterStats(points).select(col("cluster"), col("mean_dist"))
-    // both orientations of the i<j pair table → full i≠j
-    val pairs = interCentroidDist(points)
-    val dij = pairs.select(col("ci"), col("cj"), col("dist"))
-      .union(pairs.select(col("cj").as("ci"), col("ci").as("cj"), col("dist")))
-    dij
-      // coincident centroids (dist = 0) make the pair's R term
-      // undefined — it leaves the max (and a cluster with NO defined
-      // pair leaves the mean), mirroring the oracle's dist > 0 gate
-      .filter(col("dist") > 0)
-      // broadcast BOTH scatter joins: s is one row per CLUSTER (k ≪ n
-      // by declaration — the same bound that broadcasts the centroid
-      // table everywhere else), but Catalyst cannot size an
-      // aggregate's output, so the k-row joins planned as
-      // SortMergeJoins — 3 exchanges + 4 sorts of k-row tables
-      // (guide §3.1: hint when you know a side is small; VERDICT r15
-      // next-round #4). Plan: 9 Exchange / 2 SMJ → 6 Exchange / 0 SMJ.
-      .join(broadcast(s.withColumnRenamed("cluster", "ci").withColumnRenamed("mean_dist", "si")), "ci")
-      .join(broadcast(s.withColumnRenamed("cluster", "cj").withColumnRenamed("mean_dist", "sj")), "cj")
-      .select(col("ci"), ((col("si") + col("sj")) / col("dist")).as("r"))
-      .groupBy("ci").agg(max("r").as("rmax"))
-      .agg(avg("rmax").as("davies_bouldin"))
-  }
-
-  /** Calinski-Harabasz (variance-ratio criterion):
-    * CH = [B/(k−1)] / [W/(n−k)], B = Σᵢ nᵢ‖cᵢ − c̄‖² (between-cluster
-    * dispersion vs the GLOBAL centroid), W = WSSSE. Same O(n·k)
-    * shuffle-bounded shape as the other indices. */
-  def calinskiHarabasz(points: DataFrame): DataFrame = {
-    val n = points.agg(count(lit(1)).as("n"))
-    val k = points.select(countDistinct(col("cluster")).as("k"))
-    val globalC = points
-      .select(posexplode(col("features")).as(Seq("pos", "v")))
-      .groupBy("pos").agg(avg("v").as("g"))
-    val b = Centroids.centroidDims(points)
-      .join(Centroids.clusterSizes(points), "cluster")
-      .join(broadcast(globalC), "pos")
-      .select((col("n") * (col("c") - col("g")) * (col("c") - col("g"))).as("term"))
-      .agg(sum("term").as("b"))
-    val w = wssse(points)
-    b.crossJoin(w).crossJoin(n).crossJoin(k)
-      // undefined-index guard: CH needs k > 1 (between-variance has
-      // k-1 df), n > k (within has n-k df) and W > 0 (ANSI division
-      // throws on every zero denominator; a degenerate corpus must
-      // yield NULL, not a crash) — the oracle carries the same CASE
-      .select(when(col("k") > 1 && col("n") > col("k") && col("wssse") > 0,
-          (col("b") / (col("k") - 1)) / (col("wssse") / (col("n") - col("k"))))
-        .as("calinski_harabasz"))
-  }
-
-  /** Xie-Beni: XB = WSSSE / (n · minᵢ<ⱼ ‖cᵢ − cⱼ‖²) — compactness over
-    * worst-case centroid separation. */
-  def xieBeni(points: DataFrame): DataFrame = {
-    val minSep = interCentroidDist(points)
-      .agg(min(col("dist") * col("dist")).as("minsep2"))
-    val n = points.agg(count(lit(1)).as("n"))
-    wssse(points).crossJoin(minSep).crossJoin(n)
-      // coincident centroids (minsep2 = 0) or a single cluster
-      // (minsep2 NULL): XB undefined — NULL, not a crash
-      .select(when(col("n") * col("minsep2") > 0,
-        col("wssse") / (col("n") * col("minsep2"))).as("xie_beni"))
-  }
-
-  /** All four indices of ONE assignment (point cols…, features,
-    * cluster): the one-k case of [[allIndicesByK]]. */
-  def allIndices(points: DataFrame): (Double, Option[Double], Option[Double], Option[Double]) =
-    allIndicesByK(points.select(col("cluster"), col("features")).rdd
+  /** The profile of ONE assignment (point cols…, features, cluster):
+    * the one-k case of [[profilesByK]]. */
+  def profile(points: DataFrame): Profile =
+    profilesByK(points.select(col("cluster"), col("features")).rdd
       .map(r => (0, r.getInt(0), r.getSeq[Double](1).toArray)))
-      .getOrElse(0, (0.0, None, None, None))
+      .getOrElse(0, Profile(Vector.empty))
 
-  /** All four indices for EVERY k of k-keyed assignments (k, cluster,
+  /** WSSSE and the three BD validity indices of ONE assignment; WSSSE
+    * is 0.0 on an empty point set. */
+  def allIndices(points: DataFrame): (Double, Option[Double], Option[Double], Option[Double]) = {
+    val p = profile(points)
+    (p.wssse.getOrElse(0.0), p.bdSilhouette, p.bdDunn, p.daviesBouldin)
+  }
+
+  /** The profile of EVERY k of k-keyed assignments (k, cluster,
     * features) in two passes over them, whatever the number of k: one
-    * for the per-(k, cluster) centroids, one for each point's distances
-    * to the centroids of its k. The k²-sized centroid-pair math runs on
-    * the driver — exactly the reference's topology (SURVEY.md §4.1). A
-    * k-sweep therefore pays two jobs for its whole index table instead
-    * of one index DAG per k.
-    *
-    * WSSSE is total (always defined on non-empty input); the three
-    * validity indices are None when UNDEFINED — a single non-empty
-    * cluster (a k-means fit on a constant corpus collapses to one),
-    * or zero denominators (coincident centroids / zero scatter). The
-    * per-index conventions match the DataFrame forms above exactly:
-    * silhouette means only the DEFINED per-point terms; DB maxes only
-    * the DEFINED pair terms. Sums accumulate in point order inside a
-    * partition and in partition order across partitions, so each k's
-    * values are bit-identical run to run and whatever other k share
-    * the input. */
-  def allIndicesByK(rows: RDD[(Int, Int, Array[Double])])
-      : Map[Int, (Double, Option[Double], Option[Double], Option[Double])] = {
+    * for the per-(k, cluster) [Σx, n], one for each point's distances
+    * to the centroids of its k. A k-sweep therefore pays two jobs for
+    * its whole index table instead of one index DAG per k. Sums
+    * accumulate in point order inside a partition and in partition
+    * order across partitions, so each k's profile is bit-identical run
+    * to run and whatever other k share the input. */
+  def profilesByK(rows: RDD[(Int, Int, Array[Double])]): Map[Int, Profile] = {
     type Acc = scala.collection.mutable.HashMap[(Int, Int), Array[Double]]
     def merge(a: Acc, b: Acc, comb: (Array[Double], Array[Double]) => Array[Double]): Acc = {
       b.foreach { case (key, v) => a(key) = a.get(key).fold(v)(comb(_, v)) }
       a
     }
-    // pass 1: per (k, cluster) [Σx…, n] -> centroid = Σx / n
+    // pass 1: per (k, cluster) [Σx…, n]
     val sums = BatchKMeans.aggregateOrdered(rows, () => new Acc)(
       { case (m, (k, c, v)) =>
           val s = m.getOrElseUpdate((k, c), new Array[Double](v.length + 1))
@@ -205,7 +143,7 @@ object Indices {
       }
     // pass 2: per point a = dist to own centroid, b = min dist to the
     // other centroids of its k; per (k, cluster)
-    // [Σa², max a, Σa, Σ silhouette term, #defined terms, n]
+    // [Σa², max a, Σa, Σ silhouette term, #defined terms]
     val bc = rows.sparkContext.broadcast(cents)
     val stats = try BatchKMeans.aggregateOrdered(rows, () => new Acc)(
       { case (m, (k, c, v)) =>
@@ -215,43 +153,21 @@ object Indices {
             if (cc == c) a2 = d2 else if (d2 < b2) b2 = d2
           }
           val a = math.sqrt(a2); val b = math.sqrt(b2)
-          // zero-denominator guard (a point exactly on coincident
-          // centroids has a = b = 0) and no other centroid (b = ∞):
-          // the term is UNDEFINED and leaves the mean
-          val defined = !b2.isInfinite && math.max(a, b) > 0
-          val s = m.getOrElseUpdate((k, c), new Array[Double](6))
+          val s = m.getOrElseUpdate((k, c), new Array[Double](5))
           s(0) += a2; s(1) = math.max(s(1), a); s(2) += a
-          if (defined) { s(3) += (b - a) / math.max(a, b); s(4) += 1.0 }
-          s(5) += 1.0
+          if (!b2.isInfinite && math.max(a, b) > 0) { s(3) += (b - a) / math.max(a, b); s(4) += 1.0 }
           m },
       merge(_, _, (x, y) => {
         x(0) += y(0); x(1) = math.max(x(1), y(1))
-        for (i <- 2 until 6) x(i) += y(i)
+        for (i <- 2 until 5) x(i) += y(i)
         x
       }))
     finally bc.destroy()
-    stats.toSeq.groupBy(_._1._1).map { case (k, byCluster) =>
-      val agg = byCluster.map { case ((_, c), s) => (c, s) }.sortBy(_._1)
-      val wssse = agg.map(_._2(0)).sum
-      val maxIntra = agg.map(_._2(1)).max
-      val silCnt = agg.map(_._2(4)).sum
-      val sil = if (silCnt == 0) None else Some(agg.map(_._2(3)).sum / silCnt)
-      val sByCluster = agg.map { case (c, s) => c -> s(2) / s(5) }.toMap
-      val centArr = cents(k)
-      val pairs = for {
-        (ci, fi) <- centArr; (cj, fj) <- centArr if ci < cj
-      } yield (ci, cj, math.sqrt(BatchKMeans.sqDist(fi, fj)))
-      val dunn = if (pairs.isEmpty || maxIntra <= 0) None
-        else Some(pairs.map(_._3).min / maxIntra)
-      val dbTerms = centArr.flatMap { case (ci, _) =>
-        val rs = pairs.collect {
-          case (a, b, dd) if dd > 0 && a == ci => (sByCluster(ci) + sByCluster(b)) / dd
-          case (a, b, dd) if dd > 0 && b == ci => (sByCluster(ci) + sByCluster(a)) / dd
-        }
-        if (rs.isEmpty) None else Some(rs.max)
-      }
-      val db = if (dbTerms.isEmpty) None else Some(dbTerms.sum / dbTerms.length)
-      k -> (wssse, sil, dunn, db)
+    cents.map { case (k, cs) =>
+      k -> Profile(cs.toIndexedSeq.map { case (c, ctr) =>
+        val sx = sums((k, c)); val st = stats((k, c)); val d = ctr.length
+        ClusterStats(c, sx(d).toLong, sx.take(d), ctr, st(0), st(1), st(2), st(3), st(4).toLong)
+      })
     }
   }
 

@@ -20,8 +20,9 @@ import graft.engine.Tables
   * fixed seed makes every fit deterministic (never oracle-checked —
   * K-Means is iteration-order dependent; SURVEY §7.5).
   *
-  * The index math is [[Indices.allIndicesByK]]: one call over the
-  * k-keyed assignments scores every k in two passes.
+  * The index math is [[Indices.profilesByK]]: one call over the
+  * k-keyed assignments profiles every k in two passes, and each k's
+  * four indices are read off its profile.
   */
 object KMeansSweep {
 
@@ -63,10 +64,10 @@ object KMeansSweep {
       val fits = BatchKMeans.fit(vecs, n => kMin to math.min(kMax.toLong, n).toInt, maxIter, seed)
       // sil/dunn/db are Option: NULL when the fit degenerates
       // (constant corpus -> one non-empty cluster)
-      val idx = BatchKMeans.withAssignments(vecs, fits)(Indices.allIndicesByK)
+      val profiles = BatchKMeans.withAssignments(vecs, fits)(Indices.profilesByK)
       fits.map { f =>
-        val (w, sil, dunn, db) = idx(f.k)
-        (f.k, w, sil, dunn, db, f.stoppedAt - t0)
+        val p = profiles(f.k)
+        (f.k, p.wssse.get, p.bdSilhouette, p.bdDunn, p.daviesBouldin, f.stoppedAt - t0)
       }
     }
     rows.toDF("k", "wssse", "bd_silhouette", "bd_dunn", "davies_bouldin", "t_ms")
@@ -168,21 +169,14 @@ object KMeansSweep {
     // hash-mismatches.
     "index_report_roundtrip" -> ((s, d) => {
       val path = reportCache.get(s, s"$d|report") {
-        // the SHARED per-(session,sf) points object — its identity is
-        // what routes the memoized centroid table into the four indices
-        val p = ClusterQueries.pts(s, d)
-        def one(name: String, df: DataFrame, c: String): DataFrame =
-          df.select(lit(name).as("index_name"), round(col(c), 6).as("value"))
-        // eagerly checkpoint the 4-row report BEFORE the sink:
-        // writeReport runs TWO actions (parquet + the CSV parity leg)
-        // and each would otherwise re-execute the whole four-index
-        // union (~2.5 s/run at sf0.1 — the write leg, not the index
-        // math, dominated the first bench of this query)
-        val report = one("wssse", Indices.wssse(p), "wssse")
-          .unionAll(one("bd_silhouette", Indices.bdSilhouette(p), "bd_silhouette"))
-          .unionAll(one("bd_dunn", Indices.bdDunn(p), "bd_dunn"))
-          .unionAll(one("davies_bouldin", Indices.daviesBouldin(p), "davies_bouldin"))
-          .localCheckpoint(true)
+        // the four indices of the memoized ground-truth profile — the
+        // values the per-index queries emit — as a 4-row local frame
+        import s.implicits._
+        val p = ClusterQueries.profile(s, d)
+        val report = Seq("wssse" -> p.wssse, "bd_silhouette" -> p.bdSilhouette,
+            "bd_dunn" -> p.bdDunn, "davies_bouldin" -> p.daviesBouldin)
+          .toDF("index_name", "value")
+          .select(col("index_name"), round(col("value"), 6).as("value"))
         // TempDirs-registered: fresh-epoch bench attempts evict the
         // reportCache entry, so every cold re-timing writes a new
         // report dir — without the exit hook each one is an orphan

@@ -734,12 +734,14 @@ object Similarity {
     * bytes — set `graft.fan.postShuffle=off` there. A width-probe
     * guard (the docsF pattern) can't work here: the AQE-final count
     * needs `.rdd` mid-build, which forces materialization. Results
-    * are identical either way (round-robin placement only). */
+    * are identical either way (round-robin placement only). The gate's
+    * value is part of the memo keys below, so a flip mid-session
+    * rebuilds instead of serving the other width. */
   private def postShuffleFan(s: SparkSession): Boolean =
     s.conf.get("graft.fan.postShuffle", "on") != "off"
 
   private[graft] def cellRankedCached(s: SparkSession, d: String): DataFrame =
-    subCache.get(s, s"$d|crk") {
+    subCache.get(s, s"$d|crk|fan=${postShuffleFan(s)}") {
       val base = cellRanked(s, d)
       (if (postShuffleFan(s))
         base.repartition(s.sparkContext.defaultParallelism) else base)
@@ -747,7 +749,7 @@ object Similarity {
     }
 
   private[graft] def lshSignaturesCached(s: SparkSession, d: String): DataFrame =
-    subCache.get(s, s"$d|lshsig") {
+    subCache.get(s, s"$d|lshsig|fan=${postShuffleFan(s)}") {
       val base = lshSignatures(s, d)
       (if (postShuffleFan(s))
         base.repartition(s.sparkContext.defaultParallelism) else base)

@@ -186,11 +186,13 @@ object TextOps {
     * `boilerplate_ngrams`) and the checkpoint inside ngramSet only
     * de-duplicates reads within one query tree — without the memo each
     * query re-pays the split+explode+distinct shuffle. (The trigram
-    * consumers moved to the map-side [[docTrigramIdArrays]] table.) */
+    * consumers moved to the map-side [[docTrigramIdArrays]] table.)
+    * The re-fan gate is part of the key: flipping it mid-session
+    * rebuilds the set at the width it asks for. */
   private val ngramCache = new graft.engine.SessionCache[DataFrame]
   private[graft] def ngramSetCached(s: SparkSession, d: String, n: Int,
                              keep: Seq[String]): DataFrame =
-    ngramCache.get(s, s"$d|n$n|${keep.mkString(",")}") {
+    ngramCache.get(s, s"$d|n$n|${keep.mkString(",")}|fan=${postShuffleFan(s)}") {
       // fanned: the n-gram fabrication is the heaviest map stage in
       // the text family (size(w)-n+1 concat_ws rows per doc)
       ngramSet(docsF(s, d), n, keep)

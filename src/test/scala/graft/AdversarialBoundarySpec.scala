@@ -106,6 +106,28 @@ class AdversarialBoundarySpec extends SparkSpec {
     }
   }
 
+  /** The one-row validity indices over no points: exactly one all-NULL
+    * row, as SQL SUM/AVG give over no rows; the per-cluster and
+    * per-point tables have no rows at all. */
+  private val emptyIndexRows = Seq(
+    "wssse", "bd_silhouette", "bd_dunn", "davies_bouldin", "calinski_harabasz", "xie_beni")
+
+  emptyIndexRows.foreach { key =>
+    test(s"$key is one all-NULL row on an EMPTY corpus") {
+      val rows = SparkEntry.queries(key)(spark, emptyDir).collect()
+      assert(rows.length == 1 && rows(0).length == 1 && rows(0).isNullAt(0),
+        s"$key must be one NULL row: ${rows.toSeq}")
+    }
+  }
+
+  test("the per-cluster and per-point index tables are empty on an EMPTY corpus") {
+    Seq("intra_cluster_stats", "inter_centroid_dist", "centroids_from_assignment",
+        "cluster_sizes", "assign_nearest_centroid").foreach { key =>
+      val n = SparkEntry.queries(key)(spark, emptyDir).collect().length
+      assert(n == 0, s"$key returned $n rows on an empty corpus")
+    }
+  }
+
   private lazy val singleDir: String = {
     val d = graft.engine.TempDirs.scratch("graft_single_spec")
     graft.tools.AdversarialFixture.write(spark, d, 0L, cap = 1)
@@ -171,6 +193,10 @@ class AdversarialBoundarySpec extends SparkSpec {
     // wssse IS defined (0.0 — all points on their centroid)
     val w = SparkEntry.queries("wssse")(spark, constDir).collect()
     assert(w.length == 1 && w(0).getDouble(0) == 0.0)
+    // ... and so is every cluster's diameter proxy
+    val st = SparkEntry.queries("intra_cluster_stats")(spark, constDir).collect()
+    assert(st.nonEmpty && st.forall(_.getAs[Double]("max_dist") == 0.0),
+      s"constant-corpus max_dist must be 0: ${st.toSeq}")
     // the k-means fit collapses to ONE center for every k (one distinct
     // candidate), so each sweep row is WSSSE 0 with the three validity
     // indices undefined

@@ -16,9 +16,11 @@ class IndicesSpec extends SparkSpec {
   private val meanS = (sqrt2 + 2 * sqrt5) / 9
   private val interDist = 10 * sqrt2
 
+  private lazy val prof = Indices.profile(sixPoints)
+
   test("centroids are per-cluster element-wise means") {
-    val c = Centroids.centroids(sixPoints).orderBy("cluster").collect()
-    assert(c.length == 2)
+    val c = Centroids.table(spark, prof).collect()
+    assert(c.map(_.getInt(0)).toSeq == Seq(0, 1))
     val c0 = c(0).getSeq[Double](1)
     val c1 = c(1).getSeq[Double](1)
     assert(math.abs(c0(0) - 1.0 / 3) < eps && math.abs(c0(1) - 1.0 / 3) < eps)
@@ -26,34 +28,33 @@ class IndicesSpec extends SparkSpec {
   }
 
   test("cluster sizes") {
-    val s = Centroids.clusterSizes(sixPoints).orderBy("cluster").collect()
-    assert(s.map(_.getLong(1)).toSeq == Seq(3L, 3L))
+    assert(prof.clusters.map(c => (c.cluster, c.n)) == Seq((0, 3L), (1, 3L)))
   }
 
   test("assign_nearest_centroid reproduces the labels") {
-    val assigned = Centroids.assignNearest(sixPoints, Centroids.centroids(sixPoints))
+    val assigned = Centroids.assignNearest(sixPoints, Centroids.table(spark, prof))
       .orderBy("vec_id").collect()
     assert(assigned.map(_.getInt(1)).toSeq == Seq(0, 0, 0, 1, 1, 1))
   }
 
   test("WSSSE = 8/3 exactly") {
-    val w = Indices.wssse(sixPoints).head().getDouble(0)
+    val w = prof.wssse.get
     assert(math.abs(w - 8.0 / 3) < eps, s"wssse=$w")
   }
 
   test("intra-cluster stats: mean = (√2+2√5)/9, max = √5/3") {
-    val st = Indices.intraClusterStats(sixPoints).orderBy("cluster").collect()
-    st.foreach { r =>
-      assert(r.getLong(1) == 3L)
-      assert(math.abs(r.getDouble(2) - meanS) < eps)
-      assert(math.abs(r.getDouble(3) - sqrt5 / 3) < eps)
+    assert(prof.clusters.length == 2)
+    prof.clusters.foreach { c =>
+      assert(c.n == 3L)
+      assert(math.abs(c.meanA - meanS) < eps)
+      assert(math.abs(c.maxA - sqrt5 / 3) < eps)
     }
   }
 
   test("inter-centroid distance = 10√2") {
-    val d = Indices.interCentroidDist(sixPoints).head()
-    assert(d.getInt(0) == 0 && d.getInt(1) == 1)
-    assert(math.abs(d.getDouble(2) - interDist) < eps)
+    val Seq((ci, cj, d)) = prof.pairs
+    assert(ci == 0 && cj == 1)
+    assert(math.abs(d - interDist) < eps)
   }
 
   test("BD-Silhouette matches the centroid-based formula") {
@@ -70,29 +71,29 @@ class IndicesSpec extends SparkSpec {
       (b - a) / math.max(a, b)
     }
     val expected = ss.sum / 6
-    val got = Indices.bdSilhouette(sixPoints).head().getDouble(0)
+    val got = prof.bdSilhouette.get
     assert(math.abs(got - expected) < eps, s"got=$got expected=$expected")
   }
 
   test("BD-Dunn = 10√2 / (√5/3)") {
-    val got = Indices.bdDunn(sixPoints).head().getDouble(0)
+    val got = prof.bdDunn.get
     assert(math.abs(got - interDist / (sqrt5 / 3)) < eps)
   }
 
   test("Davies-Bouldin = 2·S̄ / 10√2") {
-    val got = Indices.daviesBouldin(sixPoints).head().getDouble(0)
+    val got = prof.daviesBouldin.get
     assert(math.abs(got - 2 * meanS / interDist) < eps)
   }
 
   test("Calinski-Harabasz = 450 exactly") {
     // B = 2·3·‖(5,5)‖² = 300, W = 8/3, k−1 = 1, n−k = 4 → (300/1)/(2/3)
-    val got = Indices.calinskiHarabasz(sixPoints).head().getDouble(0)
+    val got = prof.calinskiHarabasz.get
     assert(math.abs(got - 450.0) < 1e-9, s"got=$got")
   }
 
   test("Xie-Beni = 1/450 exactly") {
     // W/(n·minsep²) = (8/3)/(6·200)
-    val got = Indices.xieBeni(sixPoints).head().getDouble(0)
+    val got = prof.xieBeni.get
     assert(math.abs(got - 1.0 / 450) < eps, s"got=$got")
   }
 

@@ -66,10 +66,10 @@ class InvariantsSpec extends SparkSpec {
 
   test("BD-Silhouette ∈ [-1, 1]; BD-Dunn ≥ 0; DB ≥ 0") {
     cases(3).foreach { pts =>
-      val p = df(pts)
-      val sil = Indices.bdSilhouette(p).head().getDouble(0)
-      val dunn = Indices.bdDunn(p).head().getDouble(0)
-      val db = Indices.daviesBouldin(p).head().getDouble(0)
+      val p = Indices.profile(df(pts))
+      val sil = p.bdSilhouette.get
+      val dunn = p.bdDunn.get
+      val db = p.daviesBouldin.get
       assert(sil >= -1.0 - 1e-9 && sil <= 1.0 + 1e-9, s"sil=$sil")
       assert(dunn >= 0.0, s"dunn=$dunn")
       assert(db >= 0.0, s"db=$db")
@@ -78,28 +78,24 @@ class InvariantsSpec extends SparkSpec {
 
   test("indices are invariant under row permutation and cluster relabeling") {
     cases(3).foreach { pts =>
-      val base = df(pts)
+      val base = Indices.profile(df(pts))
       val rnd = new scala.util.Random(7)
-      val permuted = df(rnd.shuffle(pts))
-      val relabeled = df(pts.map { case (i, xs, c) => (i, xs, 9 - c) })
-      val w0 = Indices.wssse(base).head().getDouble(0)
-      assert(math.abs(Indices.wssse(permuted).head().getDouble(0) - w0) < 1e-9)
-      assert(math.abs(Indices.wssse(relabeled).head().getDouble(0) - w0) < 1e-9)
-      val s0 = Indices.bdSilhouette(base).head().getDouble(0)
-      assert(math.abs(Indices.bdSilhouette(relabeled).head().getDouble(0) - s0) < 1e-9)
+      val permuted = Indices.profile(df(rnd.shuffle(pts)))
+      val relabeled = Indices.profile(df(pts.map { case (i, xs, c) => (i, xs, 9 - c) }))
+      val w0 = base.wssse.get
+      assert(math.abs(permuted.wssse.get - w0) < 1e-9)
+      assert(math.abs(relabeled.wssse.get - w0) < 1e-9)
+      val s0 = base.bdSilhouette.get
+      assert(math.abs(relabeled.bdSilhouette.get - s0) < 1e-9)
     }
   }
 
   test("indices are invariant under translation") {
     cases(2).foreach { pts =>
-      val base = df(pts)
-      val shifted = df(pts.map { case (i, xs, c) => (i, xs.map(_ + 37.5), c) })
-      assert(math.abs(
-        Indices.wssse(base).head().getDouble(0)
-          - Indices.wssse(shifted).head().getDouble(0)) < 1e-7)
-      assert(math.abs(
-        Indices.bdDunn(base).head().getDouble(0)
-          - Indices.bdDunn(shifted).head().getDouble(0)) < 1e-7)
+      val base = Indices.profile(df(pts))
+      val shifted = Indices.profile(df(pts.map { case (i, xs, c) => (i, xs.map(_ + 37.5), c) }))
+      assert(math.abs(base.wssse.get - shifted.wssse.get) < 1e-7)
+      assert(math.abs(base.bdDunn.get - shifted.bdDunn.get) < 1e-7)
     }
   }
 
@@ -177,15 +173,10 @@ class InvariantsSpec extends SparkSpec {
     }
   }
 
-  test("a k = 2..10 sweep launches at most maxIter + 15 Spark jobs (one per step for all k)") {
-    // one job per init step and per Lloyd iteration for EVERY k, plus
-    // a fixed handful — a return to per-k fits (about 30 jobs per k)
-    // breaks this bound many times over
-    import graft.engine.cluster.KMeansSweep
+  /** The Spark jobs `f` launches, counted by job group on a listener. */
+  private def countJobs(group: String)(f: => Unit): Int = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val pts = graft.engine.Tables.points(spark, sf0001)
-    pts.count() // the table's first-load checks run outside the count
-    val group = "kmeans-job-pin"; val marker = "kmeans-job-pin-drained"
+    val marker = s"$group-drained"
     @volatile var jobs = 0
     @volatile var drained = false
     val listener = new SparkListener {
@@ -199,21 +190,49 @@ class InvariantsSpec extends SparkSpec {
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "k-sweep job-count pin")
-      val rows = KMeansSweep.sweep(pts, 2, 10, maxIter = 20).collect()
-      assert(rows.length == 9)
+      sc.setJobGroup(group, group)
+      f
       // the bus delivers in order: once the marker job's start arrives,
-      // every sweep job's start has been counted
-      sc.setJobGroup(marker, "k-sweep job-count pin: bus drain")
+      // every job of `f` has been counted
+      sc.setJobGroup(marker, marker)
       sc.parallelize(Seq(1), 1).count()
       var waited = 0
       while (!drained && waited < 10000) { Thread.sleep(50); waited += 50 }
       assert(drained, "listener bus did not deliver the marker job")
-      assert(jobs > 0 && jobs <= 20 + 15, s"the sweep launched $jobs jobs")
+      jobs
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  test("a k = 2..10 sweep launches at most maxIter + 15 Spark jobs (one per step for all k)") {
+    // one job per init step and per Lloyd iteration for EVERY k, plus
+    // a fixed handful — a return to per-k fits (about 30 jobs per k)
+    // breaks this bound many times over
+    import graft.engine.cluster.KMeansSweep
+    val pts = graft.engine.Tables.points(spark, sf0001)
+    pts.count() // the table's first-load checks run outside the count
+    val jobs = countJobs("kmeans-job-pin") {
+      val rows = KMeansSweep.sweep(pts, 2, 10, maxIter = 20).collect()
+      assert(rows.length == 9)
+    }
+    assert(jobs > 0 && jobs <= 20 + 15, s"the sweep launched $jobs jobs")
+  }
+
+  test("the ten profile-backed index queries launch at most 5 Spark jobs from a cold memo epoch") {
+    // the point checkpoint and the profile's two passes; every query is
+    // then a local frame over the profile — one DataFrame DAG per
+    // query (65 jobs for these ten) breaks this bound many times over
+    val profiled = Seq("wssse", "bd_silhouette", "bd_dunn", "davies_bouldin", "calinski_harabasz",
+      "xie_beni", "intra_cluster_stats", "inter_centroid_dist", "centroids_from_assignment", "cluster_sizes")
+    graft.engine.Tables.points(spark, sf0001).count() // first-load checks outside the count
+    val jobs = countJobs("index-job-pin") {
+      graft.engine.SessionCache.freshEpoch("index-job-pin") {
+        profiled.foreach(q => assert(SparkEntry.queries(q)(spark, sf0001).collect().nonEmpty, q))
+      }
+    }
+    assert(jobs > 0 && jobs <= 5, s"the ten index queries launched $jobs jobs")
   }
 
   test("assign fails loudly on misnamed columns on EVERY path, including zero rows") {

@@ -63,4 +63,24 @@ class SessionCacheSpec extends SparkSpec {
     assert(fetch() == 1 && builds == 3,
       "eviction must not touch normal-epoch entries")
   }
+
+  test("flipping graft.fan.postShuffle mid-session rebuilds the re-fanned memos") {
+    // the gate decides the width each artifact is checkpointed at; a
+    // memo keyed without it served the other width after a flip
+    import graft.engine.sim.Similarity
+    import graft.engine.text.TextOps
+    val memos = Seq[(String, () => AnyRef)](
+      "ngramSetCached" -> (() => TextOps.ngramSetCached(spark, sf0001, 8, Seq("doc_id", "source"))),
+      "cellRankedCached" -> (() => Similarity.cellRankedCached(spark, sf0001)),
+      "lshSignaturesCached" -> (() => Similarity.lshSignaturesCached(spark, sf0001)))
+    SessionCache.freshEpoch("fan-flip") {
+      memos.foreach { case (name, get) =>
+        val on = get()
+        val off = withConf("graft.fan.postShuffle", "off")(get())
+        assert(off ne on, s"$name served the re-fanned artifact with the gate off")
+        assert(withConf("graft.fan.postShuffle", "off")(get()) eq off, s"$name did not memoize the gate-off build")
+        assert(get() eq on, s"$name lost its gate-on entry")
+      }
+    }
+  }
 }

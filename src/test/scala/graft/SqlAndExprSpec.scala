@@ -76,8 +76,8 @@ class SqlAndExprSpec extends SparkSpec {
       col("vec_id"),
       expr("slice(features, 2, 64)").as("features"),
       col("features").getItem(0).cast("int").as("cluster"))
-    val wCsv = Indices.wssse(pts).head().getDouble(0)
-    val wPq = Indices.wssse(Tables.points(spark, sf0001)).head().getDouble(0)
+    val wCsv = Indices.profile(pts).wssse.get
+    val wPq = Indices.profile(Tables.points(spark, sf0001)).wssse.get
     assert(math.abs(wCsv - wPq) < 1e-6, s"csv=$wCsv parquet=$wPq")
   }
 
