@@ -43,6 +43,25 @@ class AdversarialBoundarySpec extends SparkSpec {
     }
   }
 
+  test("one-pass ANN grading equals the per-point union form on the hostile, constant and empty corpora") {
+    // hostile: a zero vector among the candidates (NULL cos); constant:
+    // every cos NULL; empty: no truth row at all
+    Seq("hostile" -> dir, "constant" -> constDir, "empty" -> emptyDir).foreach { case (corpus, d) =>
+      val diff = AnnGradingReference.mismatches(spark, d)
+      assert(diff.isEmpty, s"$corpus corpus:\n${diff.mkString("\n")}")
+    }
+    // on the empty corpus every operating point is still present, with
+    // zero queries, NULL correctness and no candidates
+    AnnGradingReference.queries.foreach { case (q, _) =>
+      SparkEntry.queries(q)(spark, emptyDir).collect().foreach { r =>
+        assert(r.getAs[Long]("n_queries") == 0L, s"$q: $r")
+        assert(r.isNullAt(r.fieldIndex("n_correct")) && r.isNullAt(r.fieldIndex("recall_at_1")), s"$q: $r")
+        if (r.schema.fieldNames.contains("n_candidates"))
+          assert(r.getAs[Long]("n_candidates") == 0L, s"$q: $r")
+      }
+    }
+  }
+
   // completion alone can be vacuous — pin a BINDING boundary outcome
   // for one representative of each crash class (values beyond these
   // are the DuckDB probe's job):

@@ -235,6 +235,22 @@ class InvariantsSpec extends SparkSpec {
     assert(jobs > 0 && jobs <= 5, s"the ten index queries launched $jobs jobs")
   }
 
+  test("the four ANN recall queries launch at most 48 Spark jobs over warm shared inputs") {
+    // each sweep scores its largest candidate surface once and grades
+    // every operating point in one aggregation; one union branch per
+    // point (69 jobs for these four) breaks this bound
+    import graft.engine.sim.Similarity
+    Similarity.sampledTruth(spark, sf0001).count()
+    Similarity.cellRankedCached(spark, sf0001).count()
+    Similarity.lshSignaturesCached(spark, sf0001).count()
+    Seq("ann_lsh_topk", "ann_ivf_topk").foreach(q => SparkEntry.queries(q)(spark, sf0001).count())
+    val jobs = countJobs("ann-job-pin") {
+      Seq("ann_recall", "ann_nprobe_sweep", "lsh_tables_sweep", "ann_sq_rescore_sweep")
+        .foreach(q => assert(SparkEntry.queries(q)(spark, sf0001).collect().nonEmpty, q))
+    }
+    assert(jobs > 0 && jobs <= 48, s"the four recall queries launched $jobs jobs")
+  }
+
   test("assign fails loudly on misnamed columns on EVERY path, including zero rows") {
     // Round-13 ADVICE: the zero-row branch used to build its schema by
     // filtering for literally-named fields, so a misnamed input frame

@@ -8,7 +8,7 @@ package graft
   * fixed in round 8). This spec EXECUTES every declared query at
   * sf0.001 and counts parquet scans in the FINAL adaptive plan — the
   * initial plan overcounts, because AQE's exchange reuse collapses
-  * duplicate scans only at execution (ann_nprobe_sweep: 9 initial →
+  * duplicate scans only at execution (ann_nprobe_sweep: 4 initial →
   * 1 final), so the executed count is the truthful bytes-read metric.
   * It fails when a query's scan count exceeds its recorded allowance.
   *

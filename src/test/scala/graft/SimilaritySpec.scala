@@ -180,6 +180,11 @@ class SimilaritySpec extends SparkSpec {
       s"t=5 row ${t5} must match ann_recall lsh ${lsh}")
   }
 
+  test("one-pass grading of the ANN recall queries equals the per-point union form") {
+    val diff = AnnGradingReference.mismatches(spark, sf0001)
+    assert(diff.isEmpty, diff.mkString("\n"))
+  }
+
   test("ann_sq_rescore_sweep: deeper exact rescore never loses recall") {
     val sweep = Similarity.queries("ann_sq_rescore_sweep")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
