@@ -262,7 +262,7 @@ object KMeansSweep {
     // planInputPartitions (first execution, driver-side) via
     // [[graft.engine.source.DeferredContractSource]], so BUILDING this
     // DataFrame is pure plan construction and plan-only tools
-    // (Explain/PlanDump/ScanAudit) no longer pay two k-means sweeps to
+    // (graft.tools.Plans) no longer pay two k-means sweeps to
     // look at it. The thunk is registered below at object init.
     "k_sweep_determinism_contract" -> ((s, d) =>
       s.read.format(graft.engine.source.DeferredContractSource.FORMAT)

@@ -239,16 +239,11 @@ object Multimodal {
 
   /** Pre-codec payload rows: (media_id, kind, payload, n_bytes, container).
     *
-    * Fanned to the session's parallelism BEFORE the codec kernels: the
-    * fixture is one parquet file with one row group, so the bare scan
-    * is a single input partition and the encode pass (the dominant
-    * multimodal CPU) would run on one core — and every cached-
-    * checkpoint consumer (decode, sniff, phash, frame sample) would
-    * inherit that single partition. One tiny round-robin exchange
-    * buys 32× codec parallelism; a production media table has many
-    * files and needs none. */
-  private val fanWidthCache = new graft.engine.SessionCache[java.lang.Boolean]
-
+    * Fanned ([[graft.engine.Fan]]) BEFORE the codec kernels: over the
+    * one-partition fixture scan the encode pass (the dominant
+    * multimodal CPU) would run on one core, and every cached-checkpoint
+    * consumer (decode, sniff, phash, frame sample) would inherit that
+    * single partition. */
   private def payloads(s: SparkSession, d: String): DataFrame = {
     val base = Tables.documents(s, d)
       // null boundary (the null-text dedup discipline): a NULL text
@@ -256,15 +251,7 @@ object Multimodal {
       // typed Array[Byte] codec rows NPE/NOT_NULL-abort on it. Every
       // multimodal oracle gates on the same text IS NOT NULL.
       .filter(col("text").isNotNull)
-    // fan GUARDED on the scan's partition count (RelQueries.scala:91
-    // pattern): a production media table has many files and must not
-    // pay a full payload shuffle for parallelism it already has. The
-    // width probe is a fixed table property — memoized epoch-stable.
-    val par = s.sparkContext.defaultParallelism
-    val narrow = fanWidthCache.getStable(s, s"$d|docsWidth")(
-      base.rdd.getNumPartitions < par)
-    val fanned = if (narrow) base.repartition(par) else base
-    fanned.select(
+    graft.engine.Fan.docs(base, d).select(
       col("doc_id").as("media_id"),
       element_at(lit(Array("image", "audio", "video")),
         (col("doc_id") % 3 + 1).cast("int")).as("kind"),

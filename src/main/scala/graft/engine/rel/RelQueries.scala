@@ -217,10 +217,10 @@ object RelQueries {
       val urgent = orders(s, d).filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_orderkey"), col("o_orderdate"))
       // memoized per (session, sfDir): `.stat.bloomFilter` is a full
-      // Spark action, and running it at frame BUILD made plan-only
-      // tools (Explain/PlanDump/ScanAudit) pay an orders scan per
-      // look — the same class the deferred contracts fixed. ownMemo
-      // keeps the bench billing this build cold every attempt.
+      // Spark action, and running it at frame BUILD made a plan-only
+      // look (graft.tools.Plans) pay an orders scan — the same class
+      // the deferred contracts fixed. ownMemo keeps the bench billing
+      // this build cold every attempt.
       // data fingerprint in the key (see Sketches.tokenBloom): a stale
       // urgent-key filter would silently change which lineitem rows
       // reach the exact join after an in-place orders rewrite

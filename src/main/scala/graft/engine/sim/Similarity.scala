@@ -3,7 +3,7 @@ package graft.engine.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.{ArrayMath, Tables}
+import graft.engine.{ArrayMath, Fan, Tables}
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2.2
   * #19, #20, #24 + embedding-cosine near-dedup and the LSH-bucketed
@@ -38,35 +38,12 @@ object Similarity {
       .withColumn("nrm", ArrayMath.l2Norm(col("f")))
   }
 
-  /** Fan a small scan out to the session's parallelism before a
-    * CPU-bound pairwise stage. The fixture tables are ONE parquet file
-    * with ONE row group, and parquet splits at row-group granularity —
-    * so a bare scan is a single input partition and a cartesian /
-    * per-row kernel downstream serializes on one core. One cheap
-    * round-robin exchange of the (tiny) vector table restores
-    * parallelism; on a production multi-file table the scan already
-    * matches the session's parallelism and this is a no-op-sized
-    * shuffle either way. Applied ONLY on pair-generating stream sides,
-    * never on the cheap single-pass stat queries. */
-  // fan GUARDED on the input's partition count (RelQueries.scala:91
-  // pattern): only the one-file fixture scan needs the round-robin
-  // exchange — a production vector table with many files must not pay
-  // a full-corpus shuffle for parallelism it already has. The width
-  // probe (.rdd = planning + codegen) is a fixed table property,
-  // memoized epoch-STABLE per (session, sfDir) like the other
-  // contract checks. The probe runs on the CANONICAL raw vec scan,
-  // never on the passed df (ADVICE r15 #2): a caller handing an
-  // already-shuffled/checkpointed frame can then neither poison the
-  // shared cache entry nor be mispriced by it — the decision is a
-  // property of the table, and the table alone is probed.
-  private val fanWidthCache = new graft.engine.SessionCache[java.lang.Boolean]
-  private def fan(df: DataFrame, d: String): DataFrame = {
-    val s = df.sparkSession
-    val par = s.sparkContext.defaultParallelism
-    val narrow = fanWidthCache.getStable(s, s"$d|vecWidth")(
-      vecs(s, d).rdd.getNumPartitions < par)
-    if (narrow) df.repartition(par) else df
-  }
+  /** [[Fan.ifNarrow]] on the vector table, ahead of a CPU-bound
+    * pairwise stage (a cartesian / per-row kernel over a one-partition
+    * scan serializes on one core). Applied ONLY on pair-generating
+    * stream sides, never on the cheap single-pass stat queries. */
+  private def fan(df: DataFrame, d: String): DataFrame =
+    Fan.ifNarrow(df, s"$d|vecWidth")(vecs(df.sparkSession, d))
 
   /** Corpus vector count (drives the LSH/IVF index granularity) —
     * counted over the CLEAN vector universe so the oracle's gated
@@ -729,36 +706,21 @@ object Similarity {
     * re-checkpoint the corpus-wide pass per invocation). */
   private val subCache = new graft.engine.SessionCache[DataFrame]
 
-  /** POST-SHUFFLE re-fan gate (`graft.fan.postShuffle`, default on —
-    * VERDICT r15 what's-wrong #2): the pre-checkpoint repartitions
-    * below re-spread an AQE-coalesced intermediate to session
-    * parallelism. Local mode NEEDS that (AQE coalesces the small
-    * fixture surface to ~2 partitions and every consumer pass runs
-    * 2-wide); a 100 TB cluster must NOT pay a full re-shuffle of the
-    * surface for width AQE already sized to the advisory partition
-    * bytes — set `graft.fan.postShuffle=off` there. A width-probe
-    * guard (the docsF pattern) can't work here: the AQE-final count
-    * needs `.rdd` mid-build, which forces materialization. Results
-    * are identical either way (round-robin placement only). The gate's
+  /** POST-SHUFFLE re-fanned before the checkpoint ([[Fan.postShuffle]]):
+    * AQE coalesces the small fixture surface to ~2 partitions and every
+    * consumer pass would run 2-wide. A width-probe guard (the
+    * [[Fan.ifNarrow]] pattern) can't work here: the AQE-final count
+    * needs `.rdd` mid-build, which forces materialization. The gate's
     * value is part of the memo keys below, so a flip mid-session
     * rebuilds instead of serving the other width. */
-  private def postShuffleFan(s: SparkSession): Boolean =
-    s.conf.get("graft.fan.postShuffle", "on") != "off"
-
   private[graft] def cellRankedCached(s: SparkSession, d: String): DataFrame =
-    subCache.get(s, s"$d|crk|fan=${postShuffleFan(s)}") {
-      val base = cellRanked(s, d)
-      (if (postShuffleFan(s))
-        base.repartition(s.sparkContext.defaultParallelism) else base)
-        .localCheckpoint(true)
+    subCache.get(s, s"$d|crk|fan=${Fan.postShuffleOn(s)}") {
+      Fan.postShuffle(cellRanked(s, d)).localCheckpoint(true)
     }
 
   private[graft] def lshSignaturesCached(s: SparkSession, d: String): DataFrame =
-    subCache.get(s, s"$d|lshsig|fan=${postShuffleFan(s)}") {
-      val base = lshSignatures(s, d)
-      (if (postShuffleFan(s))
-        base.repartition(s.sparkContext.defaultParallelism) else base)
-        .localCheckpoint(true)
+    subCache.get(s, s"$d|lshsig|fan=${Fan.postShuffleOn(s)}") {
+      Fan.postShuffle(lshSignatures(s, d)).localCheckpoint(true)
     }
 
   /** Every vector ranked against every cell by ROUNDED squared
@@ -773,8 +735,8 @@ object Similarity {
     * force-broadcast onto each side, which cannot broadcast at 100 TB
     * (the hint would OOM instead of degrading to a shuffle). Column
     * pruning drops the label for every consumer that ignores it. */
-  // package-private so ExplainDump can dump the builder's plan: the
-  // declared ann_ivf_topk / ann_filtered_topk after-plans show only
+  // package-private so graft.tools.Plans can show the builder's plan:
+  // the declared ann_ivf_topk / ann_filtered_topk plans show only
   // `Scan ExistingRDD` (the memoized localCheckpoint hides this
   // subtree), which left round 15's scoreBest rewrite without
   // committed plan evidence (VERDICT r15 what's-wrong #3)

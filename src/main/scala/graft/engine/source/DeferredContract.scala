@@ -16,11 +16,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Two declared queries are contracts whose verdicts must come from
   * real executions, not a deferrable plan: `k_sweep_determinism_contract`
-  * runs two seeded MLlib sweeps and compares them; `q_join_skew_aqe`
+  * runs two seeded batched k-means sweeps and compares them; `q_join_skew_aqe`
   * runs a join under session-scoped AQE skew confs and reports the
   * grouped result. They used to run that work EAGERLY when their
-  * DataFrame was *built*, so plan-only tools (Explain, PlanDump,
-  * ScanAudit) paid sweeps and joins as a side effect of construction
+  * DataFrame was *built*, so a plan-only look (`graft.tools.Plans`)
+  * paid sweeps and joins as a side effect of construction
   * (round-9 verdict, Next-round #4).
   *
   * This source moves the work to the right phase of Spark's own

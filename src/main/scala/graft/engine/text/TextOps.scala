@@ -3,7 +3,7 @@ package graft.engine.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.Tables
+import graft.engine.{Fan, Tables}
 
 /** Text / dedup operators over the `documents` table — the LLM-data-
   * pipeline surface (SURVEY.md §2.2 #17,18,21,22,23 + the extended
@@ -38,32 +38,12 @@ object TextOps {
 
   private def docs(s: SparkSession, d: String): DataFrame = Tables.documents(s, d)
 
-  /** docs() fanned to the session's parallelism — use ONLY in front of
-    * expansion-heavy map stages (per-char / per-ngram / per-bigram
-    * explodes and the minhash signature builds): the one-row-group
-    * fixture scan is a single input partition, and a stage that
-    * fabricates millions of rows from it serializes on one core until
-    * its first shuffle. Cheap single-pass queries keep the bare scan
-    * (an exchange would cost more than it saves there). GUARDED on the
-    * scan's actual partition count (the RelQueries.scala:91 pattern):
-    * a production corpus has many files/row groups and must NOT pay a
-    * full-corpus round-robin shuffle for a fan it already has — the
-    * exchange only appears when the scan is narrower than the session
-    * parallelism (the one-file fixture case). */
-  private val fanWidthCache = new graft.engine.SessionCache[java.lang.Boolean]
-
-  private def docsF(s: SparkSession, d: String): DataFrame = {
-    val df = docs(s, d)
-    val par = s.sparkContext.defaultParallelism
-    // the width probe (df.rdd) pays physical planning + codegen for
-    // the scan — a fixed table PROPERTY, so memoize it epoch-STABLE
-    // (getStable): re-proving it per cold bench attempt billed ~1 s
-    // into the dedup chain (measured; the SessionCache.getStable
-    // contract-check rationale verbatim)
-    val narrow = fanWidthCache.getStable(s, s"$d|docsWidth")(
-      df.rdd.getNumPartitions < par)
-    if (narrow) df.repartition(par) else df
-  }
+  /** docs() fanned to the session's parallelism ([[graft.engine.Fan]])
+    * — use ONLY in front of expansion-heavy map stages (per-char /
+    * per-ngram / per-bigram explodes and the minhash signature builds).
+    * Cheap single-pass queries keep the bare scan (an exchange would
+    * cost more than it saves there). */
+  private def docsF(s: SparkSession, d: String): DataFrame = Fan.docs(docs(s, d), d)
 
   /** (doc_id, token) with multiplicity, plus lang/source. */
   private def tokens(df: DataFrame): DataFrame =
@@ -164,22 +144,11 @@ object TextOps {
     // partition size, narrowing every consumer pass (measured 6
     // partitions at sf0.1); pin the checkpoint at session width.
     // POST-SHUFFLE re-fan, conf-gated (`graft.fan.postShuffle`, see
-    // [[postShuffleFan]]): at 100 TB the AQE-coalesced width IS the
+    // [[Fan.postShuffle]]): at 100 TB the AQE-coalesced width IS the
     // right one and the re-spread would be a full extra shuffle of
     // the n-gram surface — clusters set `off`.
-    (if (postShuffleFan(docsDf.sparkSession))
-      set.repartition(docsDf.sparkSession.sparkContext.defaultParallelism)
-    else set)
-      .localCheckpoint(true)
+    Fan.postShuffle(set).localCheckpoint(true)
   }
-
-  /** POST-SHUFFLE re-fan gate (`graft.fan.postShuffle`, default on —
-    * VERDICT r15 what's-wrong #2, same contract as Similarity's):
-    * local mode re-spreads AQE-coalesced intermediates to session
-    * width; production turns the re-shuffles off. Results identical
-    * either way (round-robin placement only). */
-  private def postShuffleFan(s: SparkSession): Boolean =
-    s.conf.get("graft.fan.postShuffle", "on") != "off"
 
   /** ngramSet memoized per (session, sfDir, n, keep): the 8-gram set
     * has TWO declared consumers (`decontaminate_ngram`,
@@ -192,7 +161,7 @@ object TextOps {
   private val ngramCache = new graft.engine.SessionCache[DataFrame]
   private[graft] def ngramSetCached(s: SparkSession, d: String, n: Int,
                              keep: Seq[String]): DataFrame =
-    ngramCache.get(s, s"$d|n$n|${keep.mkString(",")}|fan=${postShuffleFan(s)}") {
+    ngramCache.get(s, s"$d|n$n|${keep.mkString(",")}|fan=${Fan.postShuffleOn(s)}") {
       // fanned: the n-gram fabrication is the heaviest map stage in
       // the text family (size(w)-n+1 concat_ws rows per doc)
       ngramSet(docsF(s, d), n, keep)

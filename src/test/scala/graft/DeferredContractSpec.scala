@@ -14,7 +14,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * Pins:
   *  1. ZERO Spark jobs while building both frames AND materializing
   *     their physical plans + formatted explains (the plan-only-tool
-  *     surface: Explain/PlanDump print executedPlan) — counted by a
+  *     surface: graft.tools.Plans prints executedPlan) — counted by a
   *     registered SparkListener.
   *  2. Executing the determinism contract yields the oracle-constant
   *     verdict row (the real sweeps ran, deferred, and agreed).

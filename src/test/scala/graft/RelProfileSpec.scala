@@ -113,7 +113,7 @@ class RelProfileSpec extends SparkSpec {
     val out = RelQueries.queries("q_join_skew_aqe")(spark, sf0001).collect()
     assert(out.nonEmpty)
     val plan = RelQueries.lastSkewJoinPlan(spark)
-    // target the join key per the PlanDump discipline — a bare
+    // target the join key per the Plans discipline — a bare
     // "contains skew" would match log noise, and skew=true is only
     // emitted when AQE genuinely split a skewed partition
     assert(plan.contains("SortMergeJoin(skew=true) [lang"),

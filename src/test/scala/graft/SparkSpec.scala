@@ -4,22 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session —
-  * Spark startup dominates test wall-clock otherwise). Small shuffle
-  * partition count: test fixtures are ≤ a few thousand rows, so 4
-  * partitions beats the engine's production 32 (less task overhead).
+  * Spark startup dominates test wall-clock otherwise): the plan-shape
+  * session of [[graft.tools.Plans]] (local[4], 4 shuffle partitions —
+  * test fixtures are ≤ a few thousand rows, so 4 partitions beats the
+  * engine's production 32), so the tool regenerates exactly the shapes
+  * ScanAuditSpec checks.
   */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = graft.tools.Plans.session("graft-test")
   val sf0001 = "/root/testdata/sf0.001"
 }
 
