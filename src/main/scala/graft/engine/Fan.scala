@@ -22,7 +22,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * before checkpointing it; a 100 TB cluster sets `off` rather than pay
   * that re-shuffle. Results are identical either way, and
   * [[postShuffleOn]] is part of the memo key of every re-fanned
-  * artifact, so a flip mid-session rebuilds it.
+  * artifact, so a flip mid-session rebuilds it. The re-fanned
+  * artifacts are the two similarity memos `Similarity.cellRankedCached`
+  * and `Similarity.lshSignaturesCached`; the text family's 8-gram set
+  * has no shuffle left to undo.
   */
 object Fan {
   private val widthCache = new SessionCache[java.lang.Boolean]

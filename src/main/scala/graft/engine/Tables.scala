@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver's parquet star schema + LLM-data tables.
   *
@@ -16,8 +17,36 @@ import org.apache.spark.sql.functions._
   * SQL-expressible and oracle-checkable (SURVEY.md §1.2).
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+  }
+
+  /** The confs that change the schema Spark infers from a parquet
+    * footer: the same file reads as a different StructType under
+    * another value of any of them. */
+  private val schemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive")
+
+  /** The schema of the parquet table at `path`, inferred once per
+    * (session, path, data fingerprint, schema-shaping confs): each
+    * inference is a Spark job, while a read with a given schema runs
+    * none, and a dedup pass reads the same few tables a dozen times.
+    * Epoch-stable (getStable) like the other table-contract memos.
+    * [[SessionCache.dataFingerprint]] in the key makes an in-place
+    * rewrite re-infer, and the conf values make a mid-session flip
+    * (e.g. [[ensureNanosAsLong]]) re-infer. */
+  private val schemaCache = new SessionCache[StructType]
+  def parquetSchema(s: SparkSession, path: String): StructType = {
+    val confs = schemaConfs.map(k => s"$k=${s.conf.getOption(k).getOrElse("")}").mkString(",")
+    schemaCache.getStable(s, s"$path|${SessionCache.dataFingerprint(path)}|$confs")(
+      s.read.parquet(path).schema)
+  }
 
   def region(s: SparkSession, d: String)    = table(s, d, "region")
   def nation(s: SparkSession, d: String)    = table(s, d, "nation")

@@ -159,7 +159,7 @@ object StreamQueries {
   private def watermarkDedup(s: SparkSession, d: String): DataFrame = {
     Tables.ensureNanosAsLong(s)
     Tables.requireUtcForEventTs(s) // eventTsExpr on a readStream below
-    val schema = s.read.parquet(s"$d/events.parquet").schema
+    val schema = Tables.parquetSchema(s, s"$d/events.parquet")
     val name = freshSinkName("wm_dedup")
     withStatePartitions(s, statePartitions(s)) {
       val q = s.readStream.schema(schema).option("pathGlobFilter", "events.parquet")
@@ -188,7 +188,7 @@ object StreamQueries {
   private def statefulPerUser(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     Tables.ensureNanosAsLong(s)
-    val schema = s.read.parquet(s"$d/events.parquet").schema
+    val schema = Tables.parquetSchema(s, s"$d/events.parquet")
     val name = freshSinkName("stateful")
     val events = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(d)
@@ -230,7 +230,7 @@ object StreamQueries {
   private def streamStreamJoin(s: SparkSession, d: String): DataFrame = {
     Tables.ensureNanosAsLong(s)
     Tables.requireUtcForEventTs(s) // eventTsExpr on a readStream below
-    val schema = s.read.parquet(s"$d/events.parquet").schema
+    val schema = Tables.parquetSchema(s, s"$d/events.parquet")
     def src = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(d)
       .withColumn("tss", date_trunc("second", Tables.eventTsExpr(schema)))
@@ -299,7 +299,7 @@ object StreamQueries {
 
   private def transformWithStateRun(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val schema = s.read.parquet(s"$d/events.parquet").schema
+    val schema = Tables.parquetSchema(s, s"$d/events.parquet")
     val name = freshSinkName("tws")
     withStatePartitions(s, statePartitions(s)) {
       val q = s.readStream.schema(schema)
@@ -330,13 +330,13 @@ object StreamQueries {
     * micro-batch ⇒ ≡ batch per-lang distinct-text counts, which is the
     * DuckDB oracle. */
   private def streamContentDedup(s: SparkSession, d: String): DataFrame = {
-    val schema = s.read.parquet(s"$d/documents.parquet").schema
+    val schema = Tables.parquetSchema(s, s"$d/documents.parquet")
     val name = freshSinkName("scd")
     withStatePartitions(s, statePartitions(s)) {
       val q = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)
         // null-text docs leave the dedup universe (same boundary
-        // contract as minhashSigArrayPlan): without the filter the
+        // contract as minhashSignatures): without the filter the
         // engine keeps one sha2(NULL)=NULL row per lang while the
         // oracle's COUNT(DISTINCT text) counts zero for it —
         // unreachable on the fixtures, live on adversarial corpora
@@ -383,7 +383,7 @@ object StreamQueries {
   }
 
   private def foreachBatchRun(s: SparkSession, d: String, out: String): Unit = {
-    val schema = s.read.parquet(s"$d/events.parquet").schema
+    val schema = Tables.parquetSchema(s, s"$d/events.parquet")
     withStatePartitions(s, statePartitions(s)) {
       val q = s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(d)

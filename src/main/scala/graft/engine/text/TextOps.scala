@@ -60,15 +60,6 @@ object TextOps {
       .select(col("doc_id"), col("bg.t1").as("t1"), col("bg.t2").as("t2"))
   }
 
-  /** The map-side SimHash signature PLAN (pre-checkpoint),
-    * package-private for ScaleShapeSpec's kernel pin — `simhash_dedup`
-    * eagerly checkpoints it for its five consumers. */
-  private[graft] def simhashSigPlan(s: SparkSession, d: String): DataFrame = {
-    graft.engine.expr.GraftFunctions.register(s)
-    docsF(s, d).select(col("doc_id"),
-      expr("simhash16(split(text, ' '))").as("simhash"))
-  }
-
   /** Deterministic token id: fold the first `width` lowercase-hex
     * digits of md5(token) as a base-16 integer. Pure per-row arithmetic
     * (codegen'd higher-order functions, no UDF, no shuffle, no global
@@ -121,50 +112,34 @@ object TextOps {
         lit(foldWidth(df.sparkSession))))
   }
 
-  /** The DISTINCT word-n-gram set of each document, one row per
-    * (keep-cols, ngram), eagerly materialized: every consumer of an
-    * n-gram set reads it several times (document frequencies, join
-    * sides, size counts), and the split+explode+distinct shuffle must
-    * run ONCE (the round-2 ngram recompute lesson). The split is
-    * hoisted into a projected array column — inlining it into the
-    * transform lambda re-splits the text per element. Shared by
-    * `ngram_jaccard_dedup` (n=3) and `decontaminate_ngram` (n=8). */
-  private def ngramSet(docsDf: DataFrame, n: Int, keep: Seq[String]): DataFrame = {
-    // the codegen'd `ngram_strings` kernel fabricates the shingle
-    // strings in one generated pass (the former concat_ws transform
-    // interpreted its lambda per shingle) and pre-distincts PER DOC
-    // map-side, shrinking the explode before the global distinct —
-    // whose (keep, ng) semantics are unchanged (keep cols are doc
-    // constants, NgramFoldSpec pins the composition)
-    graft.engine.expr.GraftFunctions.register(docsDf.sparkSession)
-    val set = docsDf.select(keep.map(col) :+ split(col("text"), " ").as("w"): _*)
-      .select(keep.map(col) :+ explode(expr(s"ngram_strings(w, $n)")).as("ng"): _*)
-      .distinct()
-    // AQE coalesces the distinct's ~small output under the advisory
-    // partition size, narrowing every consumer pass (measured 6
-    // partitions at sf0.1); pin the checkpoint at session width.
-    // POST-SHUFFLE re-fan, conf-gated (`graft.fan.postShuffle`, see
-    // [[Fan.postShuffle]]): at 100 TB the AQE-coalesced width IS the
-    // right one and the re-spread would be a full extra shuffle of
-    // the n-gram surface — clusters set `off`.
-    Fan.postShuffle(set).localCheckpoint(true)
-  }
-
-  /** ngramSet memoized per (session, sfDir, n, keep): the 8-gram set
-    * has TWO declared consumers (`decontaminate_ngram`,
-    * `boilerplate_ngrams`) and the checkpoint inside ngramSet only
-    * de-duplicates reads within one query tree — without the memo each
-    * query re-pays the split+explode+distinct shuffle. (The trigram
-    * consumers moved to the map-side [[docTrigramIdArrays]] table.)
-    * The re-fan gate is part of the key: flipping it mid-session
-    * rebuilds the set at the width it asks for. */
+  /** The word-n-gram set of each document, one row per (keep-cols,
+    * ngram), memoized per (session, sfDir, n, keep) as an eager
+    * checkpoint: the 8-gram set has several declared consumers
+    * (`decontaminate_ngram`, `boilerplate_ngrams`,
+    * `eval_contamination_report`), each reading it several times
+    * (document frequencies, join sides, size counts), so the
+    * split+explode runs ONCE (the round-2 ngram recompute lesson). The
+    * split is hoisted into a projected array column — inlining it into
+    * the kernel call re-splits the text per element.
+    *
+    * The plan is fan → explode → checkpoint, with no shuffle: the
+    * codegen'd `ngram_strings` kernel emits each doc's DISTINCT
+    * shingles, the keep cols are doc constants, and `doc_id` is the
+    * documents table's primary key ([[graft.engine.Tables.requirePk]]),
+    * so no two rows can share (keep, ng) and a global distinct would
+    * shuffle the whole shingle surface to remove nothing. The fanned
+    * input gives the checkpoint session width without a re-fan.
+    * Caveat: under `graft.pk.check=skip` a duplicated doc_id emits its
+    * shingles once per duplicate row — the engine-defined behaviour of
+    * every id-keyed operator over a broken key. */
   private val ngramCache = new graft.engine.SessionCache[DataFrame]
   private[graft] def ngramSetCached(s: SparkSession, d: String, n: Int,
                              keep: Seq[String]): DataFrame =
-    ngramCache.get(s, s"$d|n$n|${keep.mkString(",")}|fan=${Fan.postShuffleOn(s)}") {
-      // fanned: the n-gram fabrication is the heaviest map stage in
-      // the text family (size(w)-n+1 concat_ws rows per doc)
-      ngramSet(docsF(s, d), n, keep)
+    ngramCache.get(s, s"$d|n$n|${keep.mkString(",")}") {
+      graft.engine.expr.GraftFunctions.register(s)
+      docsF(s, d).select(keep.map(col) :+ split(col("text"), " ").as("w"): _*)
+        .select(keep.map(col) :+ explode(expr(s"ngram_strings(w, $n)")).as("ng"): _*)
+        .localCheckpoint(true)
     }
 
   /** Adds the `tid` column to any frame with a `token` column,
@@ -344,77 +319,68 @@ object TextOps {
   }
 
   private val pairsCache = new graft.engine.SessionCache[DataFrame]
-  private val sigCache = new graft.engine.SessionCache[DataFrame]
 
-  /** The 8-minhash signature table `(doc_id, m0..m7)`, memoized per
-    * (session, sfDir, foldWidth). Banding-INDEPENDENT, so it gets its
-    * own memo level: both declared banding operating points (b=2×r=4
-    * and b=1×r=8) band the SAME signatures, and the signature
-    * aggregation (a full doc-level shuffle of the token set) was
-    * re-paid per banding when only the pair list was cached (driver
-    * bench r5: minhash_recall_b1r8 at 6.6 s vs 2.7 s with the
-    * signatures warm). Also read directly by `minhash_calibration`
-    * (per-pair signature-agreement vs exact-Jaccard cross-tab). */
-  /** The 8-minhash signature-array build PLAN (pre-checkpoint),
-    * package-private for ScaleShapeSpec's kernel-shape pin (the
-    * docTrigramIdArraysPlan pattern — the memoized face below eagerly
-    * checkpoints it, so the subtree is invisible in declared plans).
-    *
-    * The whole 8-hash signature is MAP-SIDE: a doc's tokens live in
-    * its own row, min over the token multiset equals min over the
-    * distinct set, and mh_s = MIN((tid·(2s+3)+7s+1) % P) with
-    * tid = fold(md5(token)) % P a pure per-token function — so the
-    * codegen'd `minhash8` kernel computes all 8 mins in one pass
-    * over the split array and the former explode → tid → 8-min-agg
-    * chain (one shuffle + the exploded-token checkpoint read)
-    * disappears from the signature path entirely. NgramFoldSpec
-    * pins the kernel against per-seed array_min HOF mirrors;
-    * ScaleShapeSpec pins the SHAPE (no Generate, no key-partitioned
-    * exchange — no (doc, token) row ever exists in this path). */
-  private[graft] def minhashSigArrayPlan(s: SparkSession, d: String): DataFrame = {
+  /** The per-doc feature build PLAN (pre-checkpoint), package-private
+    * for ScaleShapeSpec's kernel and shape pins — [[docFeatures]]
+    * eagerly checkpoints it, so the subtree is invisible in declared
+    * plans. ONE fanned scan splits `text` once, and every per-doc
+    * artifact of the dedup family is computed MAP-SIDE from that split
+    * array (a doc's tokens live in its own row, so none of them needs
+    * a shuffle and no (doc, token) row ever exists here):
+    *  - `has_text`, `n_w`: the NULL-text flag and the token count, the
+    *    row-universe predicates of the views below;
+    *  - `arr`: the sorted distinct-token array (NULL for NULL text);
+    *  - `mh`: the codegen'd `minhash8` kernel, all 8 modular min-hashes
+    *    mh_s = MIN((tid·(2s+3)+7s+1) % P) with tid = fold(md5(token)) % P
+    *    in one pass. Min over the distinct set equals min over the token
+    *    multiset, so it reads `arr` and digests each distinct token once;
+    *  - `tri`: the codegen'd `ngram_fold_ids` kernel, the sorted distinct
+    *    folded-trigram ids (fabrication, md5-fold, distinct and sort in
+    *    one native pass), for docs with ≥ 3 tokens only. The former
+    *    interpreted `transform(..., i -> fold_hex(md5(concat_ws(...))))`
+    *    HOF ran its whole lambda per trigram;
+    *  - `simhash`: the codegen'd `simhash16` kernel. Σ sign over the token
+    *    MULTISET, so it reads the split array, not `arr`.
+    * NgramFoldSpec pins every kernel bit-for-bit against its HOF or
+    * exploded form, so every downstream hash is unchanged. */
+  private[graft] def docFeaturesPlan(s: SparkSession, d: String): DataFrame = {
     graft.engine.expr.GraftFunctions.register(s)
-    val w = foldWidth(s)
-    // null-text docs emit NO row — the row universe of the former
-    // explode-based form and of the oracle's UNNEST (both skip NULL);
-    // the kernel alone would emit a null-signature row instead. A
-    // cheap pre-kernel filter that pushes to the scan (unreachable on
-    // the fixtures, where text is never null — boundary contract only)
-    docsF(s, d).filter(col("text").isNotNull)
-      .select(col("doc_id"),
-        expr(s"minhash8(split(text, ' '), $w)").as("mh"))
+    val fw = foldWidth(s)
+    docsF(s, d).select(col("doc_id"), split(col("text"), " ").as("w"))
+      .select(col("doc_id"), col("w"), size(col("w")).as("n_w"),
+        sort_array(array_distinct(col("w"))).as("arr"))
+      .select(col("doc_id"), col("w").isNotNull.as("has_text"), col("n_w"), col("arr"),
+        expr(s"minhash8(arr, $fw)").as("mh"),
+        when(col("n_w") >= 3, expr(s"ngram_fold_ids(w, 3, $fw)")).as("tri"),
+        expr("simhash16(w)").as("simhash"))
   }
 
+  /** [[docFeaturesPlan]] memoized per (session, sfDir, foldWidth) as ONE
+    * eager checkpoint. The per-doc artifacts below are projections of
+    * it, each keeping its own row universe, so a memo epoch reads and
+    * splits the text once instead of once per artifact (the truth
+    * build, both bandings, the trigram family and `simhash_dedup` all
+    * start here). */
+  private val featCache = new graft.engine.SessionCache[DataFrame]
+  private[graft] def docFeatures(s: SparkSession, d: String): DataFrame =
+    featCache.get(s, s"$d|${foldWidth(s)}")(docFeaturesPlan(s, d).localCheckpoint(true))
+
+  /** The 8-minhash signature table `(doc_id, m0..m7)`. Banding-
+    * INDEPENDENT: both declared banding operating points (b=2×r=4 and
+    * b=1×r=8) band the SAME signatures, and `minhash_calibration`
+    * reads it directly (per-pair signature agreement vs exact Jaccard).
+    * NULL-text docs emit NO row — the oracle's UNNEST skips them, where
+    * the kernel alone yields a null signature. */
   private[graft] def minhashSignatures(s: SparkSession, d: String): DataFrame =
-    sigCache.get(s, s"$d|${foldWidth(s)}") {
-      // checkpoint the ARRAY, then extract m0..m7 from the
-      // materialized rows: the kernel provably runs once per doc
-      // regardless of how project-collapsing treats an alias with 8
-      // references
-      minhashSigArrayPlan(s, d)
-        .localCheckpoint(true)
-        .select(col("doc_id") +:
-          (0 until 8).map(i => col("mh").getItem(i).as(s"m$i")): _*)
-    }
+    docFeatures(s, d).filter(col("has_text"))
+      .select(col("doc_id") +: (0 until 8).map(i => col("mh").getItem(i).as(s"m$i")): _*)
 
-  /** The DISTINCT (doc_id, token) set, memoized per (session, sfDir)
-    * as an eager checkpoint: the MinHash pair builds (both bandings),
-    * the exact-Jaccard truth, and incremental_dedup all start from
-    * this same explode+distinct shuffle — one materialization serves
-    * them all (the ngramSet lesson: a recompute multiplies with the
-    * consumer count, never amortizes). */
-  private val tokSetCache = new graft.engine.SessionCache[DataFrame]
-
+  /** The DISTINCT (doc_id, token) set, exploded from the per-doc
+    * arrays (map-side: per-doc distinctness needs no shuffle). Read by
+    * the exact-Jaccard truth and the df counts of `cooccurrence_pmi`
+    * and `tf_idf_top_terms`. NULL-text docs emit no row. */
   private[graft] def distinctTokens(s: SparkSession, d: String): DataFrame =
-    tokSetCache.get(s, d) {
-      // per-doc distinctness needs NO shuffle: tokens of one doc live in
-      // one row, so array_distinct on the split array is map-side — the
-      // former explode+distinct paid a full shuffle of the exploded
-      // token rows for a grouping the data already had (measured ~3 s
-      // of the sf0.1 cold build)
-      docsF(s, d).select(col("doc_id"),
-        explode(array_distinct(split(col("text"), " "))).as("token"))
-        .localCheckpoint(true)
-    }
+    docFeatures(s, d).select(col("doc_id"), explode(col("arr")).as("token"))
 
   /** The rarest-first PPJoin prefix PLAN for `ngram_jaccard_dedup`,
     * package-private for ScaleShapeSpec's doc_id-partitioned-window
@@ -439,20 +405,13 @@ object TextOps {
       .select("doc_id", "tid", "rn", "n")
   }
 
-  /** Per-doc SORTED distinct-token array (doc_id, arr), map-side from
-    * the text column (array_distinct ∘ split — no explode, no shuffle),
-    * memoized: the exact-Jaccard truth build and the candidate-quality
-    * histogram both verify candidates with one `array_intersect` per
-    * pair against this table, and each used to rebuild it through a
-    * collect_list shuffle of the exploded token rows. */
-  private val docsArrCache = new graft.engine.SessionCache[DataFrame]
-
+  /** Per-doc SORTED distinct-token array `(doc_id, arr)`, one row per
+    * doc (NULL `arr` for NULL text): the exact-Jaccard truth build and
+    * the candidate-quality family verify candidates with one
+    * `array_intersect` per pair against it, with no collect_list
+    * shuffle of exploded token rows. */
   private[graft] def docTokenArrays(s: SparkSession, d: String): DataFrame =
-    docsArrCache.get(s, d) {
-      docsF(s, d).select(col("doc_id"),
-        sort_array(array_distinct(split(col("text"), " "))).as("arr"))
-        .localCheckpoint(true)
-    }
+    docFeatures(s, d).select("doc_id", "arr")
 
   /** The DETERMINISTIC 2% sample of the MinHash candidate-pair
     * surface with each pair's EXACT token-set intersection/union
@@ -473,51 +432,15 @@ object TextOps {
       .select("d1", "d2", "i", "u")
   }
 
-  /** Per-doc SORTED distinct folded-trigram-id array, built ENTIRELY
-    * map-side (trigram fabrication, md5-fold, distinct, sort all
-    * inside one native kernel over the split array — a doc's trigrams
-    * live in its own row, so no shuffle is ever needed to group
-    * them), memoized per (session, sfDir, foldWidth). Replaces the
-    * former explode→distinct→collect_list round trip that
-    * `ngram_jaccard_dedup` re-paid per consumer subtree (the fold+
-    * distinct above the checkpointed n-gram set was recomputed by
-    * all five of dfreq/prefix×2/sz/docsArr — measured ~8 s of the
-    * sf0.1 bench for this query alone). The build is the codegen'd
-    * `ngram_fold_ids` expression (expr/NgramFold.scala) — the former
-    * `transform(..., i -> fold_hex(md5(concat_ws(...))))` HOF ran its
-    * whole lambda INTERPRETED per trigram (HOFs are CodegenFallback;
-    * at 100 TB the per-byte interpreter overhead is a real CPU
-    * multiplier — round-7 verdict item #2); NgramFoldSpec pins the
-    * kernel bit-for-bit against that HOF form, so every downstream
-    * hash is unchanged. Docs with <3 tokens have no trigrams and emit
-    * NO row (matches the exploded form's row universe and the
-    * oracle). */
-  private val triIdCache = new graft.engine.SessionCache[DataFrame]
-
-  /** The trigram-id-array build PLAN, package-private for
-    * ScaleShapeSpec's kernel pin (the annIvfPlan pattern — the
-    * memoized face below is an eager checkpoint, so the interesting
-    * subtree is invisible in any declared query's plan). */
-  private[graft] def docTrigramIdArraysPlan(s: SparkSession, d: String): DataFrame = {
-    graft.engine.expr.GraftFunctions.register(s)
-    val w = foldWidth(s)
-    // the <3-token guard is a CHEAP filter on the split array BEFORE
-    // the kernel projection — a `size(arr) > 0` filter on top would
-    // be predicate-pushed below the repartition with the whole
-    // kernel substituted into it, re-running the entire build
-    // single-core on the unfanned scan partition (measured 5.1 s vs
-    // 0.5 s for the projection itself, in the HOF era; the shape
-    // hazard is the same for any expensive projection)
-    docsF(s, d).select(col("doc_id"), split(col("text"), " ").as("w0"))
-      .filter(size(col("w0")) >= 3)
-      .select(col("doc_id"),
-        expr(s"ngram_fold_ids(w0, 3, $w)").as("arr"))
-  }
-
+  /** Per-doc SORTED distinct folded-trigram-id array `(doc_id, arr)`,
+    * the shared table of `ngram_jaccard_dedup` and `ngram_novelty`: one
+    * row per doc, so consumers never re-pay an explode → distinct →
+    * collect_list round trip (which once dominated the sf0.1 bench at
+    * ~8 s for `ngram_jaccard_dedup` alone). Docs with < 3 tokens have
+    * no trigrams and emit NO row (the exploded form's row universe and
+    * the oracle's). */
   private[graft] def docTrigramIdArrays(s: SparkSession, d: String): DataFrame =
-    triIdCache.get(s, s"$d|${foldWidth(s)}") {
-      docTrigramIdArraysPlan(s, d).localCheckpoint(true)
-    }
+    docFeatures(s, d).filter(col("n_w") >= 3).select(col("doc_id"), col("tri").as("arr"))
 
   /** Deterministic 5% sample flag per doc: md5-fold of the doc_id's
     * string form, mod 20 — no sampling state, no broadcast sample
@@ -997,12 +920,12 @@ object TextOps {
       // the kernel against an independent JVM model of the published
       // formula; the DuckDB oracle still computes it the exploded way.
       // FIVE consumers read the signature table (distinct-sig dim,
-      // two doc-expansion joins, both same-sig sides) — eagerly
-      // checkpoint the (doc_id, long) rows so the corpus scan and the
-      // per-token digests run ONCE per execution (the plan audit
-      // showed 5 parquet scans before this); kernel pin lives on
-      // simhashSigPlan.
-      val sh = simhashSigPlan(s, d).localCheckpoint(true)
+      // two doc-expansion joins, both same-sig sides), so it is a
+      // projection of the checkpointed per-doc feature table: the
+      // corpus scan and the per-token digests run once per memo epoch
+      // (the plan audit showed 5 parquet scans before any checkpoint);
+      // the kernel pin lives on docFeaturesPlan.
+      val sh = docFeatures(s, d).select("doc_id", "simhash")
       // The banded join is COMPLETE for ham ≤ 3 (4 bands, pigeonhole),
       // so the declared output is exactly {(d1 < d2): ham ≤ 3} — which
       // licenses running the band join on the DISTINCT-SIGNATURE dim
@@ -1300,7 +1223,7 @@ object TextOps {
     // docs (n_hit > 0, via the inner join) surface.
     "decontaminate_ngram" -> ((s, d) => {
       // the shingle set feeds FOUR consumers (eval side, train side →
-      // totals and hits) — ngramSet materializes it once
+      // totals and hits) — ngramSetCached materializes it once
       val sh = ngramSetCached(s, d, 8, Seq("doc_id", "source")).withColumnRenamed("ng", "sh")
       val ev = sh.filter(col("source") === "src0").select("sh").distinct()
       val tr = sh.filter(col("source") =!= "src0").select("doc_id", "sh")
@@ -1337,7 +1260,7 @@ object TextOps {
     "repetition_score" -> ((s, d) => {
       graft.engine.expr.GraftFunctions.register(s)
       // null-text guard: match the explode-form/oracle row universe
-      // (no row), not a null-stats row — see minhashSigArrayPlan
+      // (no row), not a null-stats row — see minhashSignatures
       docs(s, d).filter(col("text").isNotNull)
         .select(col("doc_id"), expr("word_stats(split(text, ' '))").as("st"))
         .select(col("doc_id"), col("st.n_tokens").as("n_tokens"),

@@ -62,6 +62,16 @@ class AdversarialBoundarySpec extends SparkSpec {
     }
   }
 
+  test("the per-doc feature views equal their per-artifact builders on the hostile, constant and empty corpora") {
+    // hostile: NULL, empty and whitespace-only text and docs with fewer
+    // than 3 tokens (row-universe edges of every view); constant: one
+    // text repeated; empty: no document at all
+    Seq("hostile" -> dir, "constant" -> constDir, "empty" -> emptyDir).foreach { case (corpus, d) =>
+      val diff = DedupFeaturesReference.mismatches(spark, d)
+      assert(diff.isEmpty, s"$corpus corpus:\n${diff.mkString("\n")}")
+    }
+  }
+
   // completion alone can be vacuous — pin a BINDING boundary outcome
   // for one representative of each crash class (values beyond these
   // are the DuckDB probe's job):

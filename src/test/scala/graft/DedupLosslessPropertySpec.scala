@@ -157,7 +157,7 @@ class DedupLosslessPropertySpec extends SparkSpec {
   test("simhash_dedup ≡ brute-force Hamming ≤ 3 over the same signatures (banding complete, pairs exactly-once)") {
     cases(6).foreach { rows =>
       val dir = dirOf(rows)
-      val sh = TextOps.simhashSigPlan(spark, dir)
+      val sh = TextOps.docFeaturesPlan(spark, dir).select("doc_id", "simhash")
       val brute = sh.select(col("doc_id").as("d1"), col("simhash").as("h1"))
         .crossJoin(sh.select(col("doc_id").as("d2"), col("simhash").as("h2")))
         .filter(col("d1") < col("d2"))

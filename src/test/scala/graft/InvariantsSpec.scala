@@ -251,6 +251,68 @@ class InvariantsSpec extends SparkSpec {
     assert(jobs > 0 && jobs <= 48, s"the four recall queries launched $jobs jobs")
   }
 
+  test("the seven dedup-cold memos build in at most 45 Spark jobs from a cold memo epoch") {
+    // one per-doc feature checkpoint serves tokens, token arrays,
+    // trigram ids and the signatures, and the 8-gram set is fan →
+    // explode → checkpoint; a checkpoint per artifact plus the 8-gram
+    // distinct and re-fan, with a schema inference per table read,
+    // took 59
+    import graft.engine.text.TextOps
+    graft.engine.Fan.docs(graft.engine.Tables.documents(spark, sf0001), sf0001).count()
+    val memos = Seq[() => org.apache.spark.sql.DataFrame](
+      () => TextOps.distinctTokens(spark, sf0001),
+      () => TextOps.docTokenArrays(spark, sf0001),
+      () => TextOps.docTrigramIdArrays(spark, sf0001),
+      () => TextOps.minhashPairs(spark, sf0001, rowsPerBand = 4),
+      () => TextOps.minhashTruthCached(spark, sf0001),
+      () => TextOps.ngramSetCached(spark, sf0001, 8, Seq("doc_id", "source")),
+      () => TextOps.resolvedGroups(spark, sf0001))
+    val jobs = countJobs("dedup-job-pin") {
+      graft.engine.SessionCache.freshEpoch("dedup-job-pin") {
+        memos.foreach(m => assert(m().count() > 0))
+      }
+    }
+    assert(jobs > 0 && jobs <= 45, s"the seven dedup memos launched $jobs jobs")
+  }
+
+  test("a second read of a table in one session infers no schema: 0 Spark jobs") {
+    graft.engine.Tables.documents(spark, sf0001)
+    val jobs = countJobs("schema-pin")(graft.engine.Tables.documents(spark, sf0001))
+    assert(jobs == 0, s"the second documents read launched $jobs jobs")
+  }
+
+  test("the memoized table schema follows a nanosAsLong flip and an in-place rewrite") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    import org.apache.spark.sql.types.{LongType, StringType}
+    import graft.engine.Tables
+    // ts as TIMESTAMP(NANOS): Spark reads it only as a ns-epoch long,
+    // and refuses to infer a schema for it with the legacy conf off
+    val d = graft.engine.TempDirs.scratch("graft_schema_memo")
+    val nanos = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val w = ExampleParquetWriter.builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+      new org.apache.hadoop.fs.Path(s"$d/events.parquet"), spark.sparkContext.hadoopConfiguration))
+      .withType(nanos).build()
+    try w.write(new SimpleGroupFactory(nanos).newGroup().append("event_id", 1L).append("ts", 5000000000L))
+    finally w.close()
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val asLong = withConf(key, "true")(Tables.table(spark, d, "events"))
+    assert(asLong.schema("ts").dataType == LongType)
+    assert(withConf(key, "true")(asLong.collect().toSeq.map(_.getLong(1))) == Seq(5000000000L))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      withConf(key, "false")(Tables.table(spark, d, "events"))
+    }
+    assert(withConf(key, "true")(Tables.table(spark, d, "events")).schema("ts").dataType == LongType)
+    // an in-place rewrite of a directory table with a new column
+    Seq(1L).toDF("a").write.mode("overwrite").parquet(s"$d/t.parquet")
+    assert(Tables.table(spark, d, "t").columns.toSeq == Seq("a"))
+    Seq((1L, "x")).toDF("a", "b").write.mode("overwrite").parquet(s"$d/t.parquet")
+    val rewritten = Tables.table(spark, d, "t")
+    assert(rewritten.columns.toSeq == Seq("a", "b") && rewritten.schema("b").dataType == StringType)
+  }
+
   test("assign fails loudly on misnamed columns on EVERY path, including zero rows") {
     // Round-13 ADVICE: the zero-row branch used to build its schema by
     // filtering for literally-named fields, so a misnamed input frame

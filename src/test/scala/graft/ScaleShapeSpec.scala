@@ -573,7 +573,7 @@ class ScaleShapeSpec extends SparkSpec {
     // kernels bit-for-bit against the HOF forms, so this swap can
     // never change a hash).
     import graft.engine.text.TextOps
-    val tri = TextOps.docTrigramIdArraysPlan(spark, sf0001)
+    val tri = TextOps.docFeaturesPlan(spark, sf0001)
     val triPlan = tri.queryExecution.executedPlan.toString
     assert(triPlan.contains("ngram_fold_ids"),
       s"trigram-id build must use the native kernel:\n$triPlan")
@@ -601,7 +601,7 @@ class ScaleShapeSpec extends SparkSpec {
     // (the audit that motivated the checkpoints counted 3 and 5)
     for ((k, builder) <- Seq[(String, org.apache.spark.sql.DataFrame)](
         "bigram_logppl" -> TextOps.bigramStreamPlan(spark, sf0001),
-        "simhash_dedup" -> TextOps.simhashSigPlan(spark, sf0001))) {
+        "simhash_dedup" -> TextOps.docFeaturesPlan(spark, sf0001))) {
       val bplan = builder.queryExecution.executedPlan.toString
       assert(bplan.contains(if (k == "simhash_dedup") "simhash16" else "word_bigrams"),
         s"$k builder must use its native kernel:\n$bplan")
@@ -628,16 +628,12 @@ class ScaleShapeSpec extends SparkSpec {
     // crept back — one full corpus shuffle per signature build at
     // 100 TB.
     import graft.engine.text.TextOps
-    for ((name, df) <- Seq(
-        ("minhash8", TextOps.minhashSigArrayPlan(spark, sf0001)),
-        ("simhash16", TextOps.simhashSigPlan(spark, sf0001)))) {
-      val plan = df.queryExecution.executedPlan.toString
+    // both signatures are built in the one per-doc feature plan
+    val plan = TextOps.docFeaturesPlan(spark, sf0001).queryExecution.executedPlan.toString
+    for (name <- Seq("minhash8", "simhash16"))
       assert(plan.contains(name), s"$name build lost its kernel:\n$plan")
-      assert(!plan.contains("Generate "),
-        s"$name signature path explodes tokens:\n$plan")
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"$name signature path shuffles on a key:\n$plan")
-    }
+    assert(!plan.contains("Generate "), s"the signature path explodes tokens:\n$plan")
+    assert(!plan.contains("Exchange hashpartitioning"), s"the signature path shuffles on a key:\n$plan")
     // word_stats rides UN-memoized in the declared plans — pin the
     // score face (range-partitioned output sort only) and the sweep
     // (its one hash exchange is the 5-group threshold agg, never a

@@ -68,9 +68,7 @@ class SessionCacheSpec extends SparkSpec {
     // the gate decides the width each artifact is checkpointed at; a
     // memo keyed without it served the other width after a flip
     import graft.engine.sim.Similarity
-    import graft.engine.text.TextOps
     val memos = Seq[(String, () => AnyRef)](
-      "ngramSetCached" -> (() => TextOps.ngramSetCached(spark, sf0001, 8, Seq("doc_id", "source"))),
       "cellRankedCached" -> (() => Similarity.cellRankedCached(spark, sf0001)),
       "lshSignaturesCached" -> (() => Similarity.lshSignaturesCached(spark, sf0001)))
     SessionCache.freshEpoch("fan-flip") {

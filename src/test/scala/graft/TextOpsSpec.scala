@@ -31,6 +31,14 @@ class TextOpsSpec extends SparkSpec {
 
   private lazy val dir = writeFixture()
 
+  test("the per-doc feature views equal their per-artifact builders, and the 8-gram set has no duplicate row") {
+    val diff = DedupFeaturesReference.mismatches(spark, sf0001)
+    assert(diff.isEmpty, diff.mkString("\n"))
+    DedupFeaturesReference.artifacts.foreach { case (name, view, _) =>
+      assert(!view(spark, sf0001).isEmpty, s"$name is empty on sf0.001")
+    }
+  }
+
   test("exact_dedup keeps the min doc_id of each text group") {
     val out = TextOps.queries("exact_dedup")(spark, dir).collect()
     assert(out.length == 6) // 8 docs − 2 dup copies
