@@ -15,7 +15,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * memoized epoch-STABLE per (session, sfDir, table), and runs on the
   * CANONICAL table scan, never on the frame being fanned (ADVICE r15
   * #2), so a caller's shuffled or checkpointed frame can neither poison
-  * the entry nor be mispriced by it.
+  * the entry nor be mispriced by it. The two fanned tables are the
+  * documents (text and multimodal families, via [[docs]]) and the
+  * embeddings, fanned once under the `Similarity.vecs` checkpoint
+  * that every similarity query reads.
   *
   * POST-shuffle ([[postShuffle]], `graft.fan.postShuffle`, default on):
   * local mode re-spreads an AQE-coalesced intermediate to session width

@@ -465,7 +465,10 @@ object AdversarialFixture {
       (85L, "\u00A0", "en", "src2"),
       (86L, "\r", "fr", "src3"),
       (87L, ".", "es", "src4"),
-      (88L, "     ", "zh", "src5"))
+      (88L, "     ", "zh", "src5"),
+      // exactly 2 tokens: one short of a trigram, the edge of every
+      // `n_w >= 3` row universe
+      (89L, "two tokens", "en", "src6"))
     // duplicate PRIMARY KEYS (round 15, dupIds profile only): two
     // doc_id=901 rows with different content (the replayed-ingest
     // shape) and two doc_id=902 rows that are bit-identical full-row

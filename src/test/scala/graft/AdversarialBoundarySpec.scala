@@ -62,6 +62,16 @@ class AdversarialBoundarySpec extends SparkSpec {
     }
   }
 
+  test("every similarity query over the vector checkpoint equals its raw-pass reference on the hostile, constant and empty corpora") {
+    // hostile: NULL, NULL-element, ragged and non-finite rows outside
+    // the universe and a zero vector inside it; constant: every vector
+    // equal; empty: no vector at all
+    Seq("hostile" -> dir, "constant" -> constDir, "empty" -> emptyDir).foreach { case (corpus, d) =>
+      val diff = SimilarityVectorsReference.mismatches(spark, d)
+      assert(diff.isEmpty, s"$corpus corpus:\n${diff.mkString("\n")}")
+    }
+  }
+
   test("the per-doc feature views equal their per-artifact builders on the hostile, constant and empty corpora") {
     // hostile: NULL, empty and whitespace-only text and docs with fewer
     // than 3 tokens (row-universe edges of every view); constant: one
@@ -303,8 +313,17 @@ class AdversarialBoundarySpec extends SparkSpec {
     }
     assert(e.getMessage.contains("graft.vector.dim"),
       s"error must name the knob: ${e.getMessage}")
+    // the similarity family reads the universe through its vector
+    // memo: the gate still raises there, and nothing is memoized
+    Seq(1, 2).foreach { _ =>
+      val viaMemo = intercept[IllegalArgumentException] {
+        SparkEntry.queries("embedding_norm_stats")(spark, d).collect()
+      }
+      assert(viaMemo.getMessage.contains("graft.vector.dim"), viaMemo.getMessage)
+    }
     withConf("graft.vector.dim", "32") {
       assert(graft.engine.Tables.points(spark, d).count() == 20)
+      assert(SparkEntry.queries("embedding_norm_stats")(spark, d).collect().map(_.getLong(1)).sum == 20)
     }
     // a MIXED corpus (some rows at the declared width) stays a silent
     // boundary, not an error — ragged rows legitimately exit the universe

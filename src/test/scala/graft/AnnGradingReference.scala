@@ -11,8 +11,20 @@ import graft.engine.sim.Similarity
   * points are joined by `union`. This is the per-point form the engine's
   * one-pass grading (`Similarity.gradePoints`) replaced, kept as the
   * reference its output must equal row for row. It reads the same shared
-  * inputs (sampled truth, cell ranking, LSH signatures, ANN answers). */
+  * inputs (sampled truth, cell ranking, LSH signatures, ANN answers) as
+  * the engine, or the ones a caller passes (`SimilarityVectorsReference`
+  * passes its raw builds). */
 object AnnGradingReference {
+
+  /** The shared inputs the four queries grade over. */
+  final case class Inputs(
+      truth: (SparkSession, String) => DataFrame,
+      ranked: (SparkSession, String) => DataFrame,
+      sig: (SparkSession, String) => DataFrame,
+      answer: (SparkSession, String, String) => DataFrame)
+
+  val engine: Inputs = Inputs(Similarity.sampledTruth, Similarity.cellRankedCached,
+    Similarity.lshSignaturesCached, (s, d, q) => SparkEntry.queries(q)(s, d))
 
   private def vecs(s: SparkSession, d: String): DataFrame = {
     graft.engine.expr.GraftFunctions.register(s)
@@ -44,10 +56,10 @@ object AnnGradingReference {
         round(col("n_correct") / col("n_queries"), 6).as("recall_at_1"),
         col("n_candidates"))
 
-  def annRecall(s: SparkSession, d: String): DataFrame = {
-    val truth = Similarity.sampledTruth(s, d)
+  def annRecall(in: Inputs)(s: SparkSession, d: String): DataFrame = {
+    val truth = in.truth(s, d)
     def rec(name: String): DataFrame = {
-      val ans = SparkEntry.queries(name)(s, d).select(col("id1"), col("nn_id"))
+      val ans = in.answer(s, d, name).select(col("id1"), col("nn_id"))
       truth.join(ans, Seq("id1"), "left")
         .agg(count(lit(1)).as("n_queries"),
           count(col("nn_id")).as("n_answered"),
@@ -58,10 +70,10 @@ object AnnGradingReference {
     rec("ann_lsh_topk").union(rec("ann_ivf_topk")).orderBy("algo")
   }
 
-  def nprobeSweep(s: SparkSession, d: String): DataFrame = {
+  def nprobeSweep(in: Inputs)(s: SparkSession, d: String): DataFrame = {
     val v = vecs(s, d)
-    val truth = Similarity.sampledTruth(s, d)
-    val ranked = Similarity.cellRankedCached(s, d)
+    val truth = in.truth(s, d)
+    val ranked = in.ranked(s, d)
     val assigned = ranked.filter(col("rn") === 1).select(col("vec_id").as("id2"), col("cell"))
     def point(np: Int): DataFrame = {
       val probes = ranked.filter(col("rn") <= np && col("vec_id") % 13 === 0)
@@ -75,10 +87,10 @@ object AnnGradingReference {
     point(1).union(point(2)).union(point(4)).orderBy("nprobe")
   }
 
-  def lshTablesSweep(s: SparkSession, d: String): DataFrame = {
+  def lshTablesSweep(in: Inputs)(s: SparkSession, d: String): DataFrame = {
     val v = vecs(s, d)
-    val truth = Similarity.sampledTruth(s, d)
-    val sig = Similarity.lshSignaturesCached(s, d)
+    val truth = in.truth(s, d)
+    val sig = in.sig(s, d)
     val sigq = sig.filter(col("vec_id") % 13 === 0)
       .select(col("vec_id").as("id1"), col("t"), col("sig"))
     val sigAll = sig.select(col("vec_id").as("id2"), col("t"), col("sig"))
@@ -94,9 +106,9 @@ object AnnGradingReference {
     point(1).union(point(3)).union(point(5)).orderBy("n_tables")
   }
 
-  def sqRescoreSweep(s: SparkSession, d: String): DataFrame = {
+  def sqRescoreSweep(in: Inputs)(s: SparkSession, d: String): DataFrame = {
     val v = vecs(s, d)
-    val truth = Similarity.sampledTruth(s, d)
+    val truth = in.truth(s, d)
     val qv = v.select(col("vec_id"), col("nrm"), col("f"), expr("abs_max(f)").as("scale"))
       .withColumn("sc", when(col("scale") === 0.0, lit(1.0)).otherwise(col("scale")))
       .withColumn("q", expr("quantize_i8(f, sc)"))
@@ -129,13 +141,15 @@ object AnnGradingReference {
     point(1).union(point(4)).union(point(16)).orderBy("rescore_k")
   }
 
-  /** Query name → its per-point reference build. */
-  val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "ann_recall" -> annRecall, "ann_nprobe_sweep" -> nprobeSweep,
-    "lsh_tables_sweep" -> lshTablesSweep, "ann_sq_rescore_sweep" -> sqRescoreSweep)
+  /** Query name → its per-point reference build over `in`. */
+  def queriesOver(in: Inputs): Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "ann_recall" -> annRecall(in), "ann_nprobe_sweep" -> nprobeSweep(in),
+    "lsh_tables_sweep" -> lshTablesSweep(in), "ann_sq_rescore_sweep" -> sqRescoreSweep(in))
+
+  val queries: Seq[(String, (SparkSession, String) => DataFrame)] = queriesOver(engine)
 
   /** Column names plus every cell, doubles compared by their bits. */
-  private def table(df: DataFrame): (Seq[String], Seq[Seq[Any]]) =
+  def table(df: DataFrame): (Seq[String], Seq[Seq[Any]]) =
     (df.columns.toSeq, df.collect().toSeq.map(_.toSeq.map {
       case x: Double => java.lang.Double.doubleToLongBits(x)
       case x => x

@@ -52,8 +52,15 @@ class ScaleShapeSpec extends SparkSpec {
       s"expected partition pruning on yr:\n$plan")
   }
 
+  /** The vec_id equi-joins that attach vectors to candidate pairs in
+    * an executed answer plan: the join on each side's id, whatever
+    * strategy AQE picked. */
+  private def vectorAttaches(plan: String): Seq[String] =
+    Seq("id1", "id2").filter(k => raw"(HashJoin|SortMergeJoin) \[$k#\d+L\], \[$k#\d+L\]".r
+      .findFirstIn(plan).isDefined)
+
   test("ann_lsh_topk scores candidates via joins, not a driver-collected map") {
-    // assert on the pipeline BUILDER: the declared query serves the
+    // assert on the pipeline BUILDERS: the declared query serves the
     // per-session memoized checkpoint (its plan is a LogicalRDD scan)
     val q = graft.engine.sim.Similarity.annLshPlan(spark, sf0001)
     q.collect()
@@ -62,21 +69,22 @@ class ScaleShapeSpec extends SparkSpec {
     // driver and looked candidates up in a broadcast map — the 100 TB
     // killer this spec guards against. Join-based scoring leaves two
     // unmistakable marks the broadcast-map plan had neither of:
-    // (a) the scoring equi-joins push IsNotNull(vec_id) into their
-    //     embeddings scans (join keys get null-filtered); the
-    //     vector-universe boundary (Tables.cleanVectors) co-pushes
-    //     IsNotNull(embedding)/IsNotNull(label) into the same scans,
-    //     so the pin matches vec_id anywhere in the pushed list
-    assert("PushedFilters: \\[[^\\]]*IsNotNull\\(vec_id\\)".r.findAllIn(plan).size >= 2,
-      s"expected candidate-to-vector scoring equi-joins:\n$plan")
-    // (b) every object kernel (MapPartitions) sits directly on a
-    //     deserialized scan — none consumes the candidate join output
+    // (a) the candidate pairs equi-join the vector table on each id
+    //     (id1 and id2 are vec_id renamed on the vector side)
+    assert(vectorAttaches(plan) == Seq("id1", "id2"),
+      s"expected candidate-to-vector scoring equi-joins on id1 and id2:\n$plan")
+    assert(!plan.contains("MapPartitions"), s"the answer plan must not score in an object kernel:\n$plan")
+    // (b) the signature kernel (MapPartitions) sits directly on the
+    //     deserialized vector rows — it never consumes a join output
     //     (the round-1 scoring kernel mapped over the joined pairs)
-    val kernelInputs = plan.linesIterator.sliding(2).collect {
+    val sig = graft.engine.sim.Similarity.lshSignatures(spark, sf0001)
+    sig.collect()
+    val splan = sig.queryExecution.executedPlan.toString
+    val kernelInputs = splan.linesIterator.sliding(2).collect {
       case Seq(a, b) if a.contains("MapPartitions") => b
     }.toSeq
     assert(kernelInputs.nonEmpty && kernelInputs.forall(_.contains("DeserializeToObject")),
-      s"a kernel consumes non-scan input (join-output scoring?):\n$plan")
+      s"a kernel consumes non-scan input (join-output scoring?):\n$splan")
   }
 
   test("hash-based text ops have no global (unpartitioned) window") {
@@ -116,14 +124,14 @@ class ScaleShapeSpec extends SparkSpec {
   }
 
   test("ann_ivf_topk broadcasts ONLY the centroid dim (no vector-table broadcast or kernel)") {
-    // builder, not declared query — see the ann_lsh_topk note
-    val q = graft.engine.sim.Similarity.annIvfPlan(spark, sf0001)
+    // the cell ranking's builder, not a declared query: every IVF
+    // consumer reads its memoized checkpoint
+    val ranked = graft.engine.sim.Similarity.cellRanked(spark, sf0001)
     // every broadcast hint in the tree must cover the k-cell centroid
     // dim (output = cell, cf) and nothing else — a hint whose subtree
     // outputs vec_id/embedding would mean the vector table rides the
-    // driver. (The hint subtree APPEARS twice: probes and assigned
-    // both derive from the same hinted join — same logical hint.)
-    val hints = q.queryExecution.analyzed.collect {
+    // driver
+    val hints = ranked.queryExecution.analyzed.collect {
       case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
     }
     assert(hints.nonEmpty, "expected the centroid broadcast hint")
@@ -131,10 +139,14 @@ class ScaleShapeSpec extends SparkSpec {
       assert(h.child.output.map(_.name).toSet == Set("cell", "cf"),
         s"a non-centroid subtree is hinted for broadcast:\n$h")
     }
-    q.collect()
-    val plan = q.queryExecution.executedPlan.toString
+    // the answer builder attaches vectors by vec_id equi-joins, and
     // scoring is pure joins + codegen'd expressions — no object kernel
     // anywhere (a driver-collected scoring map would need one)
+    val q = graft.engine.sim.Similarity.annIvfPlan(spark, sf0001)
+    q.collect()
+    val plan = q.queryExecution.executedPlan.toString
+    assert(vectorAttaches(plan) == Seq("id1", "id2"),
+      s"expected candidate-to-vector scoring equi-joins on id1 and id2:\n$plan")
     assert(!plan.contains("MapPartitions"),
       s"ann_ivf_topk must not use an object kernel:\n$plan")
   }

@@ -24,7 +24,11 @@ import graft.tools.Plans
 class ScanAuditSpec extends SparkSpec {
 
   private lazy val committed = Plans.readTable()
-  private lazy val (actual, failed) = Plans.shapes(spark, sf0001, Plans.keys)
+  /** Similarity keys whose final plan carries a `might_contain` filter. */
+  private val bloomFiltered = scala.collection.mutable.ArrayBuffer.empty[String]
+  private lazy val (actual, failed) = Plans.shapes(spark, sf0001, Plans.keys, (k, plan) =>
+    if ((graft.engine.sim.Similarity.queries.contains(k) || Plans.builders.contains(k))
+      && plan.toString.contains("might_contain")) bloomFiltered += k)
 
   /** Keys that failed, or whose `cols` disagree with the table. */
   private def offenders(cols: Seq[String]): Seq[String] = {
@@ -54,5 +58,14 @@ class ScanAuditSpec extends SparkSpec {
   test("every final plan's exchanges, joins and sorts match the shape table") {
     val bad = offenders(Plans.columns.filterNot(_ == "scans"))
     assert(bad.isEmpty, s"plan-shape changes:\n  ${bad.mkString("\n  ")}")
+  }
+
+  test("no similarity final plan carries a runtime bloom-filter subquery") {
+    // every similarity plan reads measured checkpoints: a bloom filter
+    // here means a memo reports its origin plan's static size again
+    // and the optimizer builds a filter subquery (an extra scan and
+    // aggregate per execution) for a table of a few hundred KB
+    assert(actual.nonEmpty)
+    assert(bloomFiltered.isEmpty, s"might_contain in: ${bloomFiltered.mkString(", ")}")
   }
 }

@@ -81,4 +81,42 @@ class SessionCacheSpec extends SparkSpec {
       }
     }
   }
+
+  test("flipping graft.vector.dim mid-session rebuilds the vector memo and each memo built on it") {
+    // the width gate decides which rows form the vector universe; a
+    // memo keyed without it served the other width's rows after a flip
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, size}
+    import spark.implicits._
+    import graft.engine.sim.Similarity
+    // 30 vectors at width 8 and 30 at width 4: either declared width
+    // keeps a non-empty universe
+    val d = graft.engine.TempDirs.scratch("graft_dimflip")
+    (1L to 60L).map { i =>
+      (i, Seq.tabulate(if (i <= 30) 8 else 4)(j => ((i * 7 + j * 3) % 11 - 5).toFloat / 10f), (i % 3).toInt)
+    }.toDF("vec_id", "embedding", "label")
+      .selectExpr("vec_id", "CAST(embedding AS ARRAY<FLOAT>) AS embedding", "CAST(label AS INT) AS label")
+      .coalesce(1).write.parquet(s"$d/embeddings.parquet")
+    val memos = Seq[(String, () => DataFrame)](
+      "vecs" -> (() => Similarity.vecs(spark, d)),
+      "sampledTruth" -> (() => Similarity.sampledTruth(spark, d)),
+      "cellRankedCached" -> (() => Similarity.cellRankedCached(spark, d)),
+      "lshSignaturesCached" -> (() => Similarity.lshSignaturesCached(spark, d)),
+      "annAnswer(lsh)" -> (() => Similarity.annAnswer(spark, d, "lsh")),
+      "annAnswer(ivf)" -> (() => Similarity.annAnswer(spark, d, "ivf")))
+    def at[A](dim: Int)(f: => A): A = withConf("graft.vector.dim", dim.toString)(f)
+    SessionCache.freshEpoch("dim-flip") {
+      memos.foreach { case (name, get) =>
+        val wide = at(8)(get())
+        val narrow = at(4)(get())
+        assert(narrow ne wide, s"$name served the width-8 build under width 4")
+        assert(at(4)(get()) eq narrow, s"$name did not memoize the width-4 build")
+        assert(at(8)(get()) eq wide, s"$name lost its width-8 entry")
+      }
+      Seq(8, 4).foreach { dim =>
+        val widths = at(dim)(Similarity.vecs(spark, d)).select(size(col("f"))).distinct().as[Int].collect()
+        assert(widths.toSeq == Seq(dim), s"vectors under width $dim have widths ${widths.mkString(",")}")
+      }
+    }
+  }
 }

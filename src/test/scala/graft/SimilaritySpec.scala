@@ -185,6 +185,31 @@ class SimilaritySpec extends SparkSpec {
     assert(diff.isEmpty, diff.mkString("\n"))
   }
 
+  test("every similarity memo reports the bytes it stores to the optimizer") {
+    // a plain localCheckpoint carries its origin plan's static estimate
+    // (tens of GB for the few-thousand-row cell ranking), which planned
+    // hash shuffles and bloom-filter subqueries around tiny memos
+    import org.apache.spark.sql.execution.LogicalRDD
+    Seq("vecs" -> Similarity.vecs(spark, sf0001),
+      "sampledTruth" -> Similarity.sampledTruth(spark, sf0001),
+      "cellRankedCached" -> Similarity.cellRankedCached(spark, sf0001),
+      "lshSignaturesCached" -> Similarity.lshSignaturesCached(spark, sf0001),
+      "annAnswer(lsh)" -> Similarity.annAnswer(spark, sf0001, "lsh"),
+      "annAnswer(ivf)" -> Similarity.annAnswer(spark, sf0001, "ivf")).foreach { case (name, df) =>
+      val rdd = df.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.rdd }
+      assert(rdd.isDefined, s"$name is not a checkpoint")
+      val stored = spark.sparkContext.getRDDStorageInfo.filter(_.id == rdd.get.id)
+        .map(i => i.memSize + i.diskSize).sum
+      val claimed = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      assert(stored > 0 && claimed == BigInt(stored), s"$name: plan claims $claimed bytes, its blocks store $stored")
+    }
+  }
+
+  test("every similarity query over the vector checkpoint equals its raw-pass reference") {
+    val diff = SimilarityVectorsReference.mismatches(spark, sf0001)
+    assert(diff.isEmpty, diff.mkString("\n"))
+  }
+
   test("ann_sq_rescore_sweep: deeper exact rescore never loses recall") {
     val sweep = Similarity.queries("ann_sq_rescore_sweep")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
