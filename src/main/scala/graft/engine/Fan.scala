@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Round-robin fans to the session's parallelism, shared by the text,
   * multimodal and similarity families.
@@ -23,11 +23,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * POST-shuffle ([[postShuffle]], `graft.fan.postShuffle`, default on):
   * local mode re-spreads an AQE-coalesced intermediate to session width
   * before checkpointing it; a 100 TB cluster sets `off` rather than pay
-  * that re-shuffle. Results are identical either way, and
-  * [[postShuffleOn]] is part of the memo key of every re-fanned
-  * artifact, so a flip mid-session rebuilds it. The re-fanned
-  * artifacts are the two similarity memos `Similarity.cellRankedCached`
-  * and `Similarity.lshSignaturesCached`; the text family's 8-gram set
+  * that re-shuffle. Results are identical either way (the `fanoff`
+  * profile of `tools/probe_all.sh` runs the oracle gate with it off),
+  * and like every `graft.*` conf the gate is part of each memo key
+  * ([[SessionCache]]), so a flip mid-session rebuilds the re-fanned
+  * artifacts: the two similarity memos `Similarity.cellRankedCached`
+  * and `Similarity.lshSignaturesCached`. The text family's 8-gram set
   * has no shuffle left to undo.
   */
 object Fan {
@@ -47,13 +48,10 @@ object Fan {
   def docs(df: DataFrame, d: String): DataFrame =
     ifNarrow(df, s"$d|docsWidth")(Tables.documents(df.sparkSession, d))
 
-  def postShuffleOn(s: SparkSession): Boolean =
-    s.conf.get("graft.fan.postShuffle", "on") != "off"
-
   /** `df` re-spread to the session's parallelism when the post-shuffle
     * re-fan is on. */
   def postShuffle(df: DataFrame): DataFrame =
-    if (postShuffleOn(df.sparkSession))
+    if (df.sparkSession.conf.get("graft.fan.postShuffle", "on") != "off")
       df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     else df
 }

@@ -231,14 +231,14 @@ object Tables {
     // uniform corpus of any width ≠ the declared dim would otherwise
     // be emptied by the size clause ALONE — every vector query
     // returning zero rows with no hint that the single conf knob is
-    // the cause. Probe once per (session, source plan, dim): if the
+    // the cause. Probe once per (session, source plan, conf): if the
     // gated universe is empty but rows survive every OTHER clause,
     // the size gate is the sole cause — raise the designed error
     // naming the knob and the observed widths. Happy-path cost is one
     // memoized limit-1 probe (first survivor short-circuits); the
     // attribution scan runs only on an already-empty universe.
     dimGateProbe.getStable(df.sparkSession,
-        s"${df.queryExecution.analyzed.semanticHash()}|$embCol|$labelCol|$dim") {
+        s"${df.queryExecution.analyzed.semanticHash()}|$embCol|$labelCol") {
       if (gated.isEmpty) {
         val surv = df.filter(col(embCol).isNotNull
           && !expr(s"vec_has_null_elem($embCol)")

@@ -2,6 +2,7 @@ package graft.engine.cluster
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.MeasuredCheckpoint
 import graft.engine.Tables
 
 /** Declared queries + DuckDB oracles for SURVEY.md §2.1 (clustering
@@ -14,21 +15,21 @@ import graft.engine.Tables
   * with 1-based `col[u.i]` (FIXTURES.md).
   */
 object ClusterQueries {
-  /** The ground-truth point frame memoized per (session, sfDir) as an
-    * EAGER checkpoint — the reference's own `.cache()` lever (SURVEY
+  /** The ground-truth point frame memoized per (session, sfDir) as a
+    * measured checkpoint — the reference's own `.cache()` lever (SURVEY
     * §1.1: "the single most important performance behavior to
     * preserve"): the profile's two passes and the nearest-centroid
     * argmin read the materialized rows, never parquet again. */
   private val ptsCache = new graft.engine.SessionCache[DataFrame]
-  private[cluster] def pts(s: SparkSession, d: String): DataFrame =
-    ptsCache.get(s, d)(Tables.points(s, d).localCheckpoint(true))
+  private[graft] def pts(s: SparkSession, d: String): DataFrame =
+    ptsCache.get(s, d)(MeasuredCheckpoint(Tables.points(s, d)))
 
   /** The ground-truth [[Indices.Profile]], memoized like [[pts]] (so a
     * fresh memo epoch rebuilds both): every index query below is a
     * small local frame over it, and the whole validity report costs
     * the profile's two passes over the points. */
   private val profileCache = new graft.engine.SessionCache[Indices.Profile]
-  private[cluster] def profile(s: SparkSession, d: String): Indices.Profile =
+  private[graft] def profile(s: SparkSession, d: String): Indices.Profile =
     profileCache.get(s, d)(Indices.profile(pts(s, d)))
 
   /** One-row index frame (NULL when undefined or over no points),

@@ -6,6 +6,7 @@ import javax.imageio.ImageIO
 import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.MeasuredCheckpoint
 import graft.engine.Tables
 
 /** Multimodal-column surface: image/audio/video as opaque `binary`
@@ -265,7 +266,7 @@ object Multimodal {
     * Motion-PNG GVID (video) — all encoded map-side with JDK codecs.
     * meta.n_bytes is the pre-encode payload size.
     *
-    * Memoized per (session, sfDir) as an eager checkpoint: THREE
+    * Memoized per (session, sfDir) as a measured checkpoint: THREE
     * declared consumers (decode stats, mime sniff, and any dedup join
     * over the fingerprints) each re-ran the full corpus encode pass
     * otherwise — the codec CPU is the dominant cost of every
@@ -274,7 +275,7 @@ object Multimodal {
     * the durable form is a Sinks materialization, per SessionCache.) */
   private val mediaCache = new graft.engine.SessionCache[DataFrame]
   def mediaTable(s: SparkSession, d: String): DataFrame =
-    mediaCache.get(s, d)(mediaTableBuild(s, d).localCheckpoint(true))
+    mediaCache.get(s, d)(MeasuredCheckpoint(mediaTableBuild(s, d)))
 
   private def mediaTableBuild(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

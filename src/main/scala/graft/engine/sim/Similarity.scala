@@ -39,11 +39,6 @@ object Similarity {
       .select(col("vec_id"), col("f"), ArrayMath.l2Norm(col("f")).as("nrm"), col("label"))
   }
 
-  /** Memo key prefix of every similarity artifact: the sfDir and
-    * `graft.vector.dim`, the one conf the vector universe reads, so a
-    * mid-session flip rebuilds everything built on the vectors. */
-  private def vkey(s: SparkSession, d: String): String = s"$d|dim=${Tables.vectorDim(s)}"
-
   private val vecCache = new graft.engine.SessionCache[DataFrame]
 
   /** The vector universe `(vec_id, f: array<double>, nrm, label)`:
@@ -51,7 +46,7 @@ object Similarity {
     * every similarity query and index builder reads. Building it
     * raises [[Tables.cleanVectors]]' dimension-gate error. */
   private[graft] def vecs(s: SparkSession, d: String): DataFrame =
-    vecCache.get(s, vkey(s, d))(MeasuredCheckpoint(vecsPlan(s, d)))
+    vecCache.get(s, d)(MeasuredCheckpoint(vecsPlan(s, d)))
 
   /** LSH sign bits per table: smallest b ≥ 3 with 64·2^b ≥ n, i.e. the
     * expected bucket occupancy stays ≈64 as the corpus grows — the
@@ -104,7 +99,7 @@ object Similarity {
   private def round6(x: Double): Double =
     BigDecimal.valueOf(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** ANN answer frames memoized per (session, vector key, algo) as
+  /** ANN answer frames memoized per (session, sfDir, algo) as
     * measured checkpoints: `ann_recall` re-runs BOTH approximate pipelines to
     * grade them, so without the memo each pipeline executed twice per
     * bench/verify pass (once declared, once inside the measurement).
@@ -115,12 +110,12 @@ object Similarity {
   /** The (id1, nn_id, cos) answer table of `ann_lsh_topk` (`algo`
     * "lsh") or `ann_ivf_topk` ("ivf"), memoized. */
   private[graft] def annAnswer(s: SparkSession, d: String, algo: String): DataFrame =
-    annCache.get(s, s"${vkey(s, d)}|$algo")(
+    annCache.get(s, s"$d|$algo")(
       MeasuredCheckpoint(if (algo == "lsh") annLshPlan(s, d) else annIvfPlan(s, d)))
 
   /** The sampled brute-force nearest-neighbor TRUTH (1-in-13 query
     * sample, broadcast-kernel argmax — see `ann_recall` for the
-    * measurement rationale), memoized per (session, vector key): four
+    * measurement rationale), memoized per (session, sfDir): four
     * declared measurement queries (`ann_recall`, `ann_nprobe_sweep`,
     * `lsh_tables_sweep`, `ann_sq_rescore_sweep`) grade against the
     * SAME truth table, each grading all of its operating points in
@@ -129,7 +124,7 @@ object Similarity {
     * (the Bench re-run discipline): consumers still execute their
     * full declared measurement plan over it. */
   private[graft] def sampledTruth(s: SparkSession, d: String): DataFrame =
-    annCache.get(s, s"${vkey(s, d)}|truth13") {
+    annCache.get(s, s"$d|truth13") {
       graft.engine.expr.GraftFunctions.register(s)
       val v = vecs(s, d)
       val q = v.filter(col("vec_id") % 13 === 0)
@@ -709,16 +704,14 @@ object Similarity {
     * AQE coalesces the small fixture surface to ~2 partitions and every
     * consumer pass would run 2-wide. A width-probe guard (the
     * [[Fan.ifNarrow]] pattern) can't work here: the AQE-final count
-    * needs `.rdd` mid-build, which forces materialization. The gate's
-    * value is part of the memo keys below, so a flip mid-session
-    * rebuilds instead of serving the other width. */
+    * needs `.rdd` mid-build, which forces materialization. */
   private[graft] def cellRankedCached(s: SparkSession, d: String): DataFrame =
-    subCache.get(s, s"${vkey(s, d)}|crk|fan=${Fan.postShuffleOn(s)}") {
+    subCache.get(s, s"$d|crk") {
       MeasuredCheckpoint(Fan.postShuffle(cellRanked(s, d)))
     }
 
   private[graft] def lshSignaturesCached(s: SparkSession, d: String): DataFrame =
-    subCache.get(s, s"${vkey(s, d)}|lshsig|fan=${Fan.postShuffleOn(s)}") {
+    subCache.get(s, s"$d|lshsig") {
       MeasuredCheckpoint(Fan.postShuffle(lshSignatures(s, d)))
     }
 

@@ -3,6 +3,7 @@ package graft.engine.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.MeasuredCheckpoint
 import graft.engine.{Fan, Tables}
 
 /** Text / dedup operators over the `documents` table — the LLM-data-
@@ -113,7 +114,7 @@ object TextOps {
   }
 
   /** The word-n-gram set of each document, one row per (keep-cols,
-    * ngram), memoized per (session, sfDir, n, keep) as an eager
+    * ngram), memoized per (session, sfDir, n, keep) as a measured
     * checkpoint: the 8-gram set has several declared consumers
     * (`decontaminate_ngram`, `boilerplate_ngrams`,
     * `eval_contamination_report`), each reading it several times
@@ -137,9 +138,9 @@ object TextOps {
                              keep: Seq[String]): DataFrame =
     ngramCache.get(s, s"$d|n$n|${keep.mkString(",")}") {
       graft.engine.expr.GraftFunctions.register(s)
-      docsF(s, d).select(keep.map(col) :+ split(col("text"), " ").as("w"): _*)
-        .select(keep.map(col) :+ explode(expr(s"ngram_strings(w, $n)")).as("ng"): _*)
-        .localCheckpoint(true)
+      MeasuredCheckpoint(docsF(s, d)
+        .select(keep.map(col) :+ split(col("text"), " ").as("w"): _*)
+        .select(keep.map(col) :+ explode(expr(s"ngram_strings(w, $n)")).as("ng"): _*))
     }
 
   /** Adds the `tid` column to any frame with a `token` column,
@@ -164,13 +165,11 @@ object TextOps {
     * exist, so there is one frame and no `dedup` knob. */
   private[graft] def minhashPairs(s: SparkSession, d: String,
                            rowsPerBand: Int = 4): DataFrame = {
-    // the pair list is memoized per (session, sfDir) as an eager
-    // checkpoint: the pair surface (`minhash_near_dedup`) and group
-    // resolution (`resolveGroups`) both consume it, and re-deriving
-    // the MinHash pipeline per consumer was ~5 s of round-2 bench per
-    // extra consumer. Key includes the fold width: the pair list
-    // depends on it, and a session may legitimately flip the width
-    // between calls.
+    // the pair list is memoized per (session, sfDir, banding) as a
+    // measured checkpoint: the pair surface (`minhash_near_dedup`) and
+    // group resolution (`resolveGroups`) both consume it, and
+    // re-deriving the MinHash pipeline per consumer was ~5 s of round-2
+    // bench per extra consumer.
     require(8 % rowsPerBand == 0, s"rowsPerBand=$rowsPerBand must divide 8")
     val cap = bucketCap(s)
     require(cap >= 1, s"graft.neardedup.bucketCap=$cap must be >= 1")
@@ -178,7 +177,7 @@ object TextOps {
     // to ≥ cap so the overlap replication below is one-segment-deep
     val shard = math.max(shardSize(s), cap)
     val nBands = 8 / rowsPerBand
-    pairsCache.get(s, s"$d|${foldWidth(s)}|r$rowsPerBand|c$cap|s$shard") {
+    pairsCache.get(s, s"$d|r$rowsPerBand") {
         val sig = minhashSignatures(s, d)
         // band signatures: the r min-hashes of each band chained base-31
         def chain(idxs: Range) =
@@ -314,7 +313,7 @@ object TextOps {
           emittedEarlier.map(c => g.filter(!c)).getOrElse(g)
             .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
         }
-        perBand.reduce(_ union _).localCheckpoint(true)
+        MeasuredCheckpoint(perBand.reduce(_ union _))
       }
   }
 
@@ -355,15 +354,15 @@ object TextOps {
         expr("simhash16(w)").as("simhash"))
   }
 
-  /** [[docFeaturesPlan]] memoized per (session, sfDir, foldWidth) as ONE
-    * eager checkpoint. The per-doc artifacts below are projections of
+  /** [[docFeaturesPlan]] memoized per (session, sfDir) as ONE measured
+    * checkpoint. The per-doc artifacts below are projections of
     * it, each keeping its own row universe, so a memo epoch reads and
     * splits the text once instead of once per artifact (the truth
     * build, both bandings, the trigram family and `simhash_dedup` all
     * start here). */
   private val featCache = new graft.engine.SessionCache[DataFrame]
   private[graft] def docFeatures(s: SparkSession, d: String): DataFrame =
-    featCache.get(s, s"$d|${foldWidth(s)}")(docFeaturesPlan(s, d).localCheckpoint(true))
+    featCache.get(s, d)(MeasuredCheckpoint(docFeaturesPlan(s, d)))
 
   /** The 8-minhash signature table `(doc_id, m0..m7)`. Banding-
     * INDEPENDENT: both declared banding operating points (b=2×r=4 and
@@ -480,16 +479,14 @@ object TextOps {
     * independent cross-check. Package-private so ScaleShapeSpec can
     * assert the prefix filter is present on BOTH sides of the
     * token-keyed join (the spec fails on the round-4 shape). */
-  /** Truth pairs memoized per (session, sfDir, foldWidth): both
+  /** Truth pairs memoized per (session, sfDir): both
     * banding operating points (`minhash_recall`, `minhash_recall_b1r8`)
     * measure against the SAME exact-Jaccard ground truth — one build,
-    * ~86k rows at sf0.1, eagerly checkpointed. */
+    * ~86k rows at sf0.1, one measured checkpoint. */
   private val truthCache = new graft.engine.SessionCache[DataFrame]
 
   private[graft] def minhashTruthCached(s: SparkSession, d: String): DataFrame =
-    truthCache.get(s, s"$d|${foldWidth(s)}") {
-      minhashTruthPairs(s, d).localCheckpoint(true)
-    }
+    truthCache.get(s, d)(MeasuredCheckpoint(minhashTruthPairs(s, d)))
 
   /** Banding recall/precision measurement vs the memoized exact truth
     * (shared by both declared operating points). */
@@ -508,9 +505,9 @@ object TextOps {
     //  * the truth semi-join becomes a LEFT join against the DISTINCT
     //    truth pair set (distinct by construction — d1<d2 through a
     //    distinct() and per-doc-unique attach joins), so count(t) ≡
-    //    the semi-join count, evaluated in the same scan. AQE
-    //    broadcasts the small checkpointed truth (~86k rows at sf0.1)
-    //    exactly as it did the semi build side; at a scale where the
+    //    the semi-join count, evaluated in the same scan. The truth
+    //    checkpoint reports its stored bytes (~86k rows at sf0.1), so
+    //    the join broadcasts it at planning; at a scale where the
     //    truth outgrows the threshold the same plan degrades to a
     //    shuffle join of the single pass — still one pass.
     // n_cand counts pairs with a sampled side (f1 || f2); every truth
@@ -628,24 +625,22 @@ object TextOps {
     s.conf.get("graft.neardedup.shardSize", (1 << 20).toString).toInt
 
   /** Resolved near-dup groups `(group_id = component min doc_id,
-    * member)`, memoized per (session, sfDir, threshold) within the JVM
+    * member)`, memoized per (session, sfDir) within the JVM
     * — the `sweepCached` pattern (KMeansSweep): `near_dedup_groups`
     * and `dedup_survivors` share ONE MinHash→contract→resolve run
     * instead of re-deriving the whole DAG per declared query (~10 s of
-    * duplicated bench work in round 2). The cached frame is an eager
-    * `localCheckpoint`, so it stays DISTRIBUTED (never a driver
+    * duplicated bench work in round 2). The cached frame is a measured
+    * checkpoint, so it stays DISTRIBUTED (never a driver
     * collect of the membership — at 100 TB that table can be huge) and
     * consumers read materialized partitions with truncated lineage.
     * Weak-keyed per session ([[graft.engine.SessionCache]]) so a frame
     * never outlives the session that built it. */
   private val groupCache = new graft.engine.SessionCache[DataFrame]
 
-  private[graft] def resolvedGroups(s: SparkSession, d: String): DataFrame = {
-    val maxEdges = quotientMaxEdges(s)
-    groupCache.get(s, s"$d|$maxEdges|${foldWidth(s)}|c${bucketCap(s)}") {
-      resolveGroups(s, d, maxEdges).localCheckpoint(true)
+  private[graft] def resolvedGroups(s: SparkSession, d: String): DataFrame =
+    groupCache.get(s, d) {
+      MeasuredCheckpoint(resolveGroups(s, d, quotientMaxEdges(s)))
     }
-  }
 
   /** near-dup pair → GROUP resolution: connected components over the
     * MinHash candidate-pair graph. Two phases, both shuffle-bounded:
@@ -669,7 +664,7 @@ object TextOps {
     * hint discipline on the final join's analyzed plan.
     */
   private[graft] def resolveGroups(s: SparkSession, d: String, maxEdges: Long): DataFrame = {
-    // already an eager checkpoint via pairsCache — no persist needed
+    // already a measured checkpoint via pairsCache — no persist needed
     val pairs = minhashPairs(s, d)
     val lbl0 = pairs.select(col("d1").as("node"), col("d2").as("nb"))
       .union(pairs.select(col("d2").as("node"), col("d1").as("nb")))

@@ -85,9 +85,9 @@ class SessionCacheSpec extends SparkSpec {
   test("flipping graft.vector.dim mid-session rebuilds the vector memo and each memo built on it") {
     // the width gate decides which rows form the vector universe; a
     // memo keyed without it served the other width's rows after a flip
-    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.{col, size}
     import spark.implicits._
+    import graft.engine.cluster.{ClusterQueries, KMeansSweep}
     import graft.engine.sim.Similarity
     // 30 vectors at width 8 and 30 at width 4: either declared width
     // keeps a non-empty universe
@@ -97,25 +97,61 @@ class SessionCacheSpec extends SparkSpec {
     }.toDF("vec_id", "embedding", "label")
       .selectExpr("vec_id", "CAST(embedding AS ARRAY<FLOAT>) AS embedding", "CAST(label AS INT) AS label")
       .coalesce(1).write.parquet(s"$d/embeddings.parquet")
-    val memos = Seq[(String, () => DataFrame)](
+    // memos held as objects compare by identity; the k_sweep rows and
+    // the report dir sit behind fresh frames, so compare what they serve
+    def same(a: Any, b: Any): Boolean = (a, b) match {
+      case (x: Seq[_], y: Seq[_]) => x == y
+      case (x: AnyRef, y: AnyRef) => x eq y
+    }
+    val memos = Seq[(String, () => Any)](
       "vecs" -> (() => Similarity.vecs(spark, d)),
       "sampledTruth" -> (() => Similarity.sampledTruth(spark, d)),
       "cellRankedCached" -> (() => Similarity.cellRankedCached(spark, d)),
       "lshSignaturesCached" -> (() => Similarity.lshSignaturesCached(spark, d)),
       "annAnswer(lsh)" -> (() => Similarity.annAnswer(spark, d, "lsh")),
-      "annAnswer(ivf)" -> (() => Similarity.annAnswer(spark, d, "ivf")))
+      "annAnswer(ivf)" -> (() => Similarity.annAnswer(spark, d, "ivf")),
+      "ClusterQueries.pts" -> (() => ClusterQueries.pts(spark, d)),
+      "ClusterQueries.profile" -> (() => ClusterQueries.profile(spark, d)),
+      "k_sweep rows" -> (() => KMeansSweep.queries("k_sweep")(spark, d).collect().toSeq),
+      "index_report_roundtrip report" ->
+        (() => KMeansSweep.queries("index_report_roundtrip")(spark, d).inputFiles.toSeq.sorted))
     def at[A](dim: Int)(f: => A): A = withConf("graft.vector.dim", dim.toString)(f)
     SessionCache.freshEpoch("dim-flip") {
       memos.foreach { case (name, get) =>
         val wide = at(8)(get())
         val narrow = at(4)(get())
-        assert(narrow ne wide, s"$name served the width-8 build under width 4")
-        assert(at(4)(get()) eq narrow, s"$name did not memoize the width-4 build")
-        assert(at(8)(get()) eq wide, s"$name lost its width-8 entry")
+        assert(!same(narrow, wide), s"$name served the width-8 build under width 4")
+        assert(same(at(4)(get()), narrow), s"$name did not memoize the width-4 build")
+        assert(same(at(8)(get()), wide), s"$name lost its width-8 entry")
       }
       Seq(8, 4).foreach { dim =>
         val widths = at(dim)(Similarity.vecs(spark, d)).select(size(col("f"))).distinct().as[Int].collect()
         assert(widths.toSeq == Seq(dim), s"vectors under width $dim have widths ${widths.mkString(",")}")
+      }
+    }
+  }
+
+  test("every graft.* conf is part of every memo key, and only graft.* confs are") {
+    // the rule itself: a key that no code reads still rebuilds, and
+    // restoring it serves the first entry again; the spark.sql.* confs
+    // that queries flip internally never rebuild a memo
+    import graft.engine.cluster.ClusterQueries
+    val cache = new SessionCache[Int]
+    var builds = 0
+    def fetch(): Int = cache.get(spark, "k") { builds += 1; builds }
+    def fetchStable(): Int = cache.getStable(spark, "s") { builds += 1; builds }
+    SessionCache.freshEpoch("conf-rule") {
+      val pts = ClusterQueries.pts(spark, sf0001)
+      val (a, b) = (fetch(), fetchStable())
+      withConf("graft.test.unread", "1") {
+        assert(ClusterQueries.pts(spark, sf0001) ne pts, "an unread graft.* key served the old frame memo")
+        assert(fetch() != a && fetchStable() != b, "an unread graft.* key served the old entries")
+      }
+      assert(ClusterQueries.pts(spark, sf0001) eq pts, "restoring the key did not serve the old frame memo")
+      assert(fetch() == a && fetchStable() == b, "restoring the key did not serve the old entries")
+      withConf("spark.sql.shuffle.partitions", "3") {
+        assert(ClusterQueries.pts(spark, sf0001) eq pts, "a spark.sql.* flip rebuilt a frame memo")
+        assert(fetch() == a && fetchStable() == b, "a spark.sql.* flip rebuilt a memo")
       }
     }
   }

@@ -185,17 +185,27 @@ class SimilaritySpec extends SparkSpec {
     assert(diff.isEmpty, diff.mkString("\n"))
   }
 
-  test("every similarity memo reports the bytes it stores to the optimizer") {
+  test("every frame memo reports the bytes it stores to the optimizer") {
     // a plain localCheckpoint carries its origin plan's static estimate
-    // (tens of GB for the few-thousand-row cell ranking), which planned
-    // hash shuffles and bloom-filter subqueries around tiny memos
+    // (tens of GB for the few-thousand-row cell ranking, 3e37 bytes for
+    // the MinHash truth), which planned hash shuffles, sort-merge joins
+    // and bloom-filter subqueries around tiny memos
     import org.apache.spark.sql.execution.LogicalRDD
+    import graft.engine.text.TextOps
     Seq("vecs" -> Similarity.vecs(spark, sf0001),
       "sampledTruth" -> Similarity.sampledTruth(spark, sf0001),
       "cellRankedCached" -> Similarity.cellRankedCached(spark, sf0001),
       "lshSignaturesCached" -> Similarity.lshSignaturesCached(spark, sf0001),
       "annAnswer(lsh)" -> Similarity.annAnswer(spark, sf0001, "lsh"),
-      "annAnswer(ivf)" -> Similarity.annAnswer(spark, sf0001, "ivf")).foreach { case (name, df) =>
+      "annAnswer(ivf)" -> Similarity.annAnswer(spark, sf0001, "ivf"),
+      "docFeatures" -> TextOps.docFeatures(spark, sf0001),
+      "minhashPairs(r4)" -> TextOps.minhashPairs(spark, sf0001, rowsPerBand = 4),
+      "minhashPairs(r8)" -> TextOps.minhashPairs(spark, sf0001, rowsPerBand = 8),
+      "minhashTruthCached" -> TextOps.minhashTruthCached(spark, sf0001),
+      "ngramSetCached(8)" -> TextOps.ngramSetCached(spark, sf0001, 8, Seq("doc_id", "source")),
+      "resolvedGroups" -> TextOps.resolvedGroups(spark, sf0001),
+      "ClusterQueries.pts" -> graft.engine.cluster.ClusterQueries.pts(spark, sf0001),
+      "mediaTable" -> graft.engine.multimodal.Multimodal.mediaTable(spark, sf0001)).foreach { case (name, df) =>
       val rdd = df.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.rdd }
       assert(rdd.isDefined, s"$name is not a checkpoint")
       val stored = spark.sparkContext.getRDDStorageInfo.filter(_.id == rdd.get.id)

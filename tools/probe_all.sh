@@ -2,7 +2,7 @@
 # probe_all.sh — the adversarial parity gate (round-13 verdict item 1).
 #
 # Loops the fixture profiles {seed0, seed1, empty, cap1, constant,
-# hotbucket} through (AdversarialFixture -> graft.Verify ->
+# hotbucket, fanoff} through (AdversarialFixture -> graft.Verify ->
 # tools/oracle_probe.py) and exits NONZERO on any query crash or any
 # oracle-parity failure. This is the mechanism that found 34 real
 # boundary bugs in round 13 — one command, so no future session can
@@ -23,8 +23,8 @@
 #     the gate, not quietly lower the bar).
 #
 # Runtime: the fixtures are hundreds of rows — the cost is per-query
-# plan/JVM overhead, roughly 2-4 min per profile, ~15-25 min for all
-# six on an idle host. SPARK_GRAFT_CPUS (default 8) sizes the local
+# plan/JVM overhead, roughly 2-4 min per profile, ~18-30 min for all
+# seven on an idle host. SPARK_GRAFT_CPUS (default 8) sizes the local
 # master; PROBE_THREADS (default 32) sizes DuckDB.
 
 set -u
@@ -68,7 +68,7 @@ export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}"
 # probe, same green bar.
 profile_args() {
   case "$1" in
-    seed0)     echo "" ;;
+    seed0|fanoff) echo "" ;;
     seed[0-9]|seed[0-9][0-9]) echo "${1#seed}" ;;
     empty)     echo "empty" ;;
     cap1)      echo "cap=1" ;;
@@ -83,17 +83,20 @@ profile_args() {
 # hotbucket profile shrinks the near-dedup cap and shard so the
 # oversize-bucket shard engages on the 500-doc boilerplate bucket;
 # ConfEnv applies the SAME values to the engine session and the
-# oracle-SQL pair windows, so parity stays exact.
+# oracle-SQL pair windows, so parity stays exact. The fanoff profile
+# is the seed0 fixture with the post-shuffle re-fan off (the cluster
+# setting of graft.fan.postShuffle): results must not move.
 profile_conf() {
   case "$1" in
     hotbucket) echo "graft.neardedup.bucketCap=8,graft.neardedup.shardSize=8" ;;
+    fanoff)    echo "graft.fan.postShuffle=off" ;;
     *)         echo "" ;;
   esac
 }
 
 PROFILES=("$@")
 if [ ${#PROFILES[@]} -eq 0 ]; then
-  PROFILES=(seed0 seed1 empty cap1 constant hotbucket dupids)
+  PROFILES=(seed0 seed1 empty cap1 constant hotbucket fanoff dupids)
 fi
 
 WORK=$(mktemp -d /tmp/graft_probe_gate.XXXXXX)
