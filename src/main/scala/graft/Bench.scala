@@ -16,8 +16,8 @@ object Bench {
     * written sink layouts, checkpointed ANN answer plans, CMS sketch,
     * foreachBatch landing, persisted report, resolved dedup groups):
     * a memo-served execution would read the artifact instead of
-    * re-doing the declared work and UNDER-bill (k_sweep re-ran at
-    * 0.10 s vs its real 3.9 s of MLlib fits). EVERY attempt of these
+    * re-doing the declared work and UNDER-bill (a warm k_sweep reads
+    * its memoized rows instead of fitting every k). EVERY attempt of these
     * queries runs under SessionCache.freshEpoch — first included,
     * because a memo another query or the warmup already built would
     * otherwise serve the first attempt (optimal_k_select after
@@ -55,7 +55,7 @@ object Bench {
     // cluster profile: each attempt bills the cold profile build
     "wssse", "bd_silhouette", "bd_dunn", "davies_bouldin", "calinski_harabasz",
     "xie_beni", "intra_cluster_stats", "inter_centroid_dist",
-    "centroids_from_assignment", "cluster_sizes", "assign_nearest_centroid")
+    "centroids_from_assignment", "cluster_sizes", "assign_nearest_centroid", "silhouette_mllib")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -312,10 +312,12 @@ object Tables {
     * LOUDLY by the two queries with documented precision ceilings
     * (round-13 verdict item 2): `incremental_ann_upsert` (int64
     * micro-quantization headroom — floor(x·1e6) times realistic cell
-    * counts must stay inside 2^63) and `silhouette_mllib` (the MLlib
-    * closed form ‖x‖² − 2x·μ + avg‖y‖² cancels catastrophically once
-    * ‖x‖²-scale terms dwarf the distances, drifting from the exact SQL
-    * oracle below ROUND 6). Components past the bound raise a designed
+    * counts must stay inside 2^63; read in `Similarity`'s upsert) and
+    * `silhouette_mllib` (the MLlib closed form ‖x‖² − 2x·μ + avg‖y‖²
+    * cancels catastrophically once ‖x‖²-scale terms dwarf the
+    * distances, drifting from the exact SQL oracle below ROUND 6; read
+    * in `ClusterQueries` against the ground-truth profile's max
+    * |component|). Components past the bound raise a designed
     * error instead of a silent wrap / engine-dependent abort; both
     * gates are pinned in AdversarialBoundarySpec. Every fixture
     * stressor stays well inside (≤1e3 — tools/AdversarialFixture). */

@@ -97,6 +97,16 @@ object ClusterQueries {
       indexRow(s, "calinski_harabasz", profile(s, d).calinskiHarabasz)),
 
     "xie_beni" -> ((s, d) => indexRow(s, "xie_beni", profile(s, d).xieBeni)),
+
+    // #11 MLlib's squared-Euclidean silhouette, a cross-check for
+    // bd_silhouette; past the declared domain its closed form cancels
+    // and drifts from the SQL oracle below ROUND 6, so it raises
+    "silhouette_mllib" -> ((s, d) => {
+      val p = profile(s, d)
+      require(p.maxAbs < Tables.maxAbsComponent, "silhouette_mllib: |embedding component| >= 1e7 " +
+        "is outside the declared domain (float-cancellation ceiling of the closed-form silhouette)")
+      indexRow(s, "silhouette_mllib", p.mllibSilhouette)
+    }),
   )
 
   /** Shared oracle CTEs: exploded points + centroids from labels.
@@ -218,6 +228,32 @@ object ClusterQueries {
          |  THEN (SELECT SUM(d2) FROM own)
          |    / ((SELECT COUNT(*) FROM embeddings)
          |       * (SELECT MIN(dist * dist) FROM cdist)) END, 6) AS xie_beni""".stripMargin,
+
+    // MLlib's conventions: fewer than two clusters -> NULL; a = b
+    // scores EXACTLY 0.0, the 0/0 case included (the GREATEST(a, b) =
+    // 0 arm); a point whose own cluster has ONE member scores 0 and
+    // STAYS in the mean (the naive n/(n-1) form would NULL it out)
+    "silhouette_mllib" ->
+      """WITH pt AS (SELECT vec_id, label, u.i AS i, CAST(embedding[u.i] AS DOUBLE) AS v
+        |  FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS u(i)),
+        |sq AS (SELECT vec_id, label, SUM(v * v) AS sqn FROM pt GROUP BY 1, 2),
+        |cstats AS (SELECT label AS cl, i, AVG(v) AS mu FROM pt GROUP BY 1, 2),
+        |csq AS (SELECT label AS cl, COUNT(*) AS n, AVG(sqn) AS avg_sqn FROM sq GROUP BY 1),
+        |dots AS (SELECT pt.vec_id, cstats.cl, SUM(pt.v * cstats.mu) AS xdotmu
+        |  FROM pt JOIN cstats ON pt.i = cstats.i GROUP BY 1, 2),
+        |dmat AS (SELECT sq.vec_id, sq.label, d.cl, c.n,
+        |  sq.sqn - 2 * d.xdotmu + c.avg_sqn AS dist
+        |  FROM sq JOIN dots d ON d.vec_id = sq.vec_id JOIN csq c ON c.cl = d.cl),
+        |ab AS (SELECT vec_id,
+        |  MAX(CASE WHEN label = cl AND n > 1 THEN dist * n / (n - 1) END) AS a,
+        |  MAX(CASE WHEN label = cl THEN n END) AS own_n,
+        |  MIN(CASE WHEN label <> cl THEN dist END) AS b
+        |  FROM dmat GROUP BY 1)
+        |SELECT CASE WHEN (SELECT COUNT(DISTINCT label) FROM embeddings) < 2
+        |  THEN NULL
+        |  ELSE ROUND(AVG(CASE WHEN own_n = 1 OR GREATEST(a, b) = 0 THEN 0.0
+        |    ELSE (b - a) / GREATEST(a, b) END), 6) END AS silhouette_mllib
+        |FROM ab""".stripMargin,
 
     "external_validity_chi2" ->
       """WITH obs AS (SELECT lang, source, CAST(COUNT(*) AS DOUBLE) AS o

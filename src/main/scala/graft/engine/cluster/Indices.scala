@@ -21,15 +21,15 @@ import org.apache.spark.sql.functions._
   */
 object Indices {
 
-  /** One cluster of an assignment: its id, size, Σx and centroid
-    * (Σx ÷ n), and over its points, with a = distance to the own
-    * centroid and b = distance to the nearest other centroid: Σa²,
-    * max a, Σa, the Σ of the DEFINED silhouette terms (b−a)/max(a, b)
-    * and their count. A term is undefined when there is no other
-    * centroid or a = b = 0 (a point on coincident centroids). */
+  /** One cluster of an assignment: its id, size, Σx, centroid (Σx ÷ n),
+    * max |component|, and over its points, with a = distance to the own
+    * centroid and b = distance to the nearest other centroid: Σa², max
+    * a, Σa, the Σ of the DEFINED silhouette terms (b−a)/max(a, b) and
+    * their count, and the Σ of MLlib's silhouette terms. A term is
+    * undefined when there is no other centroid or a = b = 0. */
   final case class ClusterStats(cluster: Int, n: Long, sum: Array[Double], centroid: Array[Double],
-                                sumA2: Double, maxA: Double, sumA: Double,
-                                silSum: Double, silCount: Long) {
+                                maxAbs: Double, sumA2: Double, maxA: Double, sumA: Double,
+                                silSum: Double, silCount: Long, mllibSilSum: Double) {
     /** Sᵢ: mean distance to the centroid. */
     def meanA: Double = sumA / n
   }
@@ -96,6 +96,15 @@ object Indices {
       * cluster or coincident centroids. */
     def xieBeni: Option[Double] =
       pairs.map(p => p._3 * p._3).minOption.filter(n * _ > 0).map(m => wssse.get / (n * m))
+
+    /** MLlib's squared-Euclidean silhouette (`ClusteringEvaluator`):
+      * the mean of its per-point term over ALL points, a singleton
+      * cluster's point scoring 0; needs two clusters. */
+    def mllibSilhouette: Option[Double] =
+      if (k < 2) None else Some(clusters.map(_.mllibSilSum).sum / n)
+
+    /** The largest |component| of any point. */
+    def maxAbs: Double = clusters.map(_.maxAbs).maxOption.getOrElse(0.0)
   }
 
   /** The profile of ONE assignment (point cols…, features, cluster):
@@ -114,59 +123,81 @@ object Indices {
 
   /** The profile of EVERY k of k-keyed assignments (k, cluster,
     * features) in two passes over them, whatever the number of k: one
-    * for the per-(k, cluster) [Σx, n], one for each point's distances
-    * to the centroids of its k. A k-sweep therefore pays two jobs for
-    * its whole index table instead of one index DAG per k. Sums
-    * accumulate in point order inside a partition and in partition
-    * order across partitions, so each k's profile is bit-identical run
-    * to run and whatever other k share the input. */
+    * for the per-(k, cluster) [Σx, n, Σ‖y‖², max |component|], one for
+    * each point's distances to the centroids of its k. A k-sweep
+    * therefore pays two jobs for its whole index table instead of one
+    * index DAG per k. Sums accumulate in point order inside a partition
+    * and in partition order across partitions, so each k's profile is
+    * bit-identical run to run and whatever other k share the input. */
   def profilesByK(rows: RDD[(Int, Int, Array[Double])]): Map[Int, Profile] = {
     type Acc = scala.collection.mutable.HashMap[(Int, Int), Array[Double]]
     def merge(a: Acc, b: Acc, comb: (Array[Double], Array[Double]) => Array[Double]): Acc = {
       b.foreach { case (key, v) => a(key) = a.get(key).fold(v)(comb(_, v)) }
       a
     }
-    // pass 1: per (k, cluster) [Σx…, n]
+    // pass 1: per (k, cluster) [Σx…, n, Σ‖y‖², max |component|]; Σ‖y‖²
+    // is summed directly, not as Σa² + n‖μ‖², which cancels
     val sums = BatchKMeans.aggregateOrdered(rows, () => new Acc)(
       { case (m, (k, c, v)) =>
-          val s = m.getOrElseUpdate((k, c), new Array[Double](v.length + 1))
-          for (t <- v.indices) s(t) += v(t)
-          s(v.length) += 1.0
+          val d = v.length
+          val s = m.getOrElseUpdate((k, c), new Array[Double](d + 3))
+          for (t <- v.indices) {
+            s(t) += v(t); s(d + 1) += v(t) * v(t); s(d + 2) = math.max(s(d + 2), math.abs(v(t)))
+          }
+          s(d) += 1.0
           m },
-      merge(_, _, BatchKMeans.addInto))
-    val cents: Map[Int, Array[(Int, Array[Double])]] = sums.toSeq
+      merge(_, _, (x, y) => {
+        val mx = x.length - 1
+        for (i <- 0 until mx) x(i) += y(i)
+        x(mx) = math.max(x(mx), y(mx))
+        x
+      }))
+    val cents: Map[Int, Array[(Int, Array[Double], Array[Double])]] = sums.toSeq
       .groupBy(_._1._1).map { case (k, cs) =>
         k -> cs.map { case ((_, c), s) =>
-          val d = s.length - 1
-          (c, Array.tabulate(d)(t => s(t) / s(d)))
+          val d = s.length - 3
+          (c, Array.tabulate(d)(t => s(t) / s(d)), s)
         }.sortBy(_._1).toArray
       }
     // pass 2: per point a = dist to own centroid, b = min dist to the
-    // other centroids of its k; per (k, cluster)
-    // [Σa², max a, Σa, Σ silhouette term, #defined terms]
+    // other centroids of its k, and MLlib's mean squared distance to
+    // each cluster D = ‖x‖² + Σ‖y‖²/n − 2·(x·Σx)/n; per (k, cluster)
+    // [Σa², max a, Σa, Σ silhouette term, #defined terms, Σ MLlib term]
     val bc = rows.sparkContext.broadcast(cents)
     val stats = try BatchKMeans.aggregateOrdered(rows, () => new Acc)(
       { case (m, (k, c, v)) =>
+          val d = v.length
+          var sqn = 0.0; for (t <- v.indices) sqn += v(t) * v(t)
           var a2 = 0.0; var b2 = Double.PositiveInfinity
-          bc.value(k).foreach { case (cc, ctr) =>
-            val d2 = BatchKMeans.sqDist(v, ctr)
-            if (cc == c) a2 = d2 else if (d2 < b2) b2 = d2
+          var dOwn = 0.0; var nOwn = 0.0; var dOther = Double.PositiveInfinity
+          bc.value(k).foreach { case (cc, ctr, s) =>
+            var d2 = 0.0; var dot = 0.0; var t = 0
+            while (t < d) { val e = v(t) - ctr(t); d2 += e * e; dot += v(t) * s(t); t += 1 }
+            val dm = sqn + s(d + 1) / s(d) - 2 * dot / s(d)
+            if (cc == c) { a2 = d2; dOwn = dm; nOwn = s(d) }
+            else { if (d2 < b2) b2 = d2; if (dm < dOther) dOther = dm }
           }
           val a = math.sqrt(a2); val b = math.sqrt(b2)
-          val s = m.getOrElseUpdate((k, c), new Array[Double](5))
+          val s = m.getOrElseUpdate((k, c), new Array[Double](6))
           s(0) += a2; s(1) = math.max(s(1), a); s(2) += a
           if (!b2.isInfinite && math.max(a, b) > 0) { s(3) += (b - a) / math.max(a, b); s(4) += 1.0 }
+          // MLlib's per-point term: 0 in a singleton cluster and at a = b
+          if (nOwn > 1) {
+            val am = dOwn * nOwn / (nOwn - 1)
+            s(5) += (if (am < dOther) 1 - am / dOther else if (am > dOther) dOther / am - 1 else 0.0)
+          }
           m },
       merge(_, _, (x, y) => {
         x(0) += y(0); x(1) = math.max(x(1), y(1))
-        for (i <- 2 until 5) x(i) += y(i)
+        for (i <- 2 until 6) x(i) += y(i)
         x
       }))
     finally bc.destroy()
     cents.map { case (k, cs) =>
-      k -> Profile(cs.toIndexedSeq.map { case (c, ctr) =>
-        val sx = sums((k, c)); val st = stats((k, c)); val d = ctr.length
-        ClusterStats(c, sx(d).toLong, sx.take(d), ctr, st(0), st(1), st(2), st(3), st(4).toLong)
+      k -> Profile(cs.toIndexedSeq.map { case (c, ctr, sx) =>
+        val st = stats((k, c)); val d = ctr.length
+        ClusterStats(c, sx(d).toLong, sx.take(d), ctr, sx(d + 2),
+          st(0), st(1), st(2), st(3), st(4).toLong, st(5))
       })
     }
   }

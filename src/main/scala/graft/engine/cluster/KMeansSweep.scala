@@ -1,7 +1,5 @@
 package graft.engine.cluster
 
-import org.apache.spark.ml.evaluation.ClusteringEvaluator
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
@@ -187,48 +185,6 @@ object KMeansSweep {
       s.read.parquet(path).orderBy("index_name")
     }),
 
-    // #11 MLlib squared-euclidean silhouette on ground-truth labels —
-    // sanity cross-check for bd_silhouette. ORACLE-CHECKED: MLlib's
-    // SquaredEuclideanSilhouette is a closed form over cluster
-    // sufficient statistics — D(x,C) = ‖x‖² − 2·x·μ_C + avg‖y‖²_C,
-    // a = D(x,own)·n/(n−1) (self-excluded), b = min over other C,
-    // s = mean((b−a)/max(a,b)) — reproducible in SQL exactly
-    // (verified: both engines agree at ROUND 6). Singleton clusters
-    // (n = 1) score s(i) = 0 and STAY in the mean — MLlib's
-    // convention, pinned in the oracle's own_n CASE branch and
-    // exercised by the adversarial fixture's label -1 point.
-    "silhouette_mllib" -> ((s, d) => {
-      import s.implicits._
-      // DECLARED DOMAIN (round-13 verdict item 2): |component| < 1e7 —
-      // MLlib's closed-form silhouette cancels ‖x‖²-scale terms, and
-      // past the bound it silently drifts from the exact SQL oracle
-      // below ROUND 6 (a WRONG value, not a crash — the worst failure
-      // mode). The gate rides the features column itself, so the
-      // abs_max kernel evaluates inside the evaluator's own scan (no
-      // extra action) and in-domain corpora never reach the error.
-      val p = Tables.points(s, d)
-        .withColumn("features",
-          when(expr(s"abs_max(features) < ${Tables.maxAbsComponent}"), col("features"))
-            .otherwise(raise_error(lit("silhouette_mllib: |embedding component| >= 1e7 " +
-              "is outside the declared domain (float-cancellation ceiling of the closed-form silhouette)"))))
-        .withColumn("fv", array_to_vector(col("features")))
-      // degenerate corpus: the metric is undefined on zero rows AND on
-      // fewer than two clusters (MLlib asserts "Number of clusters
-      // must be greater than one") — ONE NULL row, matching the SQL
-      // form (AVG over an empty ab set is a single NULL), so the
-      // oracle stays row-count-parity without a special case. The
-      // distinct probe stops at 2 groups.
-      if (p.select("cluster").distinct().limit(2).count() < 2)
-        Seq[java.lang.Double](null).toDF("silhouette_mllib")
-      else {
-        val sil = new ClusteringEvaluator().setFeaturesCol("fv")
-          .setPredictionCol("cluster").setMetricName("silhouette").evaluate(p)
-        val r6 = BigDecimal.valueOf(sil)
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-        Seq[java.lang.Double](r6).toDF("silhouette_mllib")
-      }
-    }),
-
     // #12 single-k train (k = true cluster count, fixed seed)
     "kmeans_train" -> ((s, d) =>
       assign(Tables.points(s, d), k = 10)
@@ -314,10 +270,10 @@ object KMeansSweep {
     }
   }
 
-  /** None of these are DuckDB-expressible (iterative k-means); the index
-    * recomputation path is oracle-covered by ClusterQueries #5–#10. */
-  /** MLlib squared-euclidean silhouette, reproduced from cluster
-    * sufficient statistics (see the `silhouette_mllib` query note). */
+  /** The two oracle-checked queries of this pack: the report roundtrip
+    * (its payload is the ground-truth index recompute) and the sweep's
+    * determinism verdict. `kmeans_train`, `k_sweep` and
+    * `optimal_k_select` have none (seeded iterative k-means). */
   val oracles: Map[String, String] = Map(
     // the report payload is the deterministic #5–#10 index recompute,
     // so the oracle is the same SQL the per-index queries use, stacked
@@ -351,39 +307,6 @@ object KMeansSweep {
          |        / (SELECT MAX(SQRT(d2)) FROM own) END, 6)
          |  UNION ALL SELECT 'davies_bouldin', ROUND(AVG(rmax), 6) FROM db_r
          |) ORDER BY index_name""".stripMargin,
-
-    // degenerate conventions (probed on the adversarial/single-row
-    // fixtures): fewer than two clusters -> NULL (MLlib asserts
-    // "Number of clusters must be greater than one"); a = b scores
-    // EXACTLY 0.0 including the 0/0 case (MLlib's evaluator uses the
-    // branch form `if (a < b) ... else if (a > b) ... else 0.0`, so a
-    // point coincident with both centroids contributes 0, never a
-    // NULL/NaN division — the oracle's GREATEST(a,b) = 0 arm);
-    // singleton-cluster points: MLlib scores a point whose own cluster has ONE member
-    // as s(i) = 0 and KEEPS it in the corpus mean (evaluator source:
-    // pointClusterNumOfPoints == 1 => 0.0); the naive n/(n-1) form
-    // NULLs that point out of the AVG and shifts the mean by n/(n-1)
-    "silhouette_mllib" ->
-      """WITH pt AS (SELECT vec_id, label, u.i AS i, CAST(embedding[u.i] AS DOUBLE) AS v
-        |  FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS u(i)),
-        |sq AS (SELECT vec_id, label, SUM(v * v) AS sqn FROM pt GROUP BY 1, 2),
-        |cstats AS (SELECT label AS cl, i, AVG(v) AS mu FROM pt GROUP BY 1, 2),
-        |csq AS (SELECT label AS cl, COUNT(*) AS n, AVG(sqn) AS avg_sqn FROM sq GROUP BY 1),
-        |dots AS (SELECT pt.vec_id, cstats.cl, SUM(pt.v * cstats.mu) AS xdotmu
-        |  FROM pt JOIN cstats ON pt.i = cstats.i GROUP BY 1, 2),
-        |dmat AS (SELECT sq.vec_id, sq.label, d.cl, c.n,
-        |  sq.sqn - 2 * d.xdotmu + c.avg_sqn AS dist
-        |  FROM sq JOIN dots d ON d.vec_id = sq.vec_id JOIN csq c ON c.cl = d.cl),
-        |ab AS (SELECT vec_id,
-        |  MAX(CASE WHEN label = cl AND n > 1 THEN dist * n / (n - 1) END) AS a,
-        |  MAX(CASE WHEN label = cl THEN n END) AS own_n,
-        |  MIN(CASE WHEN label <> cl THEN dist END) AS b
-        |  FROM dmat GROUP BY 1)
-        |SELECT CASE WHEN (SELECT COUNT(DISTINCT label) FROM embeddings) < 2
-        |  THEN NULL
-        |  ELSE ROUND(AVG(CASE WHEN own_n = 1 OR GREATEST(a, b) = 0 THEN 0.0
-        |    ELSE (b - a) / GREATEST(a, b) END), 6) END AS silhouette_mllib
-        |FROM ab""".stripMargin,
 
     // the determinism contract's oracle is the constant verdict row
     // (the cms_error_contract pattern): the engine computes the

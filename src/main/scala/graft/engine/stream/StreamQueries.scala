@@ -32,6 +32,20 @@ import graft.engine.Tables
   */
 object StreamQueries {
 
+  /** State-store instance count per stateful operator, conf-driven
+    * (`graft.stream.statePartitions`, default 4 — the measured local
+    * micro-batch sweet spot; see [[withStatePartitions]]). At cluster
+    * scale set it to the deployment's shuffle sizing — a CONSTANT here
+    * would be local tuning masquerading as a default. Results are
+    * independent of the value (state partitioning is orthogonal to
+    * the declared output; StreamSpec pins `stream_stateful` at 1
+    * and 4). */
+  private def statePartitions(s: SparkSession): Int = {
+    val n = s.conf.get("graft.stream.statePartitions", "4").toInt
+    require(n >= 1, s"graft.stream.statePartitions=$n must be >= 1")
+    n
+  }
+
   /** Run `body` with `spark.sql.shuffle.partitions` — which is ALSO
     * the number of state-store instances every stateful streaming
     * operator creates — scoped down for the single-file micro-batch
@@ -46,19 +60,6 @@ object StreamQueries {
     * start+awaitTermination is sufficient and the session value is
     * restored for everything downstream. At real scale the state
     * partition count follows the cluster's shuffle sizing. */
-  /** State-store instance count per stateful operator, conf-driven
-    * (`graft.stream.statePartitions`, default 4 — the measured local
-    * micro-batch sweet spot; see [[withStatePartitions]]). At cluster
-    * scale set it to the deployment's shuffle sizing — a CONSTANT here
-    * would be local tuning masquerading as a default. Results are
-    * independent of the value (state partitioning is orthogonal to
-    * the declared output; StreamSpec pins the semantics). */
-  private def statePartitions(s: SparkSession): Int = {
-    val n = s.conf.get("graft.stream.statePartitions", "4").toInt
-    require(n >= 1, s"graft.stream.statePartitions=$n must be >= 1")
-    n
-  }
-
   private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)

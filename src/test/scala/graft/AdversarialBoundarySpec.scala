@@ -258,22 +258,26 @@ class AdversarialBoundarySpec extends SparkSpec {
     // that includes four zeros. Guards the oracle arm against
     // "simplification" and against a DuckDB NaN-vs-NULL flip.
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.ml.functions.array_to_vector
     val pts = Seq(
       (1L, Seq(0.0, 0.0), 0), (2L, Seq(0.0, 0.0), 0), // cluster A at origin
       (3L, Seq(0.0, 0.0), 1), (4L, Seq(0.0, 0.0), 1), // cluster B at origin too
       (5L, Seq(10.0, 0.0), 2), (6L, Seq(12.0, 0.0), 2) // real cluster C
     ).toDF("vec_id", "features", "cluster")
-      .withColumn("fv", array_to_vector(col("features")))
-    val sil = new org.apache.spark.ml.evaluation.ClusteringEvaluator()
-      .setFeaturesCol("fv").setPredictionCol("cluster")
-      .setMetricName("silhouette").evaluate(pts)
+    val sil = MllibSilhouetteReference.evaluate(pts)
     // hand-computed: A/B points s = 0 (a = b = 0); C: 1 - 4/100 and
     // 1 - 4/144; mean over all SIX = 0.3220370...
     val expected = (0.0 * 4 + (1 - 4.0 / 100) + (1 - 4.0 / 144)) / 6
     assert(math.abs(sil - expected) < 1e-9,
       s"MLlib silhouette $sil != hand-computed $expected — the degenerate-point convention moved")
+    // ... and the index profile's closed form keeps the same convention
+    MllibSilhouetteReference.assertMatches(pts, "coincident centroids")
+  }
+
+  test("the profile's MLlib silhouette equals ClusteringEvaluator on the hostile fixture, singleton included") {
+    // label -1 is a one-point cluster: MLlib scores it 0 inside the mean
+    val p = MllibSilhouetteReference.assertMatches(graft.engine.Tables.points(spark, dir), "hostile seed0")
+    assert(p.clusters.exists(c => c.cluster == -1 && c.n == 1),
+      "the hostile fixture lost its label -1 singleton — the test would be vacuous")
   }
 
   test("cleanVectors excludes exactly the NULL, RAGGED and NON-FINITE rows") {

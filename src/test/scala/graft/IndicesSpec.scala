@@ -97,6 +97,11 @@ class IndicesSpec extends SparkSpec {
     assert(math.abs(got - 1.0 / 450) < eps, s"got=$got")
   }
 
+  test("MLlib silhouette equals ClusteringEvaluator on the six points and on sf0.001") {
+    MllibSilhouetteReference.assertMatches(sixPoints, "six points")
+    MllibSilhouetteReference.assertMatches(graft.engine.Tables.points(spark, sf0001), "sf0.001")
+  }
+
   test("chi2 is zero for an independent 2x2 table") {
     import spark.implicits._
     // perfectly independent: every (a,b) cell has equal count

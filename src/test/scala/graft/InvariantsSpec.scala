@@ -64,6 +64,16 @@ class InvariantsSpec extends SparkSpec {
     assert(uncovered.isEmpty, s"queries missing from COVERAGE.md: $uncovered")
   }
 
+  test("no main source names org.apache.spark.ml (MLlib stays a test-only reference)") {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty)
+    val hits = files.filter(f => new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      .contains("org.apache.spark.ml"))
+    assert(hits.isEmpty, s"main sources naming org.apache.spark.ml: ${hits.mkString(", ")}")
+  }
+
   test("BD-Silhouette ∈ [-1, 1]; BD-Dunn ≥ 0; DB ≥ 0") {
     cases(3).foreach { pts =>
       val p = Indices.profile(df(pts))
@@ -87,6 +97,9 @@ class InvariantsSpec extends SparkSpec {
       assert(math.abs(relabeled.wssse.get - w0) < 1e-9)
       val s0 = base.bdSilhouette.get
       assert(math.abs(relabeled.bdSilhouette.get - s0) < 1e-9)
+      val m0 = base.mllibSilhouette.get
+      assert(math.abs(permuted.mllibSilhouette.get - m0) < 1e-9)
+      assert(math.abs(relabeled.mllibSilhouette.get - m0) < 1e-9)
     }
   }
 
@@ -96,6 +109,7 @@ class InvariantsSpec extends SparkSpec {
       val shifted = Indices.profile(df(pts.map { case (i, xs, c) => (i, xs.map(_ + 37.5), c) }))
       assert(math.abs(base.wssse.get - shifted.wssse.get) < 1e-7)
       assert(math.abs(base.bdDunn.get - shifted.bdDunn.get) < 1e-7)
+      assert(math.abs(base.mllibSilhouette.get - shifted.mllibSilhouette.get) < 1e-7)
     }
   }
 
@@ -220,19 +234,20 @@ class InvariantsSpec extends SparkSpec {
     assert(jobs > 0 && jobs <= 20 + 15, s"the sweep launched $jobs jobs")
   }
 
-  test("the ten profile-backed index queries launch at most 5 Spark jobs from a cold memo epoch") {
+  test("the eleven profile-backed index queries launch at most 5 Spark jobs from a cold memo epoch") {
     // the point checkpoint and the profile's two passes; every query is
     // then a local frame over the profile — one DataFrame DAG per
-    // query (65 jobs for these ten) breaks this bound many times over
+    // query (65 jobs for the first ten) breaks this bound many times over
     val profiled = Seq("wssse", "bd_silhouette", "bd_dunn", "davies_bouldin", "calinski_harabasz",
-      "xie_beni", "intra_cluster_stats", "inter_centroid_dist", "centroids_from_assignment", "cluster_sizes")
+      "xie_beni", "intra_cluster_stats", "inter_centroid_dist", "centroids_from_assignment", "cluster_sizes",
+      "silhouette_mllib")
     graft.engine.Tables.points(spark, sf0001).count() // first-load checks outside the count
     val jobs = countJobs("index-job-pin") {
       graft.engine.SessionCache.freshEpoch("index-job-pin") {
         profiled.foreach(q => assert(SparkEntry.queries(q)(spark, sf0001).collect().nonEmpty, q))
       }
     }
-    assert(jobs > 0 && jobs <= 5, s"the ten index queries launched $jobs jobs")
+    assert(jobs > 0 && jobs <= 5, s"the eleven index queries launched $jobs jobs")
   }
 
   test("the four ANN recall queries launch at most 48 Spark jobs over warm shared inputs") {

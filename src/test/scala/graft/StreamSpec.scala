@@ -177,6 +177,15 @@ class StreamSpec extends SparkSpec {
     assert(leftover.isEmpty, s"sink views leaked: ${leftover.mkString(",")}")
   }
 
+  test("graft.stream.statePartitions changes no rows of a stateful query; 0 is refused") {
+    def run(n: String) = withConf("graft.stream.statePartitions", n)(
+      SparkEntry.queries("stream_stateful")(spark, sf0001).collect().map(_.toString).sorted.toSeq)
+    val one = run("1")
+    assert(one.nonEmpty && one == run("4"), "stream_stateful rows differ between 1 and 4 state partitions")
+    val e = intercept[IllegalArgumentException](run("0"))
+    assert(e.getMessage.contains("graft.stream.statePartitions=0 must be >= 1"), e.getMessage)
+  }
+
   test("session_window matches gaps-and-islands semantics") {
     // user 10: events at 00:05, 00:15 (gap 10m → same), 00:50 (gap 35m → new)
     val df = Seq(
