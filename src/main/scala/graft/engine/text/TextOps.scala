@@ -1,6 +1,6 @@
 package graft.engine.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.MeasuredCheckpoint
@@ -381,27 +381,34 @@ object TextOps {
   private[graft] def distinctTokens(s: SparkSession, d: String): DataFrame =
     docFeatures(s, d).select(col("doc_id"), explode(col("arr")).as("token"))
 
-  /** The rarest-first PPJoin prefix PLAN for `ngram_jaccard_dedup`,
-    * package-private for ScaleShapeSpec's doc_id-partitioned-window
-    * pin. NOT checkpointed by the declared query (deliberate, see the
-    * use site: exchange reuse shares the doc_id exchange between the
-    * self-join's two sides, and the eager-checkpoint variant measured
-    * SLOWER — 2.28 vs 1.88 s interleaved solo — while pinning the
-    * whole prefix surface in executor storage at scale). The
-    * per-doc id count rides the explode map-side (|arr| IS the count
-    * the former count-over-doc window re-derived by buffering every
-    * doc's exploded rows — one whole Window pass gone). Prefix length
-    * for t = 0.5: |A| − ⌈|A|/2⌉ + 1 = ⌊|A|/2⌋ + 1, rarest-first under
-    * the (df, tid) total order. */
-  private[graft] def ngramPrefixPlan(s: SparkSession, d: String): DataFrame = {
-    val tri = docTrigramIdArrays(s, d).select(col("doc_id"),
-      size(col("arr")).cast("long").as("n"), explode(col("arr")).as("tid"))
-    val dfreq = tri.groupBy("tid").agg(count(lit(1)).as("df"))
-    val wOrd = Window.partitionBy("doc_id").orderBy("df", "tid")
-    tri.join(dfreq, "tid")
-      .withColumn("rn", row_number().over(wOrd))
-      .filter(col("rn") <= (col("n") / 2).cast("bigint") + 1)
-      .select("doc_id", "tid", "rn", "n")
+  /** The rarest-first PPJoin prefix rows `(doc_id, elem, rn, n)` of a
+    * per-doc set table `(doc_id, arr)`, shared by both exact-Jaccard
+    * joins (`ngram_jaccard_dedup` at t = 0.5 over trigram ids, the
+    * `minhash_recall` truth at t = 0.9 over tokens). Elements rank
+    * rarest first under the global total order (df, elem), and a doc
+    * keeps ranks rn ≤ `prefixLen(n)`, n = |arr| counted in the explode.
+    * Only elements with df ≥ 2 are emitted: a df = 1 element is in one
+    * doc, so no prefix join can match it, and it never reaches the
+    * doc_id exchange. Singletons sort first under (df, elem), so a
+    * kept element's rank in the full order is its rank among the doc's
+    * m shared elements plus the n − m singletons ahead of it: the
+    * prefix cut and the PPJoin position filter see the same
+    * (doc_id, elem, rn) as over the unpruned ranking. Both windows
+    * share one spec, so the plan has one doc_id-partitioned Window.
+    * Not checkpointed: exchange reuse shares the doc_id exchange
+    * between a self-join's two sides, and an eager checkpoint measured
+    * slower (2.28 vs 1.88 s interleaved solo at sf0.1) while holding
+    * the whole prefix surface in executor storage. */
+  private[graft] def prefixRanks(sets: DataFrame, prefixLen: Column => Column): DataFrame = {
+    val ex = sets.select(col("doc_id"), size(col("arr")).cast("long").as("n"),
+      explode(col("arr")).as("elem"))
+    val shared = ex.groupBy("elem").agg(count(lit(1)).as("df")).filter(col("df") >= 2)
+    val w = Window.partitionBy("doc_id").orderBy("df", "elem")
+    val m = count(lit(1)).over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+    ex.join(shared, "elem")
+      .withColumn("rn", row_number().over(w) + (col("n") - m))
+      .filter(col("rn") <= prefixLen(col("n")))
+      .select("doc_id", "elem", "rn", "n")
   }
 
   /** Per-doc SORTED distinct-token array `(doc_id, arr)`, one row per
@@ -458,27 +465,6 @@ object TextOps {
         .as("samp"))
   }
 
-  /** EXACT Jaccard ≥ 0.9 truth pairs `(d1 < d2)` with at least one
-    * side in the deterministic 5% doc sample — the ground truth for
-    * `minhash_recall`, built scale-safe. The round-4 shape joined the
-    * sampled docs against ALL docs on the raw token key: cost
-    * Σ_t sampled(t)·df(t), which Zipfian head tokens (stop words in
-    * ~every doc) make quadratic — 99.45 s of the 207 s round-4 bench.
-    * This build uses the RAREST-FIRST PREFIX FILTER already proven in
-    * `ngram_jaccard_dedup`, LOSSLESS for J ≥ t: under a global total
-    * order (corpus df asc, token asc), two docs with J ≥ 0.9 MUST
-    * share a token inside both prefixes of length
-    * |X| − ⌈0.9·|X|⌉ + 1 = ⌊|X|/10⌋ + 1 (otherwise every shared token
-    * sits in both suffixes of size ⌈0.9|X|⌉ − 1 < |A∩B| — a
-    * contradiction with |A∩B| ≥ ⌈0.9·|X|⌉ forced by J ≥ 0.9). So the
-    * candidate join keys on ~10% of tokens — and specifically the
-    * RAREST 10%, exactly where df is small — then survivors are
-    * verified exactly with one codegen'd `array_intersect` per pair
-    * (the PPJoin pattern). Result set is provably identical to the
-    * unpruned join, so the unpruned DuckDB oracle stays the
-    * independent cross-check. Package-private so ScaleShapeSpec can
-    * assert the prefix filter is present on BOTH sides of the
-    * token-keyed join (the spec fails on the round-4 shape). */
   /** Truth pairs memoized per (session, sfDir): both
     * banding operating points (`minhash_recall`, `minhash_recall_b1r8`)
     * measure against the SAME exact-Jaccard ground truth — one build,
@@ -532,47 +518,60 @@ object TextOps {
           .as("precision_at_09"))
   }
 
+  /** EXACT Jaccard ≥ 0.9 truth pairs `(d1 < d2)` with at least one
+    * side in the deterministic 5% doc sample — the ground truth for
+    * `minhash_recall`, built scale-safe. The round-4 shape joined the
+    * sampled docs against ALL docs on the raw token key: cost
+    * Σ_t sampled(t)·df(t), which Zipfian head tokens (stop words in
+    * ~every doc) make quadratic — 99.45 s of the 207 s round-4 bench.
+    * This build uses the RAREST-FIRST PREFIX FILTER of
+    * `ngram_jaccard_dedup` ([[prefixRanks]]), LOSSLESS for J ≥ t:
+    * under a global total order (corpus df asc, token asc), two docs
+    * with J ≥ 0.9 MUST share a token inside both prefixes of length
+    * |X| − ⌈0.9·|X|⌉ + 1 = ⌊|X|/10⌋ + 1 (otherwise every shared token
+    * sits in both suffixes of size ⌈0.9|X|⌉ − 1 < |A∩B| — a
+    * contradiction with |A∩B| ≥ ⌈0.9·|X|⌉ forced by J ≥ 0.9). So the
+    * candidate join keys on ~10% of tokens — and specifically the
+    * RAREST 10%, exactly where df is small — then survivors are
+    * verified exactly with one codegen'd `array_intersect` per pair
+    * (the PPJoin pattern). Each prefix row carries its doc's set size
+    * n, so the candidates take their sizes through the distinct and
+    * no size table joins back. Result set is provably identical to
+    * the unpruned join, so the unpruned DuckDB oracle stays the
+    * independent cross-check. Package-private so ScaleShapeSpec can
+    * assert the prefix filter is present on BOTH sides of the
+    * token-keyed join (the spec fails on the round-4 shape), and for
+    * the `builder_minhash_truth` shape row (the truth checkpoint hides
+    * this plan from `minhash_recall`'s). */
   private[graft] def minhashTruthPairs(s: SparkSession, d: String): DataFrame = {
-    val tok = distinctTokens(s, d)
-    val dfreq = tok.groupBy("token").agg(count(lit(1)).as("df"))
-    val wOrd = Window.partitionBy("doc_id").orderBy("df", "token")
-    // prefix length for t = 0.9: ⌊|A|/10⌋ + 1. The per-doc set size
-    // joins in from the memoized per-doc array table (size(arr) ≡ the
-    // distinct-token count — both derive from array_distinct(split)),
-    // saving the second window pass over the exploded token rows
-    val nTok = docTokenArrays(s, d)
-      .select(col("doc_id"), size(col("arr")).cast("long").as("n"))
-    val prefix = tok.join(dfreq, "token")
-      .join(nTok, "doc_id")
-      .withColumn("rn", row_number().over(wOrd))
-      .filter(col("rn") <= (col("n") / 10).cast("bigint") + 1)
-      .select("doc_id", "token")
+    // prefix length for t = 0.9: ⌊|A|/10⌋ + 1
+    val prefix = prefixRanks(docTokenArrays(s, d), n => (n / 10).cast("bigint") + 1)
+      .select("doc_id", "elem", "n")
     // sampled-prefix × corpus-prefix: every qualifying pair has a
     // sampled side, and its prefix must intersect the other side's.
     // Sample membership arrives via an equi-join on the per-DOC flag
-    // table, never by evaluating the md5-fold HOF per derived row
-    val cand = prefix
-      .join(sampFlags(s, d).filter(col("samp")).select("doc_id"), "doc_id")
-      .select(col("doc_id").as("s"), col("token"))
-      .join(prefix.select(col("doc_id").as("o"), col("token")), "token")
-      .filter(col("s") =!= col("o"))
-      .select(least(col("s"), col("o")).as("d1"),
-        greatest(col("s"), col("o")).as("d2"))
+    // table, never by evaluating the md5-fold HOF per derived row (the
+    // optimizer pushes the inferred flag predicate below the sampled
+    // side's doc_id window, so that side ranks only sampled docs). The
+    // size-ratio necessary condition sits in the join condition:
+    // J ≥ 0.9 forces min(|A|,|B|)/max(|A|,|B|) ≥ 0.9 (J ≤ min/max
+    // always), checked as exact integer arithmetic 10·min ≥ 9·max —
+    // lossless, and it prunes the array_intersect verification to
+    // near the truth set
+    val a = prefix.join(sampFlags(s, d).filter(col("samp")).select("doc_id"), "doc_id").as("a")
+    val b = prefix.as("b")
+    val fromA = col("a.doc_id") < col("b.doc_id")
+    val cand = a.join(b, col("a.elem") === col("b.elem") && col("a.doc_id") =!= col("b.doc_id")
+        && least(col("a.n"), col("b.n")) * 10 >= greatest(col("a.n"), col("b.n")) * 9)
+      .select(least(col("a.doc_id"), col("b.doc_id")).as("d1"),
+        greatest(col("a.doc_id"), col("b.doc_id")).as("d2"),
+        when(fromA, col("a.n")).otherwise(col("b.n")).as("s1"),
+        when(fromA, col("b.n")).otherwise(col("a.n")).as("s2"))
       .distinct()
-    // size-ratio necessary condition, applied on the INT-only size
-    // table before the (much wider) token-array joins: J ≥ 0.9 forces
-    // min(|A|,|B|)/max(|A|,|B|) ≥ 0.9 (J ≤ min/max always), checked
-    // as exact integer arithmetic 10·min ≥ 9·max — lossless, and it
-    // prunes the array_intersect verification to near the truth set
-    // sizes and sorted arrays come map-side from the shared per-doc
-    // array table — no collect_list shuffle of the exploded rows
+    // sorted arrays come map-side from the shared per-doc array table
+    // — no collect_list shuffle of the exploded rows
     val docsArr = docTokenArrays(s, d)
-    val sz = docsArr.select(col("doc_id"), size(col("arr")).cast("long").as("sz"))
-    val candSized = cand
-      .join(sz.select(col("doc_id").as("d1"), col("sz").as("s1")), "d1")
-      .join(sz.select(col("doc_id").as("d2"), col("sz").as("s2")), "d2")
-      .filter(least(col("s1"), col("s2")) * 10 >= greatest(col("s1"), col("s2")) * 9)
-    candSized
+    cand
       .join(docsArr.select(col("doc_id").as("d1"), col("arr").as("a1")), "d1")
       .join(docsArr.select(col("doc_id").as("d2"), col("arr").as("a2")), "d2")
       .withColumn("i", size(array_intersect(col("a1"), col("a2"))).cast("long"))
@@ -780,6 +779,13 @@ object TextOps {
     * only (asserting the logarithmic bound on synthetic graphs). */
   @volatile private[graft] var lastResolveRounds: Int = -1
 
+  /** The XOR masks of popcount ≤ 3 over 16 bits, mask 0 included:
+    * 1 + 16 + 120 + 560 = 697. `h ^ mask` over them is exactly the
+    * Hamming ball of radius 3 around a signature h, the probe set of
+    * `simhash_dedup`. */
+  private[graft] val simhashMasks: Seq[Long] =
+    (0L until (1L << 16)).filter(m => java.lang.Long.bitCount(m) <= 3)
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // #17 exact dedup: group by text digest, keep min doc_id
     "exact_dedup" -> ((s, d) =>
@@ -897,9 +903,8 @@ object TextOps {
 
     // SimHash near-dup: 16-bit signed-sum signature over token counts,
     // candidate pairs within Hamming distance 3. Candidates come from
-    // a BANDED equi-join: Hamming ≤ 3 over 16 bits means at least one
-    // of the 4 4-bit bands matches exactly (pigeonhole), so the join
-    // is shuffle-bounded on (band, band-bits) — never an n² loop.
+    // a HAMMING-BALL PROBE of the distinct-signature set (see
+    // [[simhashMasks]]) — never an n² loop.
     // Per-(token, bit) sign = parity of the (j+1)-th hex digit of
     // md5(token): independent well-mixed bits both engines compute
     // identically (an LCG-parity variant measured 2.5× denser pair
@@ -914,64 +919,58 @@ object TextOps {
       // only avoids re-digesting repeated tokens). NgramFoldSpec pins
       // the kernel against an independent JVM model of the published
       // formula; the DuckDB oracle still computes it the exploded way.
-      // FIVE consumers read the signature table (distinct-sig dim,
-      // two doc-expansion joins, both same-sig sides), so it is a
-      // projection of the checkpointed per-doc feature table: the
+      // THREE consumers read the signature table (distinct-sig dim,
+      // two doc-expansion joins), so it is a projection of the
+      // checkpointed per-doc feature table: the
       // corpus scan and the per-token digests run once per memo epoch
       // (the plan audit showed 5 parquet scans before any checkpoint);
       // the kernel pin lives on docFeaturesPlan.
       val sh = docFeatures(s, d).select("doc_id", "simhash")
-      // The banded join is COMPLETE for ham ≤ 3 (4 bands, pigeonhole),
-      // so the declared output is exactly {(d1 < d2): ham ≤ 3} — which
-      // licenses running the band join on the DISTINCT-SIGNATURE dim
-      // instead of the doc dim: |sigs| ≤ 2^16 at ANY corpus size (and
-      // the low-entropy fixture collapses 5k docs onto far fewer), so
-      // the quadratic-ish candidate join runs on a bounded table, and
-      // docs expand back through two equi-joins that emit every output
-      // pair EXACTLY once. The former doc-level form shoved each
-      // surviving pair through the shuffle up to 4× (once per matching
-      // band) and then paid a distinct over that surface — ~4 s of the
-      // sf0.1 bench for rows this form never creates.
-      val sigD = sh.select("simhash").distinct()
-      val banded = sigD.crossJoin(broadcast(sh.sparkSession.range(4).select(col("id").as("band"))))
-        .select(col("simhash"), col("band"),
-          expr("shiftright(simhash, CAST(band * 4 AS INT)) & 15").as("bb"))
-      val sigPairs = banded.as("a").join(banded.as("b"),
-          col("a.band") === col("b.band") && col("a.bb") === col("b.bb")
-            && col("a.simhash") < col("b.simhash"))
-        .select(col("a.simhash").as("h1"), col("b.simhash").as("h2"))
-        .distinct()
-        .withColumn("ham", bit_count(col("h1").bitwiseXOR(col("h2"))))
-        .filter(col("ham") <= 3)
-      // distinct-sig pairs expand to doc pairs (each doc has ONE
-      // signature, so no duplicates and no distinct needed) …
-      val crossPairs = sigPairs
+      // The probe runs on the DISTINCT-SIGNATURE dim, ≤ 2^16 rows at
+      // ANY corpus size (the low-entropy fixture collapses 5k docs
+      // onto far fewer), so the set always broadcasts. Each signature
+      // h1 crossed with every mask of popcount ≤ 3 enumerates its whole
+      // Hamming ball h2 = h1 ^ mask, and a broadcast lookup keeps the
+      // h2 that occur: COMPLETE for ham ≤ 3 by construction, with no
+      // candidate that fails the bound and no shuffle. Keeping
+      // h1 ≤ h2 yields each signature pair once (mask 0 gives h1 = h2).
+      // At 2^16 signatures this emits at most ~22.8M pairs, where the
+      // former 4×4-bit band self-join emitted ~537M band collisions
+      // into a distinct.
+      val sigs = sh.select("simhash").distinct()
+      val sigPairs = sigs
+        .select(col("simhash").as("h1"), explode(typedLit(simhashMasks)).as("mask"))
+        .withColumn("h2", col("h1").bitwiseXOR(col("mask")))
+        .filter(col("h1") <= col("h2"))
+        .join(broadcast(sigs.select(col("simhash").as("h2"))), "h2")
+        .select(col("h1"), col("h2"), bit_count(col("mask")).as("ham"))
+      // signature pairs expand to doc pairs (each doc has ONE
+      // signature, so every output pair is emitted exactly once): a
+      // pair of distinct signatures keeps every doc pair across them,
+      // and one signature with itself keeps its docs' pairs x1 < x2
+      sigPairs
         .join(sh.select(col("doc_id").as("x1"), col("simhash").as("h1")), "h1")
         .join(sh.select(col("doc_id").as("x2"), col("simhash").as("h2")), "h2")
+        .filter(col("h1") < col("h2") || col("x1") < col("x2"))
         .select(least(col("x1"), col("x2")).as("d1"),
           greatest(col("x1"), col("x2")).as("d2"), col("ham"))
-      // … and identical-signature doc pairs (ham = 0) come from one
-      // equi-join on the signature value
-      val samePairs = sh.as("a").join(sh.as("b"),
-          col("a.simhash") === col("b.simhash")
-            && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
-          lit(0).cast(org.apache.spark.sql.types.IntegerType).as("ham"))
-      crossPairs.unionByName(samePairs).orderBy("d1", "d2")
+        .orderBy("d1", "d2")
     }),
 
     // n-gram (word-trigram) Jaccard near-dup, threshold 0.5, with the
     // RAREST-FIRST PREFIX FILTER wired in (lossless for J ≥ t):
     // order each doc's trigrams by global document frequency (ties by
-    // trigram string — a consistent total order across docs) and keep
+    // trigram id — a consistent total order across docs) and keep
     // only the first |A| − ⌈t·|A|⌉ + 1; two docs with J ≥ t MUST share
     // a prefix trigram (else all shared trigrams sit in both suffixes
     // of length ⌈t·|X|⌉ − 1 < |A∩B|). Candidates come from the
-    // prefix-only equi-join — skewed high-df trigrams rarely make any
-    // prefix, so the candidate join is pruned exactly where the naive
-    // shared-trigram join blows up. Exact intersection counts are then
-    // computed only for candidate pairs. The Jaccard is one IEEE
-    // division of identical ints — drift-free.
+    // prefix-only equi-join ([[prefixRanks]]) — skewed high-df
+    // trigrams rarely make any prefix, and df = 1 trigrams (most of a
+    // corpus) fill rank slots without being shipped, so the candidate
+    // join is pruned exactly where the naive shared-trigram join blows
+    // up. Exact intersection counts are then computed only for
+    // candidate pairs. The Jaccard is one IEEE division of identical
+    // ints — drift-free.
     "ngram_jaccard_dedup" -> ((s, d) => {
       // The per-doc folded trigram-id SET is the shared memoized
       // [[docTrigramIdArrays]] table — one row per doc, built map-side
@@ -989,14 +988,8 @@ object TextOps {
       // folding makes the per-doc id SET the declared universe on
       // both sides.
       val docsArr = docTrigramIdArrays(s, d)
-      // NOT checkpointed: exchange reuse shares the doc_id exchange
-      // between the self-join's two sides, so the duplicate work is
-      // only the sort + rank window (CPU over the prefix surface) —
-      // measured CHEAPER than an eager checkpoint's materialization
-      // barrier at sf0.1 (1.88 s vs 2.28 s interleaved solo), and at
-      // scale the checkpoint would hold the whole prefix surface in
-      // executor storage for the same join.
-      val prefix = ngramPrefixPlan(s, d)
+      // prefix length for t = 0.5: |A| − ⌈|A|/2⌉ + 1 = ⌊|A|/2⌋ + 1
+      val prefix = prefixRanks(docsArr, n => (n / 2).cast("bigint") + 1)
       // PPJoin POSITION filter, applied inside the join condition:
       // both prefixes are ranked under the SAME global (df, tid)
       // order, so a pair matching at 1-based ranks (rn_a, rn_b) has
@@ -1006,30 +999,23 @@ object TextOps {
       // the bound (bound ≥ true overlap ≥ α), so no qualifying pair
       // can lose all its candidate rows. Prunes the dup-dense
       // fixture's candidate surface before the distinct shuffle.
+      // Since rn ≥ 1, the bound is at most min(n_a, n_b), so it also
+      // enforces the size-ratio condition 2·min ≥ max (J ≥ 0.5 forces
+      // it) without a test of its own. The set sizes ride the prefix
+      // rows through the distinct: no size table joins back.
       val cand = prefix.as("a").join(prefix.as("b"),
-          col("a.tid") === col("b.tid") && col("a.doc_id") < col("b.doc_id")
+          col("a.elem") === col("b.elem") && col("a.doc_id") < col("b.doc_id")
             && (least(col("a.n") - col("a.rn"), col("b.n") - col("b.rn")) + 1) * 3
                >= col("a.n") + col("b.n"))
-        .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
+        .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
+          col("a.n").as("s1"), col("b.n").as("s2"))
         .distinct()
-      // size-ratio necessary condition BEFORE any array attaches
-      // (the minhashTruthPairs discipline): J ≥ 0.5 forces
-      // min(|A|,|B|)/max ≥ 0.5, checked as exact 2·min ≥ max on the
-      // INT-only size table — at sf0.1 the prefix join admits ~409k
-      // candidates of which 256 verify; pruning on two ints first
-      // keeps the wide array join near the survivor set. Sizes come
-      // map-side from the shared array table — no count shuffle.
-      val sz = docsArr.select(col("doc_id"), size(col("arr")).cast("long").as("sz"))
-      val candSized = cand
-        .join(sz.select(col("doc_id").as("d1"), col("sz").as("s1")), "d1")
-        .join(sz.select(col("doc_id").as("d2"), col("sz").as("s2")), "d2")
-        .filter(least(col("s1"), col("s2")) * 2 >= greatest(col("s1"), col("s2")))
       // PPJoin-style verification: candidates join the per-doc sorted
       // id SETS (one row per doc) and the exact intersection is a
       // single codegen'd array_intersect per pair — no re-join of the
       // exploded trigram rows (that recount was measured to produce
       // MORE join rows than it pruned on near-dup-dense corpora)
-      candSized
+      cand
         .join(docsArr.select(col("doc_id").as("d1"), col("arr").as("a1")), "d1")
         .join(docsArr.select(col("doc_id").as("d2"), col("arr").as("a2")), "d2")
         .withColumn("inter", size(array_intersect(col("a1"), col("a2"))).cast("long"))

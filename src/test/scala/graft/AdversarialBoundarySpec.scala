@@ -82,6 +82,11 @@ class AdversarialBoundarySpec extends SparkSpec {
     }
   }
 
+  test("the singleton-free PPJoin prefixes equal the full rarest-first ranking restricted to df >= 2 on the hostile corpus") {
+    val diff = PrefixRanksReference.mismatches(spark, dir)
+    assert(diff.isEmpty, diff.mkString("\n"))
+  }
+
   // completion alone can be vacuous — pin a BINDING boundary outcome
   // for one representative of each crash class (values beyond these
   // are the DuckDB probe's job):

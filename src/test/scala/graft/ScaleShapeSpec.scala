@@ -105,10 +105,11 @@ class ScaleShapeSpec extends SparkSpec {
     // evidence) AND the declared query — the prefix plan is NOT
     // checkpointed by ngram_jaccard_dedup (deliberate, see the use
     // site), so its window is visible in the shipped plan and a
-    // refactor that stopped routing the query through ngramPrefixPlan
+    // refactor that stopped routing the query through prefixRanks
     // could not silently escape the pin.
-    val nplan = graft.engine.text.TextOps.ngramPrefixPlan(spark, sf0001)
-      .queryExecution.optimizedPlan.toString
+    import graft.engine.text.TextOps
+    val nplan = TextOps.prefixRanks(TextOps.docTrigramIdArrays(spark, sf0001),
+      n => (n / 2).cast("bigint") + 1).queryExecution.optimizedPlan.toString
     assert(nplan.contains("windowspecdefinition(doc_id"),
       s"prefix ranking must partition by doc_id:\n$nplan")
     val declared = graft.SparkEntry.queries("ngram_jaccard_dedup")(spark, sf0001)
@@ -225,8 +226,9 @@ class ScaleShapeSpec extends SparkSpec {
     //     doc_id (and no unpartitioned window anywhere);
     val truth = TextOps.minhashTruthPairs(spark, sf0001)
     val plan = truth.queryExecution.optimizedPlan.toString
-    val all = "windowspecdefinition\\(".r.findAllIn(plan).size
-    val byDoc = "windowspecdefinition\\(doc_id".r.findAllIn(plan).size
+    // anchored on the attribute boundary, as the ngram pin
+    val all = """windowspecdefinition\(""".r.findAllIn(plan).size
+    val byDoc = """windowspecdefinition\(doc_id#\d+""".r.findAllIn(plan).size
     assert(all > 0 && all == byDoc,
       s"prefix ranking must be doc_id-partitioned windows ($byDoc of $all):\n$plan")
     // (b) exact verification via one codegen'd array_intersect per

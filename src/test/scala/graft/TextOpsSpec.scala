@@ -39,6 +39,11 @@ class TextOpsSpec extends SparkSpec {
     }
   }
 
+  test("the singleton-free PPJoin prefixes equal the full rarest-first ranking restricted to df >= 2") {
+    val diff = PrefixRanksReference.mismatches(spark, sf0001)
+    assert(diff.isEmpty, diff.mkString("\n"))
+  }
+
   test("exact_dedup keeps the min doc_id of each text group") {
     val out = TextOps.queries("exact_dedup")(spark, dir).collect()
     assert(out.length == 6) // 8 docs − 2 dup copies
