@@ -10,10 +10,10 @@ import org.apache.spark.sql.SparkSession
   * Because both reads happen inside the same JVM from the same env
   * var, the two engines cannot desynchronize — which is the whole
   * point: the hot-bucket probe profile (tools/probe_all.sh) shrinks
-  * `graft.neardedup.bucketCap`/`shardSize` so the oversize-bucket
-  * shard engages on probe-scale DATA, and the pair-window oracles
-  * must shrink with it. The driver never sets the env, so its runs
-  * see the committed defaults byte-identically.
+  * `graft.neardedup.bucketCap` so the cap binds on probe-scale DATA,
+  * and the pair-window oracles must shrink with it. The driver never
+  * sets the env, so its runs see the committed defaults
+  * byte-identically.
   *
   * Parsed once per JVM (env vars are immutable per process); values
   * must not contain ',' or '=' (no current knob does).

@@ -159,165 +159,115 @@ object TextOps {
     * quadratically on corpora whose token sets mostly coincide.
     * Shared by `minhash_near_dedup` (pair surface) and
     * `near_dedup_groups` (pair → group resolution). The generation is
-    * DUP-FREE (each qualifying pair is emitted by exactly ONE band —
-    * see the cross-band suppression below): the former raw/distinct
-    * two-view split and its pair-scale distinct shuffle no longer
-    * exist, so there is one frame and no `dedup` knob. */
+    * DUP-FREE: each qualifying pair is emitted by exactly ONE band (see
+    * the cross-band suppression in [[minhashPairsPlan]]), so there is
+    * one frame and no pair-scale distinct. Memoized per (session,
+    * sfDir, banding) as a measured checkpoint: the pair surface and
+    * group resolution (`resolveGroups`) both consume it. */
   private[graft] def minhashPairs(s: SparkSession, d: String,
-                           rowsPerBand: Int = 4): DataFrame = {
-    // the pair list is memoized per (session, sfDir, banding) as a
-    // measured checkpoint: the pair surface (`minhash_near_dedup`) and
-    // group resolution (`resolveGroups`) both consume it, and
-    // re-deriving the MinHash pipeline per consumer was ~5 s of round-2
-    // bench per extra consumer.
+                           rowsPerBand: Int = 4): DataFrame =
+    pairsCache.get(s, s"$d|r$rowsPerBand")(MeasuredCheckpoint(minhashPairsPlan(s, d, rowsPerBand)))
+
+  private val pairsCache = new graft.engine.SessionCache[DataFrame]
+
+  /** The pair build PLAN behind [[minhashPairs]]' checkpoint, for the
+    * `builder_minhash_pairs` shape row and ScaleShapeSpec's pins. */
+  private[graft] def minhashPairsPlan(s: SparkSession, d: String,
+                               rowsPerBand: Int = 4): DataFrame = {
     require(8 % rowsPerBand == 0, s"rowsPerBand=$rowsPerBand must divide 8")
     val cap = bucketCap(s)
     require(cap >= 1, s"graft.neardedup.bucketCap=$cap must be >= 1")
-    // effective segment size of the oversize-bucket sharding, clamped
-    // to ≥ cap so the overlap replication below is one-segment-deep
-    val shard = math.max(shardSize(s), cap)
     val nBands = 8 / rowsPerBand
-    pairsCache.get(s, s"$d|r$rowsPerBand") {
-        val sig = minhashSignatures(s, d)
-        // band signatures: the r min-hashes of each band chained base-31
-        def chain(idxs: Range) =
-          idxs.map(i => col(s"m$i")).reduceLeft((a, b) => a * 31 + b)
-        // Per-doc band signatures bs0..bs{k-1}, plus — for EVERY band —
-        // the doc's RANK inside its band-b bucket's sorted doc order
-        // (one row_number window per band, an n-row shuffle on a key
-        // the bucket aggregation shuffles on anyway). The ranks serve
-        // twice: (1) DUP-FREE generation — band b emits a pair only if
-        // no EARLIER band already emitted it, and "band p emitted
-        // (d1, d2)" is decidable map-side as
-        // bs_p(d1) = bs_p(d2) AND rank-distance in that bucket ≤ cap —
-        // exactly band p's own windowed emission condition. The union
-        // over bands is therefore EXACTLY the declared distinct pair
-        // set (per-band ROW_NUMBER window in the oracle), and the
-        // former distinct() — a shuffle of the PAIR-scale list, 4.4M
-        // rows at sf0.1 and the largest materialized surface of the
-        // chain at 100 TB — is replaced by doc-scale windows.
-        // (2) bucket SHARDING — band b's own rank assigns each doc its
-        // rank-contiguous segment, bounding the per-task bucket buffer
-        // (see the HOT-BUCKET SHARD note below).
-        var withB = sig.select(col("doc_id") +:
-          (0 until nBands).map(b =>
-            chain(b * rowsPerBand until (b + 1) * rowsPerBand).as(s"bs$b")): _*)
-        for (b <- 0 until nBands)
-          withB = withB.withColumn(s"rn$b",
-            row_number().over(Window.partitionBy(s"bs$b").orderBy("doc_id")))
-        // The union below duplicates the ranked frame's lineage into
-        // every band branch; Catalyst PRUNES the windows a branch
-        // doesn't reference (band b keeps rn0..rn_b — verified: a
-        // branch reading only rn0 plans exactly one Window op), so at
-        // the declared bandings (nBands ≤ 2) the duplicated evals cost
-        // 3 doc-scale exchanges — the same count the pre-shard form
-        // paid — and each branch's groupBy reuses its own last
-        // window's exchange (same bs_b key). Past 2 bands the
-        // per-branch re-evaluation grows k(k+1)/2, so materialize the
-        // ranked frame once instead (doc-scale rows of 2k+1 longs, the
-        // same order as the signature checkpoint feeding it).
-        if (nBands > 2) withB = withB.localCheckpoint(true)
-        // Per band: bucket-local generation (the band self-join is
-        // SKIPPED): aggregate each bucket to its sorted doc list, fan
-        // the per-position rows, emit each position's suffix pairs
-        // map-side. A HOT bucket's fan-out spreads over its n rows
-        // instead of landing in the ONE join task owning its hash key
-        // (generation+checkpoint 4.9 s → 1.9 s at sf0.1 when the two
-        // ~2.5k-doc buckets stopped serializing through one task). The
-        // fan also fixes the downstream read width: AQE had coalesced
-        // the old checkpoint to 2 partitions, running every consumer
-        // pass 2-wide. Width default/nBands per band keeps the UNION
-        // at session parallelism (ScaleShapeSpec pins it).
-        //
-        // HOT-BUCKET CAP: each position pairs with at most `cap`
-        // successors in the bucket's sorted doc order (the suffix
-        // slice length is least(cap, remaining)), so a bucket of n
-        // docs emits ≤ n·cap pairs — LINEAR in bucket size — instead
-        // of n²/2; an adversarial boilerplate bucket at 100 TB is
-        // bounded instead of unbounded-quadratic. The window is a
-        // per-position SUCCESSOR window, never a total-pair cutoff,
-        // because consecutive pairs (rank distance 1 ≤ cap for any
-        // cap ≥ 1) always survive: every bucket stays CONNECTED, so
-        // connected components over the capped pair graph equal
-        // components over the full one and the whole group-resolution
-        // family (`near_dedup_groups`, `dedup_survivors`,
-        // `dedup_cluster_stats`, `dedup_token_mass`) is bit-for-bit
-        // invariant under the cap (MinhashCapSpec pins the emission
-        // bound, the group invariance, and slice≡ROW_NUMBER-window
-        // equivalence, fixed and under scalacheck). A total-pair
-        // cutoff would drop tail positions' consecutive edges and
-        // SPLIT groups — rejected by design, not oversight. The
-        // default (4096, conf `graft.neardedup.bucketCap`) exceeds
-        // every fixture bucket (max ~2.5k docs at sf0.1), so declared
-        // fixture surfaces are unchanged while the DuckDB oracles
-        // mirror the same window — the contract is live in both
-        // engines, inert below the cap. The slice is taken BEFORE the
-        // repartition so a shuffled row carries at most `cap`
-        // successor structs: carried bytes per bucket are O(n·cap),
-        // not the O(n²) of shipping the full bucket array per row.
-        //
-        // HOT-BUCKET SHARD: the aggregation groups by (bucket,
-        // SEGMENT), not bucket alone — segment = ⌊(rank−1)/shard⌋ off
-        // band b's own rank column — so the collect_list buffer any
-        // single task holds is bounded by shard + cap entries, closing
-        // the last spill-unsafe O(bucket) single-task memory (a
-        // pathological 10M-doc boilerplate bucket lands as ~10M/shard
-        // bounded tasks, not one 10M-entry array). A doc within `cap`
-        // ranks of its segment start is REPLICATED into the previous
-        // segment (one explode row; shard ≥ cap makes one replica
-        // sufficient) as a successor CANDIDATE only — the __home flag
-        // keeps replicas out of the emitting positions — so every home
-        // position sees exactly its global rank-window successors and
-        // the pair surface is BIT-IDENTICAL to the unsharded window
-        // for any shard size (MinhashCapSpec pins surface and groups
-        // under a forced tiny shard). The default (1M) never shards a
-        // fixture bucket, so declared surfaces ride the same plan with
-        // a constant-true home flag and single-segment buckets.
-        // per-band fan widths SUM exactly to session parallelism
-        // (default ≥ nBands for both declared bandings on any real
-        // session): w_b = ⌊default/nBands⌋ + 1 for the first
-        // (default mod nBands) bands — a plain default/nBands would
-        // undershoot the union width whenever nBands doesn't divide
-        // the parallelism (local[7] → 6-wide checkpoint, narrowing
-        // every consumer; ScaleShapeSpec pins the width)
-        val base = s.sparkContext.defaultParallelism
-        val perBand = (0 until nBands).map { b =>
-          val w = math.max(1, base / nBands + (if (b < base % nBands) 1 else 0))
-          val carried = (0 until b).flatMap(p => Seq(s"bs$p", s"rn$p"))
-          // segment assignment off band b's own rank (0-based), plus
-          // the cap-deep overlap replica into the previous segment
-          val rb = col(s"rn$b")
-          val home = floor((rb - 1) / shard)
-          val segs = when(home > 0 && (rb - 1) % shard < cap,
-            array(home - 1, home)).otherwise(array(home))
-          val g = withB
-            .select(col(s"bs$b") +: (Seq("doc_id") ++ carried).map(col)
-              :+ home.as("__hs") :+ explode(segs).as("__seg"): _*)
-            .withColumn("__home", col("__hs") === col("__seg"))
-            .groupBy(col(s"bs$b"), col("__seg"))
-            .agg(sort_array(collect_list(
-              struct((Seq("doc_id") ++ carried).map(col) :+ col("__home"): _*))).as("ds"))
-            .filter(size(col("ds")) >= 2)
-            .select(posexplode(col("ds")).as(Seq("i", "x")), col("ds"))
-            // only HOME positions emit: a replica's pairs are emitted
-            // by its own home segment (dup-free across segments)
-            .filter(col("x.__home"))
-            .select(col("x"),
-              expr(s"slice(ds, i + 2, least($cap, size(ds) - i - 1))").as("succ"))
-            .repartition(w)
-            .select(col("x"), explode(col("succ")).as("y"))
-          val emittedEarlier = (0 until b).map(p =>
-              col(s"x.bs$p") === col(s"y.bs$p")
-                && abs(col(s"y.rn$p") - col(s"x.rn$p")) <= cap)
-            .reduceOption(_ || _)
-          emittedEarlier.map(c => g.filter(!c)).getOrElse(g)
-            .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-        }
-        MeasuredCheckpoint(perBand.reduce(_ union _))
-      }
+    val sig = minhashSignatures(s, d)
+    // band signatures: the r min-hashes of each band chained base-31
+    def chain(idxs: Range) =
+      idxs.map(i => col(s"m$i")).reduceLeft((a, b) => a * 31 + b)
+    // Per-doc band signatures bs0..bs{k-1}, plus — for EVERY band —
+    // the doc's RANK inside its band-b bucket's sorted doc order (one
+    // row_number window per band, on the key the successor window
+    // shuffles on anyway). The ranks give DUP-FREE generation: band b
+    // emits a pair only if no EARLIER band already emitted it, and
+    // "band p emitted (d1, d2)" is decidable map-side as
+    // bs_p(d1) = bs_p(d2) AND rank-distance in that bucket ≤ cap —
+    // exactly band p's own window condition. The union over bands is
+    // therefore EXACTLY the declared distinct pair set (per-band
+    // ROW_NUMBER window in the oracle) with no shuffle of the
+    // pair-scale list (4.4M rows at sf0.1).
+    var withB = sig.select(col("doc_id") +:
+      (0 until nBands).map(b =>
+        chain(b * rowsPerBand until (b + 1) * rowsPerBand).as(s"bs$b")): _*)
+    for (b <- 0 until nBands)
+      withB = withB.withColumn(s"rn$b",
+        row_number().over(Window.partitionBy(s"bs$b").orderBy("doc_id")))
+    // The union below duplicates the ranked frame's lineage into
+    // every band branch; Catalyst PRUNES the windows a branch doesn't
+    // reference (band b keeps rn0..rn_{b-1}), so at the declared
+    // bandings (nBands ≤ 2) the duplicated evals cost 3 doc-scale
+    // exchanges. Past 2 bands the per-branch re-evaluation grows
+    // k(k+1)/2, so materialize the ranked frame once instead (doc-scale
+    // rows of 2k+1 longs, the same order as the signature checkpoint
+    // feeding it).
+    if (nBands > 2) withB = withB.localCheckpoint(true)
+    // Per band: each doc's SUCCESSOR LIST is one window frame over its
+    // bucket's doc_id order, the next `cap` rows. No bucket is ever
+    // aggregated into one array: the window buffer spills to disk and
+    // the frame holds at most `cap` rows, so a 10M-doc boilerplate
+    // bucket costs bounded task memory. The bucket shuffle is an
+    // explicit repartition so it ships the flat columns: left to the
+    // window, the exchange would sit above the projection that builds
+    // the struct and ship it twice (as `x` and as the window's input).
+    // A hot bucket's fan-out spreads over its n rows after the
+    // round-robin repartition instead of landing in the one task owning
+    // its hash key, and that repartition also fixes the downstream read
+    // width.
+    //
+    // HOT-BUCKET CAP: a bucket of n docs emits ≤ n·cap pairs — LINEAR
+    // in bucket size — instead of n²/2. The frame is a per-position
+    // SUCCESSOR window, never a total-pair cutoff, because consecutive
+    // pairs (rank distance 1 ≤ cap for any cap ≥ 1) always survive:
+    // every bucket stays CONNECTED, so connected components over the
+    // capped pair graph equal components over the full one and the
+    // whole group-resolution family (`near_dedup_groups`,
+    // `dedup_survivors`, `dedup_cluster_stats`, `dedup_token_mass`) is
+    // bit-for-bit invariant under the cap (MinhashCapSpec pins the
+    // emission bound, the group invariance and equality with the
+    // ROW_NUMBER join, fixed and under scalacheck). A total-pair cutoff
+    // would drop tail positions' consecutive edges and SPLIT groups —
+    // rejected by design. The default (4096, conf
+    // `graft.neardedup.bucketCap`) exceeds every fixture bucket (max
+    // ~2.5k docs at sf0.1), so declared fixture surfaces are unchanged
+    // while the DuckDB oracles mirror the same window. Rows with no
+    // successor (a bucket's last doc, singleton buckets) are dropped
+    // before the repartition, so a shuffled row carries 1..cap successors.
+    //
+    // Per-band fan widths SUM exactly to session parallelism: w_b =
+    // ⌊default/nBands⌋ + 1 for the first (default mod nBands) bands — a
+    // plain default/nBands would undershoot the union width whenever
+    // nBands doesn't divide the parallelism (ScaleShapeSpec pins it).
+    val base = s.sparkContext.defaultParallelism
+    val perBand = (0 until nBands).map { b =>
+      val w = math.max(1, base / nBands + (if (b < base % nBands) 1 else 0))
+      // band 0 carries nothing, so its rows are bare doc_ids: a
+      // one-field struct ships 3x the bytes per successor
+      val carried = (0 until b).flatMap(p => Seq(s"bs$p", s"rn$p"))
+      val x = if (b == 0) col("doc_id") else struct(("doc_id" +: carried).map(col): _*)
+      def id(c: String) = if (b == 0) col(c) else col(s"$c.doc_id")
+      val g = withB.repartition(col(s"bs$b"))
+        .select(col(s"bs$b"), col("doc_id"), x.as("x"))
+        .select(col("x"), collect_list(col("x")).over(Window.partitionBy(s"bs$b")
+          .orderBy("doc_id").rowsBetween(1, cap)).as("succ"))
+        .filter(size(col("succ")) > 0)
+        .repartition(w)
+        .select(col("x"), explode(col("succ")).as("y"))
+      val emittedEarlier = (0 until b).map(p =>
+          col(s"x.bs$p") === col(s"y.bs$p")
+            && abs(col(s"y.rn$p") - col(s"x.rn$p")) <= cap)
+        .reduceOption(_ || _)
+      emittedEarlier.map(c => g.filter(!c)).getOrElse(g)
+        .select(id("x").as("d1"), id("y").as("d2"))
+    }
+    perBand.reduce(_ union _)
   }
-
-  private val pairsCache = new graft.engine.SessionCache[DataFrame]
 
   /** The per-doc feature build PLAN (pre-checkpoint), package-private
     * for ScaleShapeSpec's kernel and shape pins — [[docFeatures]]
@@ -602,26 +552,6 @@ object TextOps {
     * session via `spark.conf.set("graft.neardedup.bucketCap", n)`. */
   private[graft] def bucketCap(s: SparkSession): Int =
     s.conf.get("graft.neardedup.bucketCap", "4096").toInt
-
-  /** Segment size of the oversize-bucket SHARDING in [[minhashPairs]]:
-    * a bucket whose sorted doc order exceeds this many ranks is split
-    * into rank-contiguous segments, each aggregated (and buffered) by
-    * its own task, so the per-task `collect_list` buffer is bounded by
-    * shardSize + cap entries instead of O(bucket) — the last
-    * spill-unsafe single-task memory of the dedup chain, closed. The
-    * pair surface is BIT-IDENTICAL to the unsharded successor window
-    * for any shard size (MinhashCapSpec pins it): a doc within `cap`
-    * ranks of its segment start is replicated into the previous
-    * segment as a SUCCESSOR CANDIDATE only (never an emitting
-    * position), so every home position sees exactly its global
-    * rank-window successors. The effective size is clamped to
-    * ≥ bucketCap — that keeps the overlap one-segment-deep (a doc is
-    * needed by at most the one segment before its home). The default
-    * (1M ranks ≈ tens of MB of struct buffer) never shards a fixture
-    * bucket; override per session via
-    * `spark.conf.set("graft.neardedup.shardSize", n)`. */
-  private[graft] def shardSize(s: SparkSession): Int =
-    s.conf.get("graft.neardedup.shardSize", (1 << 20).toString).toInt
 
   /** Resolved near-dup groups `(group_id = component min doc_id,
     * member)`, memoized per (session, sfDir) within the JVM

@@ -120,12 +120,12 @@ object AdversarialFixture {
     * boilerplate string — the scraped-nav-menu shape that dominates a
     * MinHash band bucket at 100 TB. Identical token sets collapse to
     * one band signature, so the bucket size IS `hot` — run Verify
-    * under SPARK_GRAFT_CONF="graft.neardedup.bucketCap=8,
-    * graft.neardedup.shardSize=8" and the oversize-bucket shard
-    * (TextOps minhashPairs, HOT-BUCKET SHARD note) engages on DATA:
-    * ⌈hot/8⌉ rank segments with cap-deep overlap replicas, full
-    * dedup-family oracle parity still required (tools/probe_all.sh
-    * `hotbucket` profile; engagement audited by tools/ShardEngage). */
+    * under SPARK_GRAFT_CONF="graft.neardedup.bucketCap=8" and the
+    * hot-bucket cap (TextOps minhashPairs) binds on DATA: each of the
+    * `hot` docs pairs with at most 8 successors, and the DuckDB
+    * oracles' ROW_NUMBER pair windows must match the engine's
+    * successor frame row for row (tools/probe_all.sh `hotbucket`
+    * profile). */
   def write(spark: SparkSession, dir: String, seed: Long, cap: Int,
             constant: Boolean, hot: Int): Unit =
     write(spark, dir, seed, cap, constant, hot, dupIds = false)

@@ -34,14 +34,16 @@ object Plans extends AdaptiveSparkPlanHelper {
     * show only `Scan ExistingRDD` where they read a memoized
     * checkpoint — these pseudo-queries are the builder plans
     * themselves: the ANN answers, the cell ranking, the one
-    * embeddings scan under every similarity query, and the exact
-    * Jaccard truth the MinHash recall queries read. The `builder_`
-    * prefix keeps them apart from declared queries; they are not part
-    * of the bench or oracle surface. */
+    * embeddings scan under every similarity query, the MinHash
+    * candidate pairs (b=2 × r=4) every near-dup consumer reads, and
+    * the exact Jaccard truth the MinHash recall queries read. The
+    * `builder_` prefix keeps them apart from declared queries; they
+    * are not part of the bench or oracle surface. */
   val builders: Map[String, (SparkSession, String) => DataFrame] = Map(
     "builder_ann_lsh" -> ((s, d) => graft.engine.sim.Similarity.annLshPlan(s, d)),
     "builder_ann_ivf" -> ((s, d) => graft.engine.sim.Similarity.annIvfPlan(s, d)),
     "builder_cell_ranked" -> ((s, d) => graft.engine.sim.Similarity.cellRanked(s, d)),
+    "builder_minhash_pairs" -> ((s, d) => graft.engine.text.TextOps.minhashPairsPlan(s, d)),
     "builder_minhash_truth" -> ((s, d) => graft.engine.text.TextOps.minhashTruthPairs(s, d)),
     "builder_vector_scan" -> ((s, d) => graft.engine.sim.Similarity.vecsPlan(s, d)))
 

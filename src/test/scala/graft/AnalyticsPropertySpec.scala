@@ -28,7 +28,7 @@ class AnalyticsPropertySpec extends SparkSpec {
     (1 to count).flatMap(i => logGen.apply(Gen.Parameters.default, Seed(77L + i)))
 
   private def eventsDir(rows: Seq[(Long, Long, Long, String)]): String = {
-    val d = java.nio.file.Files.createTempDirectory("anprop").toString
+    val d = graft.engine.TempDirs.scratch("graft-anprop")
     rows.map { case (id, u, es, t) => (id, u, es * 1000000000L, t) }
       .toDF("event_id", "user_id", "ts", "event_type")
       .write.mode("overwrite").parquet(s"$d/events.parquet")

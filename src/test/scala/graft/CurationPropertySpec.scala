@@ -34,7 +34,7 @@ class CurationPropertySpec extends SparkSpec {
     (1 to count).flatMap(i => docsGen.apply(Gen.Parameters.default, Seed(513L + i)))
 
   private def docsDir(rows: Seq[(Long, String)]): String = {
-    val d = java.nio.file.Files.createTempDirectory("curprop").toString
+    val d = graft.engine.TempDirs.scratch("graft-curprop")
     rows.map { case (id, t) => (id, t, "en", s"src${id % 3}") }
       .toDF("doc_id", "text", "lang", "source")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
@@ -78,7 +78,7 @@ class CurationPropertySpec extends SparkSpec {
     } yield vs.map(_.map(_.toFloat).toArray)
     (1 to 3).foreach { i =>
       val vecs = vecGen.apply(Gen.Parameters.default, Seed(900L + i)).get
-      val d = java.nio.file.Files.createTempDirectory("quantprop").toString
+      val d = graft.engine.TempDirs.scratch("graft-quantprop")
       vecs.zipWithIndex.map { case (v, j) => (j.toLong, v, j % 2) }
         .toDF("vec_id", "embedding", "label")
         .write.mode("overwrite").parquet(s"$d/embeddings.parquet")

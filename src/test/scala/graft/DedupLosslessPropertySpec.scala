@@ -81,7 +81,7 @@ class DedupLosslessPropertySpec extends SparkSpec {
     (1 to count).flatMap(i => singletonCorpusGen.apply(Gen.Parameters.default, Seed(6151L + i)))
 
   private def dirOf(rows: Seq[(Long, String, String, String)]): String = {
-    val d = java.nio.file.Files.createTempDirectory("dedupprop").toString
+    val d = graft.engine.TempDirs.scratch("graft-dedupprop")
     rows.toDF("doc_id", "text", "lang", "source")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
     d

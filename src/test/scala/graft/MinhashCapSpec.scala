@@ -22,6 +22,9 @@ import graft.engine.text.TextOps
   *     fixture bucket, so the declared pair surface is unchanged from
   *     the uncapped semantics (and the DuckDB oracles, which mirror
   *     the same ROW_NUMBER window, agree with either reading).
+  *  4. SPILL SAFETY — the successor list is a window frame of at most
+  *     `cap` rows over a spillable buffer; forcing that buffer to disk
+  *     on a 200-doc hot bucket leaves the surface unchanged.
   */
 class MinhashCapSpec extends SparkSpec {
 
@@ -92,7 +95,7 @@ class MinhashCapSpec extends SparkSpec {
   test("binding cap ≡ the oracle's ROW_NUMBER window form, pair-for-pair (sf0.001, cap=8)") {
     // The DuckDB oracles express the cap as a rank-distance window
     // (ROW_NUMBER per (band, bsig) bucket, b.rn - a.rn BETWEEN 1 AND
-    // cap). The engine uses a capped suffix slice. This pins the two
+    // cap). The engine uses a 1..cap row frame. This pins the two
     // DEFINITIONS against each other with the cap genuinely BINDING
     // (cap=8 < fixture bucket sizes) — the driver's oracle gate only
     // exercises the inert default, so without this the mirrored SQL
@@ -121,7 +124,7 @@ class MinhashCapSpec extends SparkSpec {
       .select("d1", "d2").distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(engine === ref,
-      s"suffix-slice cap diverges from the ROW_NUMBER window: " +
+      s"successor-frame cap diverges from the ROW_NUMBER window: " +
         s"only-engine=${(engine -- ref).take(5)} only-ref=${(ref -- engine).take(5)}")
     assert(engine.nonEmpty)
   }
@@ -130,7 +133,7 @@ class MinhashCapSpec extends SparkSpec {
     // Generalizes the fixed pins: small-vocab random corpora (low
     // entropy forces real band collisions, the hot-bucket regime) and
     // caps drawn from 1..6, checking on every sample that
-    //  (a) the suffix-slice pair set equals the rank-window reference
+    //  (a) the successor-frame pair set equals the rank-window reference
     //      derived independently from the signature table, and
     //  (b) connected components over capped pairs equal components
     //      over UNCAPPED pairs (the group-resolution invariance).
@@ -149,7 +152,7 @@ class MinhashCapSpec extends SparkSpec {
       corpusGen.apply(Gen.Parameters.default, Seed(907L + i)))
     for (((cap, texts), si) <- samples.zipWithIndex) {
       import spark.implicits._
-      val dir = graft.engine.TempDirs.scratch(s"capprop$si")
+      val dir = graft.engine.TempDirs.scratch(s"graft-capprop$si")
       texts.zipWithIndex.map { case (t, i) =>
         (i.toLong, t, "en", "web", t.length.toLong)
       }.toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -174,7 +177,7 @@ class MinhashCapSpec extends SparkSpec {
         .filter(col("r2") - col("r1") >= 1 && col("r2") - col("r1") <= cap)
         .select("d1", "d2").distinct()
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(capped === ref, s"sample $si (cap=$cap): slice ≠ window")
+      assert(capped === ref, s"sample $si (cap=$cap): successor frame ≠ rank window")
       // (b) components over capped == components over uncapped,
       //     via driver union-find over each pair set
       def components(pairs: Set[(Long, Long)]): Map[Long, Long] = {
@@ -208,121 +211,74 @@ class MinhashCapSpec extends SparkSpec {
     assert(def_ === uncapped)
   }
 
-  // ------------------------------------------------ bucket SHARDING
+  // ------------------------------------------- spill-safe bucket memory
 
-  test("forced tiny shard: pair surface and groups bit-identical on sf0.001 (cap=8 binding)") {
-    // The oversize-bucket shard (conf `graft.neardedup.shardSize`)
-    // bounds the per-task collect_list buffer to shard + cap entries.
-    // Forcing shard=8 with a BINDING cap=8 makes every fixture bucket
-    // larger than one segment, exercising the segment split AND the
-    // cap-deep overlap replication — and the declared surfaces must
-    // not move by one bit.
-    val base = withConf("graft.neardedup.bucketCap", "8") {
-      TextOps.minhashPairs(spark, sf0001)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+  /** Bytes the tasks `f` runs spill to disk, summed on a listener; a
+    * marker job drains the bus (it delivers in order, so once the
+    * marker job's start arrives every task end of `f` has been seen). */
+  private def diskBytesSpilled[A](f: => A): (A, Long) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val marker = "capspec-spill-drained"
+    val spilled = new java.util.concurrent.atomic.AtomicLong
+    @volatile var drained = false
+    val listener = new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach(m => spilled.addAndGet(m.diskBytesSpilled))
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).map(_.getProperty("spark.jobGroup.id")).contains(marker))
+          drained = true
     }
-    val sharded = withConf("graft.neardedup.bucketCap", "8") {
-      withConf("graft.neardedup.shardSize", "8") {
-        TextOps.minhashPairs(spark, sf0001)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = f
+      sc.setJobGroup(marker, marker)
+      sc.parallelize(Seq(1), 1).count()
+      var waited = 0
+      while (!drained && waited < 10000) { Thread.sleep(50); waited += 50 }
+      assert(drained, "listener bus did not deliver the marker job")
+      (out, spilled.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
     }
-    assert(sharded === base,
-      s"shard changed the pair surface: only-sharded=${(sharded -- base).take(5)} " +
-        s"only-base=${(base -- sharded).take(5)}")
-    assert(sharded.nonEmpty)
-    // and the resolved GROUPS under the default cap, sharded vs not
-    val g0 = TextOps.resolveGroups(spark, sf0001, maxEdges = 1000000L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val g1 = withConf("graft.neardedup.shardSize", "2") {
-      // effective shard clamps to max(2, cap=4096) = 4096 — still
-      // larger than any fixture bucket, so this leg pins the CLAMP;
-      // the binding-shard group leg runs with cap forced small
-      TextOps.resolveGroups(spark, sf0001, maxEdges = 1000000L)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    }
-    assert(g1 === g0)
-    val g2 = withConf("graft.neardedup.bucketCap", "2") {
-      withConf("graft.neardedup.shardSize", "3") {
-        TextOps.resolveGroups(spark, sf0001, maxEdges = 1000000L)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      }
-    }
-    assert(g2 === g0, "groups diverge under a forced tiny (cap=2, shard=3)")
   }
 
-  test("hot bucket under forced sharding emits the exact capped count and one group") {
-    // 30 identical docs = one 30-doc bucket per band; shard=4 splits it
-    // into 8 segments per band. The emission count must equal the
-    // UNsharded capped window exactly (Σ min(cap, suffix)), dup-free,
-    // and the bucket must stay one connected group.
-    val dir = writeHotBucketCorpus(nDup = 30)
-    val cap = 4
+  test("forced window spill: a 200-doc hot bucket spills and emits the same capped surface") {
+    // The successor list is a window frame, so no task ever holds a
+    // whole bucket: Spark's window buffer spills and the frame keeps
+    // at most `cap` rows. Forcing the buffer to disk (1 row in memory,
+    // a spill every 32 rows — a spill threshold of 1 opens one read
+    // buffer per row and runs the task out of memory) must leave the
+    // pair surface, its exact capped count, its dup-freeness and the
+    // bucket's single group unchanged. The forced leg runs under a
+    // fresh memo epoch: memo keys carry only graft.* confs, so a
+    // spark.sql.* flip alone would be served the unspilled memo.
+    val dir = writeHotBucketCorpus(nDup = 200)
+    val cap = 8
+    def pairs(): Seq[(Long, Long)] =
+      TextOps.minhashPairs(spark, dir).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     withConf("graft.neardedup.bucketCap", cap.toString) {
-      withConf("graft.neardedup.shardSize", "4") {
-        val raw = TextOps.minhashPairs(spark, dir)
-        assert(raw.count() === cappedBucketPairs(30, cap))
-        val maxDup = raw.groupBy("d1", "d2").agg(count(lit(1)).as("n"))
-          .agg(max("n")).head.getLong(0)
-        assert(maxDup === 1L, "sharded generation emitted a pair twice")
-        val grp = TextOps.resolveGroups(spark, dir, maxEdges = 1000000L)
-        val groups = grp.groupBy("group_id").agg(count(lit(1)).as("sz")).collect()
-        assert(groups.length === 1 && groups.head.getLong(1) === 30L)
-      }
-    }
-  }
-
-  test("property: random corpora × random caps × random shards — surface equals the rank window") {
-    // The sharded generation must equal the shard-FREE rank-window
-    // reference for every (cap, shard) draw: the reference below is
-    // derived independently from the signature table and never sees
-    // the shard conf, so equality proves shard-inertness in general
-    // form (segments, overlap replication, home-only emission).
-    import org.scalacheck.Gen
-    import org.scalacheck.rng.Seed
-    import org.apache.spark.sql.expressions.Window
-    val corpusGen = for {
-      n <- Gen.choose(8, 40)
-      cap <- Gen.choose(1, 6)
-      shard <- Gen.choose(2, 9)
-      rows <- Gen.listOfN(n, for {
-        k <- Gen.choose(1, 6)
-        ws <- Gen.listOfN(k, Gen.oneOf("aa", "bb", "cc", "dd"))
-      } yield ws.mkString(" "))
-    } yield (cap, shard, rows)
-    val samples = (1 to 4).flatMap(i =>
-      corpusGen.apply(Gen.Parameters.default, Seed(4177L + i)))
-    for (((cap, shard, texts), si) <- samples.zipWithIndex) {
-      import spark.implicits._
-      val dir = graft.engine.TempDirs.scratch(s"shardprop$si")
-      texts.zipWithIndex.map { case (t, i) =>
-        (i.toLong, t, "en", "web", t.length.toLong)
-      }.toDF("doc_id", "text", "lang", "source", "n_chars")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val sharded = withConf("graft.neardedup.bucketCap", cap.toString) {
-        withConf("graft.neardedup.shardSize", shard.toString) {
-          TextOps.minhashPairs(spark, dir)
-            .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val base = pairs()
+      val ((forced, groups), spilled) =
+        withConf("spark.sql.windowExec.buffer.in.memory.threshold", "1") {
+          withConf("spark.sql.windowExec.buffer.spill.threshold", "32") {
+            diskBytesSpilled {
+              graft.engine.SessionCache.freshEpoch("capspec-spill") {
+                (pairs(), TextOps.resolveGroups(spark, dir, maxEdges = 1000000L)
+                  .groupBy("group_id").agg(count(lit(1)).as("sz"))
+                  .collect().map(_.getLong(1)).toSeq)
+              }
+            }
+          }
         }
-      }
-      val sig = TextOps.minhashSignatures(spark, dir)
-      def chain(idxs: Range) =
-        idxs.map(i => col(s"m$i")).reduceLeft((a, b) => a * 31 + b)
-      val bands = (0 until 2).map { b =>
-          sig.select(col("doc_id"), lit(b.toLong).as("band"),
-            chain(b * 4 until (b + 1) * 4).as("bsig"))
-        }.reduce(_ union _)
-      val rb = bands.withColumn("rn", row_number().over(
-        Window.partitionBy("band", "bsig").orderBy("doc_id")))
-      val ref = rb.select(col("band"), col("bsig"), col("doc_id").as("d1"), col("rn").as("r1"))
-        .join(rb.select(col("band"), col("bsig"), col("doc_id").as("d2"), col("rn").as("r2")),
-          Seq("band", "bsig"))
-        .filter(col("r2") - col("r1") >= 1 && col("r2") - col("r1") <= cap)
-        .select("d1", "d2").distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(sharded === ref,
-        s"sample $si (cap=$cap shard=$shard): sharded slice ≠ rank window: " +
-          s"only-engine=${(sharded -- ref).take(5)} only-ref=${(ref -- sharded).take(5)}")
+      assert(spilled > 0L, "the forced leg spilled nothing: the window buffer was not exercised")
+      assert(forced.toSet === base.toSet,
+        s"spilling changed the pair surface: only-spilled=${(forced.toSet -- base.toSet).take(5)} " +
+          s"only-base=${(base.toSet -- forced.toSet).take(5)}")
+      assert(forced.length === cappedBucketPairs(200, cap))
+      assert(forced.length === forced.toSet.size, "spilled generation emitted a pair twice")
+      assert(groups === Seq(200L), s"the hot bucket split into groups of sizes $groups")
     }
   }
 
@@ -352,7 +308,7 @@ class MinhashCapSpec extends SparkSpec {
       corpusGen.apply(Gen.Parameters.default, Seed(6211L + i)))
     for (((cap, texts), si) <- samples.zipWithIndex) {
       import spark.implicits._
-      val dir = graft.engine.TempDirs.scratch(s"band4prop$si")
+      val dir = graft.engine.TempDirs.scratch(s"graft-band4prop$si")
       texts.zipWithIndex.map { case (t, i) =>
         (i.toLong, t, "en", "web", t.length.toLong)
       }.toDF("doc_id", "text", "lang", "source", "n_chars")

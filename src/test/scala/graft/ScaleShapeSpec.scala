@@ -325,7 +325,7 @@ class ScaleShapeSpec extends SparkSpec {
       val plan = graft.SparkEntry.queries(k)(spark, sf0001)
         .queryExecution.optimizedPlan.toString
       val all = "windowspecdefinition\\(".r.findAllIn(plan).size
-      val byNation = "windowspecdefinition\\(c_nationkey".r.findAllIn(plan).size
+      val byNation = "windowspecdefinition\\(c_nationkey#\\d+".r.findAllIn(plan).size
       assert(all > 0 && all == byNation,
         s"$k: $byNation of $all windows partition by c_nationkey:\n$plan")
     }
@@ -348,7 +348,7 @@ class ScaleShapeSpec extends SparkSpec {
     val cplan = graft.SparkEntry.queries("chunk_dedup")(spark, sf0001)
       .queryExecution.optimizedPlan.toString
     val allW = "windowspecdefinition\\(".r.findAllIn(cplan).size
-    val byFp = "windowspecdefinition\\(fp".r.findAllIn(cplan).size
+    val byFp = "windowspecdefinition\\(fp#\\d+".r.findAllIn(cplan).size
     assert(allW > 0 && allW == byFp,
       s"chunk_dedup windows must partition on the fingerprint ($byFp of $allW):\n$cplan")
     for (k <- Seq("psi_drift", "embedding_centroid_shift", "zorder_layout_audit")) {
@@ -384,7 +384,7 @@ class ScaleShapeSpec extends SparkSpec {
       val plan = graft.SparkEntry.queries(k)(spark, sf0001)
         .queryExecution.optimizedPlan.toString
       val all = "windowspecdefinition\\(".r.findAllIn(plan).size
-      val byUser = "windowspecdefinition\\(user_id".r.findAllIn(plan).size
+      val byUser = "windowspecdefinition\\(user_id#\\d+".r.findAllIn(plan).size
       assert(all > 0 && all == byUser,
         s"$k: $byUser of $all windows partition by user_id:\n$plan")
       assert(!plan.contains("Join"), s"$k must be join-free (union+window form):\n$plan")
@@ -423,7 +423,7 @@ class ScaleShapeSpec extends SparkSpec {
       .queryExecution.optimizedPlan.toString
     assert(!sub.contains("Join"), s"substring dedup must be join-free:\n$sub")
     val all = "windowspecdefinition\\(".r.findAllIn(sub).size
-    val byFp = "windowspecdefinition\\(fp".r.findAllIn(sub).size
+    val byFp = "windowspecdefinition\\(fp#\\d+".r.findAllIn(sub).size
     assert(all > 0 && all == byFp,
       s"span-count windows must partition by fp ($byFp of $all):\n$sub")
     // tokenizer_fertility: map-side regex counts into ONE hash agg —
@@ -552,10 +552,16 @@ class ScaleShapeSpec extends SparkSpec {
     // materialized, each recall consumer's physical plan reads the
     // checkpointed RDDs (pairs + truth) and touches the documents
     // parquet only for the two per-doc sample-flag dim joins — a
-    // chain re-derivation would put the signature/pair fabrication
-    // (posexplode + suffix slice) or the truth verification
+    // chain re-derivation would put the pair build's successor frame
+    // (`RowFrame, 1,` — no other window in the chain has a frame
+    // starting one row ahead) or the truth verification
     // (array_intersect) back into these plans and fail the pins below.
     import graft.engine.text.TextOps
+    val build = TextOps.minhashPairsPlan(spark, sf0001)
+    build.collect()
+    assert(build.queryExecution.executedPlan.toString.contains("RowFrame, 1,"),
+      s"the pair build lost its successor frame, so the pin below is vacuous:\n" +
+        build.queryExecution.executedPlan)
     TextOps.distinctTokens(spark, sf0001).count()
     TextOps.docTokenArrays(spark, sf0001).count()
     TextOps.minhashPairs(spark, sf0001, rowsPerBand = 4).count()
@@ -571,7 +577,7 @@ class ScaleShapeSpec extends SparkSpec {
         s"$k warm plan re-scans parquet $parquetScans times (chain re-derivation?):\n$phys")
       assert(rddScans >= 2,
         s"$k warm plan must read the pair + truth checkpoints (got $rddScans RDD scans):\n$phys")
-      assert(!phys.contains("posexplode") && !phys.contains("array_intersect"),
+      assert(!phys.contains("RowFrame, 1,") && !phys.contains("array_intersect"),
         s"$k warm plan rebuilds the pair surface or the truth:\n$phys")
     }
   }

@@ -27,7 +27,7 @@ class TextModelPropertySpec extends SparkSpec {
     (1 to count).flatMap(i => corpusGen.apply(Gen.Parameters.default, Seed(991L + i)))
 
   private def dirOf(rows: Seq[(Long, String, String, String)]): String = {
-    val d = java.nio.file.Files.createTempDirectory("txtprop").toString
+    val d = graft.engine.TempDirs.scratch("graft-txtprop")
     rows.toDF("doc_id", "text", "lang", "source")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
     d

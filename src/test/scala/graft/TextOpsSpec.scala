@@ -23,7 +23,7 @@ class TextOpsSpec extends SparkSpec {
   )
 
   private def writeFixture(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("textops").toString
+    val dir = graft.engine.TempDirs.scratch("graft-textops")
     docsFixture.toDF("doc_id", "text", "lang", "source")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir
@@ -101,7 +101,7 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("rag_chunk: 32/24 stride boundaries, short tail, single-chunk short docs") {
-    val dir2 = java.nio.file.Files.createTempDirectory("ragchunk").toString
+    val dir2 = graft.engine.TempDirs.scratch("graft-ragchunk")
     val longText = (1 to 40).map(i => s"t$i").mkString(" ") // 40 tokens
     Seq((0L, longText, "en", "s0"), (1L, "a b c", "en", "s0"))
       .toDF("doc_id", "text", "lang", "source")
@@ -156,7 +156,7 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("decontaminate_ngram: 8-gram containment vs the src0 eval set, hand-computed") {
-    val d2 = java.nio.file.Files.createTempDirectory("decontam").toString
+    val d2 = graft.engine.TempDirs.scratch("graft-decontam")
     Seq(
       (0L, "a b c d e f g h i", "en", "src0"), // eval: shingles {a..h, b..i}
       (1L, "a b c d e f g h z", "en", "src1"), // 2 shingles, 1 hit → 0.5
@@ -195,7 +195,7 @@ class TextOpsSpec extends SparkSpec {
   }
 
   private def writeDocs(rows: Seq[(Long, String, String, String)]): String = {
-    val d = java.nio.file.Files.createTempDirectory("textops2").toString
+    val d = graft.engine.TempDirs.scratch("graft-textops2")
     rows.toDF("doc_id", "text", "lang", "source")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
     d

@@ -79,16 +79,16 @@ profile_args() {
   esac
 }
 
-# profile name -> SPARK_GRAFT_CONF for the Verify/audit JVMs. The
-# hotbucket profile shrinks the near-dedup cap and shard so the
-# oversize-bucket shard engages on the 500-doc boilerplate bucket;
-# ConfEnv applies the SAME values to the engine session and the
-# oracle-SQL pair windows, so parity stays exact. The fanoff profile
+# profile name -> SPARK_GRAFT_CONF for the Verify JVM. The hotbucket
+# profile shrinks the near-dedup cap so it binds on the 500-doc
+# boilerplate bucket; ConfEnv applies the SAME value to the engine
+# session and the oracle-SQL pair windows, so the cap-binding DuckDB
+# parity is the data-level audit of the successor window. The fanoff profile
 # is the seed0 fixture with the post-shuffle re-fan off (the cluster
 # setting of graft.fan.postShuffle): results must not move.
 profile_conf() {
   case "$1" in
-    hotbucket) echo "graft.neardedup.bucketCap=8,graft.neardedup.shardSize=8" ;;
+    hotbucket) echo "graft.neardedup.bucketCap=8" ;;
     fanoff)    echo "graft.fan.postShuffle=off" ;;
     *)         echo "" ;;
   esac
@@ -166,20 +166,6 @@ for prof in "${PROFILES[@]}"; do
   elif [ "$crashes" -eq 0 ]; then
     echo "   OK: 0 crashes, $n_pass/$oracled oracle-parity green"
     summary+=("$prof: OK ($n_pass/$oracled)")
-  fi
-
-  # hotbucket: the parity above is only half the contract — also prove
-  # the oversize-bucket shard actually ENGAGED on this fixture's data.
-  if [ "$prof" = "hotbucket" ]; then
-    if SPARK_GRAFT_CONF="$conf" java $JVM_OPTS -cp "$CP" \
-         graft.tools.ShardEngage "$fix" > "$WORK/$prof/engage.out" 2>&1; then
-      grep '^\[shard-engage\]' "$WORK/$prof/engage.out" | sed 's/^/   /'
-      summary+=("$prof: shard engaged (audit exact)")
-    else
-      echo "   SHARD ENGAGEMENT FAILED:"
-      tail -5 "$WORK/$prof/engage.out" | sed 's/^/   | /'
-      overall=1; summary+=("$prof: shard NOT engaged / audit diverged")
-    fi
   fi
 done
 
