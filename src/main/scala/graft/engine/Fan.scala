@@ -29,7 +29,8 @@ import org.apache.spark.sql.DataFrame
   * ([[SessionCache]]), so a flip mid-session rebuilds the re-fanned
   * artifacts: the two similarity memos `Similarity.cellRankedCached`
   * and `Similarity.lshSignaturesCached`. The text family's 8-gram set
-  * has no shuffle left to undo.
+  * is a column of the fanned `TextOps.docFeatures` checkpoint, so it
+  * has no shuffle to undo.
   */
 object Fan {
   private val widthCache = new SessionCache[java.lang.Boolean]

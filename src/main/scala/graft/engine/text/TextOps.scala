@@ -113,35 +113,37 @@ object TextOps {
         lit(foldWidth(df.sparkSession))))
   }
 
-  /** The word-n-gram set of each document, one row per (keep-cols,
-    * ngram), memoized per (session, sfDir, n, keep) as a measured
-    * checkpoint: the 8-gram set has several declared consumers
-    * (`decontaminate_ngram`, `boilerplate_ngrams`,
-    * `eval_contamination_report`), each reading it several times
-    * (document frequencies, join sides, size counts), so the
-    * split+explode runs ONCE (the round-2 ngram recompute lesson). The
-    * split is hoisted into a projected array column — inlining it into
-    * the kernel call re-splits the text per element.
-    *
-    * The plan is fan → explode → checkpoint, with no shuffle: the
-    * codegen'd `ngram_strings` kernel emits each doc's DISTINCT
-    * shingles, the keep cols are doc constants, and `doc_id` is the
-    * documents table's primary key ([[graft.engine.Tables.requirePk]]),
-    * so no two rows can share (keep, ng) and a global distinct would
-    * shuffle the whole shingle surface to remove nothing. The fanned
-    * input gives the checkpoint session width without a re-fan.
-    * Caveat: under `graft.pk.check=skip` a duplicated doc_id emits its
-    * shingles once per duplicate row — the engine-defined behaviour of
-    * every id-keyed operator over a broken key. */
-  private val ngramCache = new graft.engine.SessionCache[DataFrame]
+  /** The word-8-gram set of each document, one row per (keep-cols,
+    * ng): the `ng8` column of [[docFeatures]] exploded, so the set is
+    * stored once, as one array per doc, and width 8 is the only one.
+    * No distinct is needed: the codegen'd `ngram_strings` kernel emits
+    * each doc's DISTINCT shingles, the keep cols (columns of
+    * [[docFeatures]]) are doc constants, and `doc_id` is the documents
+    * table's primary key ([[graft.engine.Tables.requirePk]]), so no
+    * two rows share (keep, ng). Caveat: under `graft.pk.check=skip` a
+    * duplicated doc_id emits its shingles once per duplicate row — the
+    * engine-defined behaviour of every id-keyed operator over a broken
+    * key. */
   private[graft] def ngramSetCached(s: SparkSession, d: String, n: Int,
-                             keep: Seq[String]): DataFrame =
-    ngramCache.get(s, s"$d|n$n|${keep.mkString(",")}") {
-      graft.engine.expr.GraftFunctions.register(s)
-      MeasuredCheckpoint(docsF(s, d)
-        .select(keep.map(col) :+ split(col("text"), " ").as("w"): _*)
-        .select(keep.map(col) :+ explode(expr(s"ngram_strings(w, $n)")).as("ng"): _*))
-    }
+                             keep: Seq[String]): DataFrame = {
+    require(n == 8, s"only the 8-gram set is stored (docFeatures.ng8); got n = $n")
+    docFeatures(s, d).select(keep.map(col) :+ explode(col("ng8")).as("ng"): _*)
+  }
+
+  /** Per doc that `side` selects and that shares a shingle with
+    * `against`: its 8-gram count `n_sh`, its shared count `n_hit` and
+    * their ratio as `share`. `n_sh` is the array's size (the kernel
+    * emits distinct shingles), so it needs no count shuffle; the
+    * coalesce only keeps it non-nullable (NULL text explodes no row). */
+  private def shingleHits(s: SparkSession, d: String, side: Column, against: DataFrame,
+                          share: String): DataFrame =
+    docFeatures(s, d).filter(side).select(col("doc_id"),
+      coalesce(size(col("ng8")), lit(0)).cast("long").as("n_sh"), explode(col("ng8")).as("sh"))
+      .join(against, Seq("sh"), "left_semi")
+      .groupBy("doc_id", "n_sh").agg(count(lit(1)).as("n_hit"))
+      .select(col("doc_id"), col("n_sh"), col("n_hit"),
+        round(col("n_hit") / col("n_sh"), 6).as(share))
+      .orderBy("doc_id")
 
   /** Adds the `tid` column to any frame with a `token` column,
     * REDUCED mod P: every consumer multiplies tid under mod P, so the
@@ -208,6 +210,12 @@ object TextOps {
     // rows of 2k+1 longs, the same order as the signature checkpoint
     // feeding it).
     if (nBands > 2) withB = withB.localCheckpoint(true)
+    // Band 0's bucket repartition and band 1's rank window both shuffle
+    // on bs0. One `repartition(bs0)` under both branches is not reused:
+    // column pruning drops bs1 below band 0's copy (final plan: still 5
+    // shuffles at b=2 × r=4, no reused exchange). Chaining band 1 after
+    // band 0's window shares it, but then band 0's successor lists (up
+    // to `cap` ids a row) cross the bs1 exchange: n·cap ids shipped twice.
     // Per band: each doc's SUCCESSOR LIST is one window frame over its
     // bucket's doc_id order, the next `cap` rows. No bucket is ever
     // aggregated into one array: the window buffer spills to disk and
@@ -289,19 +297,22 @@ object TextOps {
     *    interpreted `transform(..., i -> fold_hex(md5(concat_ws(...))))`
     *    HOF ran its whole lambda per trigram;
     *  - `simhash`: the codegen'd `simhash16` kernel. Σ sign over the token
-    *    MULTISET, so it reads the split array, not `arr`.
+    *    MULTISET, so it reads the split array, not `arr`;
+    *  - `source`, `ng8`: the doc's source and the codegen'd
+    *    `ngram_strings` kernel's DISTINCT word-8-gram shingles (an empty
+    *    array under 8 tokens), the set [[ngramSetCached]] explodes.
     * NgramFoldSpec pins every kernel bit-for-bit against its HOF or
     * exploded form, so every downstream hash is unchanged. */
   private[graft] def docFeaturesPlan(s: SparkSession, d: String): DataFrame = {
     graft.engine.expr.GraftFunctions.register(s)
     val fw = foldWidth(s)
-    docsF(s, d).select(col("doc_id"), split(col("text"), " ").as("w"))
-      .select(col("doc_id"), col("w"), size(col("w")).as("n_w"),
+    docsF(s, d).select(col("doc_id"), col("source"), split(col("text"), " ").as("w"))
+      .select(col("doc_id"), col("source"), col("w"), size(col("w")).as("n_w"),
         sort_array(array_distinct(col("w"))).as("arr"))
-      .select(col("doc_id"), col("w").isNotNull.as("has_text"), col("n_w"), col("arr"),
-        expr(s"minhash8(arr, $fw)").as("mh"),
+      .select(col("doc_id"), col("source"), col("w").isNotNull.as("has_text"), col("n_w"),
+        col("arr"), expr(s"minhash8(arr, $fw)").as("mh"),
         when(col("n_w") >= 3, expr(s"ngram_fold_ids(w, 3, $fw)")).as("tri"),
-        expr("simhash16(w)").as("simhash"))
+        expr("simhash16(w)").as("simhash"), expr("ngram_strings(w, 8)").as("ng8"))
   }
 
   /** [[docFeaturesPlan]] memoized per (session, sfDir) as ONE measured
@@ -1131,21 +1142,10 @@ object TextOps {
     // never doc×doc); at 100 TB the eval side is tiny and AQE
     // broadcasts it. Contamination = |train-shingles ∩ eval-shingles|
     // / |train-shingles| — one exact int division; only contaminated
-    // docs (n_hit > 0, via the inner join) surface.
-    "decontaminate_ngram" -> ((s, d) => {
-      // the shingle set feeds FOUR consumers (eval side, train side →
-      // totals and hits) — ngramSetCached materializes it once
-      val sh = ngramSetCached(s, d, 8, Seq("doc_id", "source")).withColumnRenamed("ng", "sh")
-      val ev = sh.filter(col("source") === "src0").select("sh").distinct()
-      val tr = sh.filter(col("source") =!= "src0").select("doc_id", "sh")
-      val tot = tr.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-      val hit = tr.join(ev, Seq("sh"), "left_semi")
-        .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
-      tot.join(hit, "doc_id")
-        .select(col("doc_id"), col("n_sh"), col("n_hit"),
-          round(col("n_hit") / col("n_sh"), 6).as("contamination"))
-        .orderBy("doc_id")
-    }),
+    // docs (n_hit > 0: no row past the semi-join otherwise) surface.
+    "decontaminate_ngram" -> ((s, d) =>
+      shingleHits(s, d, col("source") =!= "src0", ngramSetCached(s, d, 8, Seq("source"))
+        .filter(col("source") === "src0").select(col("ng").as("sh")).distinct(), "contamination")),
 
     // multimodal/byte surface: opaque bytes + typed digests (zh docs
     // make octet_length ≠ char length)
@@ -1501,15 +1501,14 @@ object TextOps {
     // BOILERPLATE mining: the 20 most document-frequent 8-token
     // shingles — the literal strings (headers, footers, cookie
     // banners, license blurbs) a curator strips corpus-wide before
-    // training. Reads the SHARED memoized 8-gram set (same frame
-    // `decontaminate_ngram` consumes), so the shingle shuffle is paid
-    // once per session. Scale shape: hash agg on the shingle key →
+    // training. Explodes the per-doc shingle arrays of the feature
+    // checkpoint `decontaminate_ngram` reads too; each doc's shingles
+    // are distinct, so a shingle's row count is its document
+    // frequency. Scale shape: hash agg on the shingle key →
     // TakeOrdered top-k (per-partition partials, never a global
     // sort); ranking key (df desc, ng asc) is deterministic.
     "boilerplate_ngrams" -> ((s, d) =>
-      // same memo entry decontaminate_ngram reads (doc determines
-      // source, so the per-doc distinct shingle set is unchanged)
-      ngramSetCached(s, d, 8, Seq("doc_id", "source"))
+      ngramSetCached(s, d, 8, Nil)
         .groupBy("ng").agg(count(lit(1)).as("df"))
         .orderBy(desc("df"), col("ng")).limit(20)),
 
@@ -2050,26 +2049,18 @@ object TextOps {
     // training side, and the leaked share — the "is this benchmark
     // still valid" audit a curator publishes next to the train-side
     // scrub list. Like `decontaminate_ngram`, ONLY leaked docs
-    // surface (n_hit ≥ 1 via the inner join): a fully clean benchmark
-    // reports an empty table by declared design — absence means
-    // clean, not unanalyzed. Rides the SAME memoized 8-gram set; the
+    // surface (n_hit ≥ 1: a doc with no hit keeps no row past the
+    // semi-join): a fully clean benchmark reports an empty table by
+    // declared design — absence means clean, not unanalyzed. Reads the
+    // same per-doc shingle arrays of the feature checkpoint; the
     // sides meet in one left-semi equi-join on the shingle key — semi-join
     // semantics dedupe the probe side for free, so the big train set
     // is NOT distinct-collapsed first (that full extra shuffle of the
     // corpus-sized set was 2.8 s → 1.0 s of the sf0.1 bench); never
     // doc×doc.
-    "eval_contamination_report" -> ((s, d) => {
-      val sh = ngramSetCached(s, d, 8, Seq("doc_id", "source")).withColumnRenamed("ng", "sh")
-      val tr = sh.filter(col("source") =!= "src0").select("sh")
-      val ev = sh.filter(col("source") === "src0").select("doc_id", "sh")
-      val tot = ev.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-      val hit = ev.join(tr, Seq("sh"), "left_semi")
-        .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
-      tot.join(hit, "doc_id")
-        .select(col("doc_id"), col("n_sh"), col("n_hit"),
-          round(col("n_hit") / col("n_sh"), 6).as("leakage"))
-        .orderBy("doc_id")
-    }),
+    "eval_contamination_report" -> ((s, d) =>
+      shingleHits(s, d, col("source") === "src0", ngramSetCached(s, d, 8, Seq("source"))
+        .filter(col("source") =!= "src0").select(col("ng").as("sh")), "leakage")),
 
     // DSIR-style importance weighting (Xie et al. 2023, hashed-ngram
     // variant reduced to unigram features): every candidate training

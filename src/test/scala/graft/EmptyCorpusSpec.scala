@@ -15,7 +15,7 @@ import graft.engine.text.TextOps
 class EmptyCorpusSpec extends SparkSpec {
 
   private lazy val emptyDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("emptycorpus").toString
+    val d = graft.engine.TempDirs.scratch("graft-emptycorpus")
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType)))

@@ -68,11 +68,11 @@ class EventOpsSpec extends SparkSpec {
     // ns-epoch long) and as TIMESTAMP(MICROS) (read as TIMESTAMP_NTZ);
     // the loader must yield the same TimestampType rows for both.
     val rows = Seq((1L, 7L, 1000L, "view"), (2L, 8L, 2000L, "click"))
-    val dNs = java.nio.file.Files.createTempDirectory("evns").toString
+    val dNs = graft.engine.TempDirs.scratch("graft-evns")
     rows.map { case (id, u, es, t) => (id, u, es * 1000000000L, t) }
       .toDF("event_id", "user_id", "ts", "event_type")
       .write.mode("overwrite").parquet(s"$dNs/events.parquet")
-    val dUs = java.nio.file.Files.createTempDirectory("evus").toString
+    val dUs = graft.engine.TempDirs.scratch("graft-evus")
     rows.toDF("event_id", "user_id", "es", "event_type")
       .withColumn("ts", org.apache.spark.sql.functions.expr(
         "CAST(timestamp_micros(es * 1000000) AS TIMESTAMP_NTZ)"))
@@ -89,7 +89,7 @@ class EventOpsSpec extends SparkSpec {
     * LONG of epoch NANOseconds (Tables.events floors it to µs). */
   private def eventsDir(rows: Seq[(Long, Long, Long, String)]): String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("evops").toString
+    val d = graft.engine.TempDirs.scratch("graft-evops")
     rows.map { case (id, u, es, t) => (id, u, es * 1000000000L, t) }
       .toDF("event_id", "user_id", "ts", "event_type")
       .write.mode("overwrite").parquet(s"$d/events.parquet")

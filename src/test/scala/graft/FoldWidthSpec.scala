@@ -24,7 +24,7 @@ class FoldWidthSpec extends SparkSpec {
   )
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("foldwidth").toString
+    val d = graft.engine.TempDirs.scratch("graft-foldwidth")
     docsFixture.toDF("doc_id", "text", "lang", "source")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
     d

@@ -47,47 +47,39 @@ class GuardrailSpec extends SparkSpec {
   }
 
   test("dataFingerprint (file) catches an equal-length same-second content rewrite") {
-    val d = java.nio.file.Files.createTempDirectory("graft_fpfile")
-    val f = d.resolve("t.parquet")
-    try {
-      // pin mtime to a whole-second granule — the coarse-mtime
-      // filesystem case where the old (mtime, length) pair collided
-      val ts = System.currentTimeMillis() / 1000 * 1000
-      java.nio.file.Files.write(f, "aaaaaaaa".getBytes("UTF-8"))
-      assert(f.toFile.setLastModified(ts))
-      val fp1 = SessionCache.dataFingerprint(f.toString)
-      java.nio.file.Files.write(f, "bbbbbbbb".getBytes("UTF-8")) // same length
-      assert(f.toFile.setLastModified(ts)) // same mtime
-      val fp2 = SessionCache.dataFingerprint(f.toString)
-      assert(fp1 != fp2, "the tail hash must see the content change")
-    } finally {
-      java.nio.file.Files.deleteIfExists(f)
-      java.nio.file.Files.deleteIfExists(d)
-    }
+    val f = java.nio.file.Paths.get(TempDirs.scratch("graft-fpfile"), "t.parquet")
+    // pin mtime to a whole-second granule — the coarse-mtime
+    // filesystem case where the old (mtime, length) pair collided
+    val ts = System.currentTimeMillis() / 1000 * 1000
+    java.nio.file.Files.write(f, "aaaaaaaa".getBytes("UTF-8"))
+    assert(f.toFile.setLastModified(ts))
+    val fp1 = SessionCache.dataFingerprint(f.toString)
+    java.nio.file.Files.write(f, "bbbbbbbb".getBytes("UTF-8")) // same length
+    assert(f.toFile.setLastModified(ts)) // same mtime
+    val fp2 = SessionCache.dataFingerprint(f.toString)
+    assert(fp1 != fp2, "the tail hash must see the content change")
   }
 
   test("dataFingerprint (directory) keys on per-file identity, not aggregates") {
-    val d = java.nio.file.Files.createTempDirectory("graft_fpdir")
+    // a subdirectory, so the listing holds only the part files (the
+    // scratch dir itself carries its owner marker)
+    val d = java.nio.file.Files.createDirectory(
+      java.nio.file.Paths.get(TempDirs.scratch("graft-fpdir"), "t"))
     def put(name: String, bytes: String, ts: Long): Unit = {
       val p = d.resolve(name)
       java.nio.file.Files.write(p, bytes.getBytes("UTF-8"))
       assert(p.toFile.setLastModified(ts))
     }
-    try {
-      val ts = System.currentTimeMillis() / 1000 * 1000
-      put("part-0", "aaaa", ts); put("part-1", "bbbb", ts)
-      val fp1 = SessionCache.dataFingerprint(d.toString)
-      // replace part-1 with a differently-NAMED file of the same
-      // length and mtime: count, total bytes, and max mtime all
-      // collide — a Spark overwrite emits fresh part names, which is
-      // what the listing hash keys on
-      java.nio.file.Files.delete(d.resolve("part-1"))
-      put("part-2", "bbbb", ts)
-      val fp2 = SessionCache.dataFingerprint(d.toString)
-      assert(fp1 != fp2, "the sorted (name,len,mtime) listing must see the rename")
-    } finally {
-      val kids = d.toFile.listFiles(); if (kids != null) kids.foreach(_.delete())
-      java.nio.file.Files.deleteIfExists(d)
-    }
+    val ts = System.currentTimeMillis() / 1000 * 1000
+    put("part-0", "aaaa", ts); put("part-1", "bbbb", ts)
+    val fp1 = SessionCache.dataFingerprint(d.toString)
+    // replace part-1 with a differently-NAMED file of the same
+    // length and mtime: count, total bytes, and max mtime all
+    // collide — a Spark overwrite emits fresh part names, which is
+    // what the listing hash keys on
+    java.nio.file.Files.delete(d.resolve("part-1"))
+    put("part-2", "bbbb", ts)
+    val fp2 = SessionCache.dataFingerprint(d.toString)
+    assert(fp1 != fp2, "the sorted (name,len,mtime) listing must see the rename")
   }
 }

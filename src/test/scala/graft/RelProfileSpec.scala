@@ -10,7 +10,7 @@ class RelProfileSpec extends SparkSpec {
   import spark.implicits._
 
   private def dirWith(writes: (String, org.apache.spark.sql.DataFrame)*): String = {
-    val d = java.nio.file.Files.createTempDirectory("relprof").toString
+    val d = graft.engine.TempDirs.scratch("graft-relprof")
     writes.foreach { case (n, df) =>
       df.write.mode("overwrite").parquet(s"$d/$n.parquet")
     }

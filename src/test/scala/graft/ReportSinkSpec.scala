@@ -13,7 +13,7 @@ class ReportSinkSpec extends SparkSpec {
       (2, 497.3, 0.23, 0.84, 1.77, 100L),
       (3, 482.6, 0.03, 0.29, 6.45, 90L),
     ).toDF("k", "wssse", "bd_silhouette", "bd_dunn", "davies_bouldin", "t_ms")
-    val dir = java.nio.file.Files.createTempDirectory("report").toString
+    val dir = graft.engine.TempDirs.scratch("graft-report")
     KMeansSweep.writeReport(sweepDf, s"$dir/report", alsoCsv = true)
     val back = spark.read.parquet(s"$dir/report").orderBy("k").collect()
     assert(back.length == 2 && back(0).getInt(0) == 2)

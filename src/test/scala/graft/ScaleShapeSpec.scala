@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
 
@@ -12,7 +11,7 @@ import graft.engine.Tables
 class ScaleShapeSpec extends SparkSpec {
 
   test("bucketed tables join without shuffling the fact table") {
-    val tmp = Files.createTempDirectory("bucketed").toString
+    val tmp = graft.engine.TempDirs.scratch("graft-bucketed")
     Tables.lineitem(spark, sf0001).write.mode("overwrite")
       .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
       .option("path", s"$tmp/li").saveAsTable("li_bucketed")
@@ -40,7 +39,7 @@ class ScaleShapeSpec extends SparkSpec {
   }
 
   test("partitioned layout prunes the scan to the queried partition") {
-    val tmp = Files.createTempDirectory("parted").toString
+    val tmp = graft.engine.TempDirs.scratch("graft-parted")
     Tables.orders(spark, sf0001)
       .withColumn("yr", year(col("o_orderdate")))
       .write.mode("overwrite").partitionBy("yr").parquet(s"$tmp/orders")
@@ -497,16 +496,16 @@ class ScaleShapeSpec extends SparkSpec {
     assert(!pplan.contains("Window"), s"sweep branches must reuse the cumsum:\n$pplan")
     assert("Scan parquet".r.findAllIn(pplan).isEmpty,
       s"sweep must read only the checkpointed cumsum:\n$pplan")
-    // eval_contamination_report rides the memoized 8-gram set: warm,
-    // its plan reads ONLY checkpointed RDDs and never pairs docs
-    graft.engine.text.TextOps.ngramSetCached(spark, sf0001, 8,
-      Seq("doc_id", "source")).count()
+    // eval_contamination_report explodes the per-doc feature
+    // checkpoint's 8-gram arrays: warm, its plan reads ONLY
+    // checkpointed RDDs and never pairs docs
+    graft.engine.text.TextOps.docFeatures(spark, sf0001).count()
     val ev = graft.SparkEntry.queries("eval_contamination_report")(spark, sf0001)
     ev.collect()
     val eplan = ev.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
     assert(!eplan.contains("CartesianProduct"), s"must join on the shingle key:\n$eplan")
     assert("Scan parquet".r.findAllIn(eplan).isEmpty,
-      s"warm plan must read the shared 8-gram checkpoint:\n$eplan")
+      s"warm plan must read the per-doc feature checkpoint:\n$eplan")
     // ann_sq_rescore_sweep: coarse kernel + exact rescore live inside
     // one eager checkpoint; the three rescore depths re-rank that
     // (|Q|·16)-row table and grade against the truth checkpoint — no

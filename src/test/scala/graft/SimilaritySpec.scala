@@ -31,7 +31,7 @@ class SimilaritySpec extends SparkSpec {
     // ids 40-49 duplicate vectors 0-9 → distance ties at 0 and equal
     // non-zero distances from every other point
     val dups = (0 until 10).map(i => (40L + i, base(i)._2.clone(), i % 3))
-    val dir = java.nio.file.Files.createTempDirectory("knneq").toString
+    val dir = graft.engine.TempDirs.scratch("graft-knneq")
     (base ++ dups).toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
@@ -202,7 +202,6 @@ class SimilaritySpec extends SparkSpec {
       "minhashPairs(r4)" -> TextOps.minhashPairs(spark, sf0001, rowsPerBand = 4),
       "minhashPairs(r8)" -> TextOps.minhashPairs(spark, sf0001, rowsPerBand = 8),
       "minhashTruthCached" -> TextOps.minhashTruthCached(spark, sf0001),
-      "ngramSetCached(8)" -> TextOps.ngramSetCached(spark, sf0001, 8, Seq("doc_id", "source")),
       "resolvedGroups" -> TextOps.resolvedGroups(spark, sf0001),
       "ClusterQueries.pts" -> graft.engine.cluster.ClusterQueries.pts(spark, sf0001),
       "mediaTable" -> graft.engine.multimodal.Multimodal.mediaTable(spark, sf0001)).foreach { case (name, df) =>
@@ -213,6 +212,13 @@ class SimilaritySpec extends SparkSpec {
       val claimed = df.queryExecution.optimizedPlan.stats.sizeInBytes
       assert(stored > 0 && claimed == BigInt(stored), s"$name: plan claims $claimed bytes, its blocks store $stored")
     }
+    // the 8-gram set is no memo of its own: its plan reads exactly one
+    // checkpoint, the per-doc feature table's
+    def rdds(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }
+    val ng = rdds(TextOps.ngramSetCached(spark, sf0001, 8, Seq("doc_id", "source")))
+    assert(ng == rdds(TextOps.docFeatures(spark, sf0001)) && ng.size == 1,
+      s"the 8-gram set reads checkpoints $ng, not the docFeatures checkpoint alone")
   }
 
   test("every similarity query over the vector checkpoint equals its raw-pass reference") {
@@ -304,7 +310,7 @@ class SimilaritySpec extends SparkSpec {
     // to label 1's (8, 8) centroid. Σ n_new must equal the batch size
     // (each batch vec assigned exactly once), and the exact-integer
     // core must yield sum_d2_ppm = 0 for the self-match cell.
-    val dir = java.nio.file.Files.createTempDirectory("upsert").toString
+    val dir = graft.engine.TempDirs.scratch("graft-upsert")
     Seq(
       (0L, Array(1.0f, 2.0f), 0), (10L, Array(1.0f, 2.0f), 0),
       (4L, Array(8.0f, 8.0f), 1), (14L, Array(8.0f, 8.0f), 1),
@@ -324,7 +330,7 @@ class SimilaritySpec extends SparkSpec {
   test("embedding_centroid_shift: identical cohorts ⇒ shift 0 everywhere") {
     import spark.implicits._
     // even/odd ids carry the SAME two vectors per label → cohort means equal
-    val dir = java.nio.file.Files.createTempDirectory("cshift").toString
+    val dir = graft.engine.TempDirs.scratch("graft-cshift")
     Seq(
       (0L, Array(1.0f, 2.0f), 0), (1L, Array(1.0f, 2.0f), 0),
       (2L, Array(3.0f, 4.0f), 0), (3L, Array(3.0f, 4.0f), 0),

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
 import graft.engine.sink.Sinks
@@ -12,7 +11,7 @@ import graft.engine.sink.Sinks
 class SinksSpec extends SparkSpec {
 
   test("writePartitioned: filter on the partition column prunes the scan") {
-    val tmp = Files.createTempDirectory("sink_part").toString
+    val tmp = graft.engine.TempDirs.scratch("graft-sink_part")
     Sinks.writePartitioned(
       Tables.orders(spark, sf0001).withColumn("yr", year(col("o_orderdate"))),
       s"$tmp/orders", "yr")
@@ -25,7 +24,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("writeBucketed: join on the bucket key shuffles neither side") {
-    val tmp = Files.createTempDirectory("sink_bkt").toString
+    val tmp = graft.engine.TempDirs.scratch("graft-sink_bkt")
     Sinks.writeBucketed(Tables.lineitem(spark, sf0001),
       "sink_li", s"$tmp/li", 8, "l_orderkey")
     Sinks.writeBucketed(Tables.orders(spark, sf0001),
@@ -83,7 +82,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("writeSorted: range predicate skips files via footer statistics") {
-    val tmp = Files.createTempDirectory("sink_sort").toString
+    val tmp = graft.engine.TempDirs.scratch("graft-sink_sort")
     Sinks.writeSorted(Tables.lineitem(spark, sf0001), s"$tmp/li", 4, "l_orderkey")
     // 4 range-partitioned files; a tight key range overlaps ≤ 2 of them
     val all = Sinks.readLayout(spark, s"$tmp/li")
@@ -102,7 +101,7 @@ class SinksSpec extends SparkSpec {
     // whose text embeds \n/\r/\t must come back byte-identical (the
     // naive raw write would split it into malformed lines).
     import spark.implicits._
-    val tmp = Files.createTempDirectory("sink_nl").toString
+    val tmp = graft.engine.TempDirs.scratch("graft-sink_nl")
     Seq(
       (0L, "line one\nline two", "en", "s0"),
       (1L, "carriage\rreturn\r\nand\ttab", "en", "s0"),
@@ -129,7 +128,7 @@ class SinksSpec extends SparkSpec {
       (0L, "tab\there", "en\tglish", "s\n0"),
       (1L, "", "", ""),
       (2L, "plain", "de", "s1"))
-    val tmp = Files.createTempDirectory("sink_dim").toString + "/t"
+    val tmp = graft.engine.TempDirs.scratch("graft-sink_dim") + "/t"
     Sinks.textLineEncode(rows.toDF("doc_id", "text", "lang", "source"))
       .write.mode("overwrite").text(tmp)
     val back = Sinks.textLineDecode(spark.read.text(tmp))
@@ -175,12 +174,12 @@ class SinksSpec extends SparkSpec {
     System.setProperty("sun.jnu.encoding", "ANSI_X3.4-1968")
     try {
       val e = intercept[IllegalArgumentException] {
-        Sinks.writePartitioned(df, Files.createTempDirectory("utf8pin").toString + "/p", "lang")
+        Sinks.writePartitioned(df, graft.engine.TempDirs.scratch("graft-utf8pin") + "/p", "lang")
       }
       assert(e.getMessage.contains("UTF-8 JVM"), s"wrong error: ${e.getMessage}")
     } finally System.setProperty("sun.jnu.encoding", prev)
     // and under the build's UTF-8 launch the same write succeeds
-    Sinks.writePartitioned(df, Files.createTempDirectory("utf8ok").toString + "/p", "lang")
+    Sinks.writePartitioned(df, graft.engine.TempDirs.scratch("graft-utf8ok") + "/p", "lang")
   }
 
   test("TempDirs sweeps SIGKILL-orphaned scratch dirs (dead-owner marker), never live or unmarked ones") {
@@ -230,7 +229,7 @@ class SinksSpec extends SparkSpec {
     // the all-NULL row — must come back EXACTLY, and the empty string
     // must stay distinct from NULL.
     import spark.implicits._
-    val tmp = Files.createTempDirectory("sink_null").toString + "/t"
+    val tmp = graft.engine.TempDirs.scratch("graft-sink_null") + "/t"
     val rows = Seq(
       (java.lang.Long.valueOf(0L), "ok", "en", "s0"),
       (java.lang.Long.valueOf(1L), null, "en", "s0"),
@@ -250,7 +249,7 @@ class SinksSpec extends SparkSpec {
     // hex-armored, so it must decode back as the two-char string, not
     // as NULL
     val tricky = Seq((9L, "\\N", "en", "s0")).toDF("doc_id", "text", "lang", "source")
-    val tmp2 = Files.createTempDirectory("sink_null2").toString + "/t"
+    val tmp2 = graft.engine.TempDirs.scratch("graft-sink_null2") + "/t"
     Sinks.textLineEncode(tricky).write.mode("overwrite").text(tmp2)
     val tb = Sinks.textLineDecode(spark.read.text(tmp2)).collect()(0)
     assert(tb.getString(3) == "\\N", s"sentinel collided with content: $tb")

@@ -63,7 +63,7 @@ class SqlAndExprSpec extends SparkSpec {
 
   test("CSV ingestion parity: same WSSSE as parquet path") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("csv").toString
+    val dir = graft.engine.TempDirs.scratch("graft-csv")
     // dump embeddings as headerless CSV: id;label;f0..f63
     Tables.points(spark, sf0001)
       .select(col("vec_id"), col("cluster"),

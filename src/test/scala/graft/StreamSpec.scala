@@ -67,7 +67,7 @@ class StreamSpec extends SparkSpec {
     // user's count of 3 (2 from run-1 state + 1 late row in run 2)
     // separates every failure mode: lost state → 1, re-read input
     // with state → 5.
-    val base = java.nio.file.Files.createTempDirectory("restart").toString
+    val base = graft.engine.TempDirs.scratch("graft-restart")
     val in = s"$base/in"; val out = s"$base/out"; val chk = s"$base/chk"
     def minute(m: Int) = new Timestamp(1704067200000L + m * 60000L)
     def write(name: String, data: Seq[(Long, Timestamp)]): Unit = {
