@@ -76,7 +76,7 @@ object Similarity {
     * window form ~6×; cosine_topk/embedding_cosine_dedup run as
     * distributed cross joins, and the 100 TB similarity paths are the
     * ANN operators). Callers MUST size-gate: knn_per_vector only
-    * reaches this below `graft.sim.knnKernelMaxRows` (above it the
+    * reaches this below [[KnnKernelMaxRows]] (above it the
     * query plans the distributed window form instead), so the collect
     * is bounded by an explicit contract, not a fixture accident. */
   private def collectVecs(s: SparkSession, d: String): Array[(Long, Array[Double], Double)] = {
@@ -156,6 +156,118 @@ object Similarity {
         when(col("n1") * col("n2") > 0, round(ArrayMath.dotNative(col("f1"), col("f2")) / (col("n1") * col("n2")), 6)).as("cos"))
   }
 
+  /** 100 000 rows ≈ 50 MB at 64-d: the largest vector table
+    * `knn_per_vector` broadcasts to its kernel (one copy per executor,
+    * NOT per task). */
+  private val KnnKernelMaxRows = 100000L
+
+  /** #20 5 nearest neighbors per vector (Euclidean) — SIZE-GATED like
+    * near_dedup_groups gates its union-find: the broadcast kernel runs
+    * only while the vector table has at most `gate` rows (the default
+    * [[KnnKernelMaxRows]]); above it the query switches to the fully
+    * distributed cross-join + per-vector window form (identical
+    * declared semantics; SimilaritySpec passes gate = 1 and pins the
+    * equivalence), so the API is never a driver-memory trap at scale —
+    * at 100 TB the honest answer is the ANN operators either way.
+    * Below the gate: bounded top-k selection per vector inside the
+    * task — a 16-slot insertion-sorted (unrounded d², id2) shortlist
+    * in primitive arrays (zero allocation / boxing / BigDecimal per
+    * candidate —
+    * the round-1 form sorted all 2 000 rounded candidates per row and
+    * regressed 7× at local[32]), then the 16 survivors are rounded
+    * and re-ranked by (round6(dist), id2) exactly like the oracle's
+    * ROW_NUMBER() OVER (ORDER BY dist, id2). PROVABLY exact:
+    * round6∘sqrt is monotone in d², so an excluded candidate (unrounded
+    * rank > 16) can only matter if its rounded dist TIES the rounded
+    * 5th — which forces rounded(16th) == rounded(5th); when that rare
+    * collapse is detected the row falls back to a full rescan sorted
+    * on the declared (rounded, id) key (needs 12+ candidates inside
+    * one 1e-6 bin — continuous data, so the fallback is ~never hit,
+    * but the semantics no longer rely on that). */
+  private[graft] def knnPerVector(s: SparkSession, d: String,
+                                  gate: Long = KnnKernelMaxRows): DataFrame = {
+    import s.implicits._
+    val nRows = vecs(s, d).count()
+    if (nRows > gate) {
+      // distributed exact form: block-cartesian pairs + per-vector
+      // window ranked on the declared (round6(dist), id2) key — no
+      // driver collect anywhere, same oracle semantics.
+      System.err.println(s"[graft] knn_per_vector($d): $nRows rows > gate $gate -> distributed window form")
+      graft.engine.expr.GraftFunctions.register(s)
+      val v = vecs(s, d)
+      val w = Window.partitionBy("id1").orderBy(col("dist"), col("id2"))
+      v.select(col("vec_id").as("id1"), col("f").as("f1"))
+        .crossJoin(v.select(col("vec_id").as("id2"), col("f").as("f2")))
+        .filter(col("id1") =!= col("id2"))
+        .select(col("id1"), col("id2"),
+          round(sqrt(ArrayMath.sqDistNative(col("f1"), col("f2"))), 6).as("dist"))
+        .withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
+        .select(col("id1"), col("rank"), col("id2"), col("dist"))
+        .orderBy("id1", "rank")
+    } else {
+    val triples = collectVecs(s, d)
+    val ids = triples.map(_._1)
+    val feats = triples.map(_._2)
+    val all = s.sparkContext.broadcast((ids, feats))
+    val K = 16
+    vecs(s, d).select("vec_id", "f", "nrm").as[(Long, Array[Double], Double)]
+      .mapPartitions { it =>
+        val (vid, vf) = all.value
+        val n = vid.length
+        it.flatMap { case (id1, f1, _) =>
+          val bd = new Array[Double](K) // shortlist distances (d²), ascending
+          val bi = new Array[Long](K)   // shortlist ids, tie-break ascending
+          var filled = 0
+          var c = 0
+          while (c < n) {
+            val id2 = vid(c)
+            if (id2 != id1) {
+              val f2 = vf(c)
+              var d2 = 0.0; var i = 0
+              while (i < f1.length) { val t = f1(i) - f2(i); d2 += t * t; i += 1 }
+              if (filled < K || d2 < bd(K - 1) || (d2 == bd(K - 1) && id2 < bi(K - 1))) {
+                var p = math.min(filled, K - 1) - 1
+                var j = math.min(filled, K - 1)
+                while (p >= 0 && (bd(p) > d2 || (bd(p) == d2 && bi(p) > id2))) {
+                  bd(j) = bd(p); bi(j) = bi(p); p -= 1; j -= 1
+                }
+                bd(j) = d2; bi(j) = id2
+                if (filled < K) filled += 1
+              }
+            }
+            c += 1
+          }
+          val ranked = Array.tabulate(filled)(i => (round6(math.sqrt(bd(i))), bi(i)))
+          ranked.sortInPlaceBy(identity)
+          val top: Iterator[(Double, Long)] =
+            if (filled == K && round6(math.sqrt(bd(K - 1))) == ranked(4)._1) {
+              // rounding collapsed the 5th..16th bins: the shortlist
+              // cannot prove the id tie-break against candidates it
+              // dropped — rescan THIS row on the exact declared key
+              val all = new scala.collection.mutable.ArrayBuffer[(Double, Long)](n)
+              var c2 = 0
+              while (c2 < n) {
+                val id2 = vid(c2)
+                if (id2 != id1) {
+                  val f2 = vf(c2)
+                  var dd = 0.0; var i2 = 0
+                  while (i2 < f1.length) { val t = f1(i2) - f2(i2); dd += t * t; i2 += 1 }
+                  all += ((round6(math.sqrt(dd)), id2))
+                }
+                c2 += 1
+              }
+              all.sortInPlace().iterator
+            } else ranked.iterator
+          top.take(5).zipWithIndex.map { case ((dist, id2), r) =>
+            (id1, r + 1, id2, dist)
+          }
+        }
+      }
+      .toDF("id1", "rank", "id2", "dist")
+      .orderBy("id1", "rank")
+    }
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     Map[String, (SparkSession, String) => DataFrame](
     // #19 top-100 most-similar pairs by cosine — distributed exact
@@ -166,114 +278,7 @@ object Similarity {
         .orderBy(desc("cos"), col("id1"), col("id2"))
         .limit(100)),
 
-    // #20 5 nearest neighbors per vector (Euclidean) — SIZE-GATED
-    // like near_dedup_groups gates its union-find: the broadcast
-    // kernel below runs only while the vector table fits a sane
-    // broadcast (`graft.sim.knnKernelMaxRows`, default 100 000 rows ≈
-    // 50 MB at 64-d — one copy per executor, NOT per task); above the
-    // gate the query silently switches to the fully distributed
-    // cross-join + per-vector window form (identical declared
-    // semantics, proven equivalent in SimilaritySpec), so the API is
-    // never a driver-memory trap at scale — at 100 TB the honest
-    // answer is the ANN operators either way.
-    // Below the gate: bounded top-k selection per vector inside the
-    // task — a 16-slot
-    // insertion-sorted (unrounded d², id2) shortlist in primitive
-    // arrays (zero allocation / boxing / BigDecimal per candidate —
-    // the round-1 form sorted all 2 000 rounded candidates per row and
-    // regressed 7× at local[32]), then the 16 survivors are rounded
-    // and re-ranked by (round6(dist), id2) exactly like the oracle's
-    // ROW_NUMBER() OVER (ORDER BY dist, id2). PROVABLY exact:
-    // round6∘sqrt is monotone in d², so an excluded candidate (unrounded
-    // rank > 16) can only matter if its rounded dist TIES the rounded
-    // 5th — which forces rounded(16th) == rounded(5th); when that rare
-    // collapse is detected the row falls back to a full rescan sorted
-    // on the declared (rounded, id) key (needs 12+ candidates inside
-    // one 1e-6 bin — continuous data, so the fallback is ~never hit,
-    // but the semantics no longer rely on that).
-    "knn_per_vector" -> ((s, d) => {
-      import s.implicits._
-      val gate = s.conf.get("graft.sim.knnKernelMaxRows", "100000").toLong
-      val nRows = vecs(s, d).count()
-      if (nRows > gate) {
-        // distributed exact form: block-cartesian pairs + per-vector
-        // window ranked on the declared (round6(dist), id2) key — no
-        // driver collect anywhere, same oracle semantics.
-        println(s"[graft] knn_per_vector($d): $nRows rows > gate $gate -> distributed window form")
-        graft.engine.expr.GraftFunctions.register(s)
-        val v = vecs(s, d)
-        val w = Window.partitionBy("id1").orderBy(col("dist"), col("id2"))
-        v.select(col("vec_id").as("id1"), col("f").as("f1"))
-          .crossJoin(v.select(col("vec_id").as("id2"), col("f").as("f2")))
-          .filter(col("id1") =!= col("id2"))
-          .select(col("id1"), col("id2"),
-            round(sqrt(ArrayMath.sqDistNative(col("f1"), col("f2"))), 6).as("dist"))
-          .withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
-          .select(col("id1"), col("rank"), col("id2"), col("dist"))
-          .orderBy("id1", "rank")
-      } else {
-      val triples = collectVecs(s, d)
-      val ids = triples.map(_._1)
-      val feats = triples.map(_._2)
-      val all = s.sparkContext.broadcast((ids, feats))
-      val K = 16
-      vecs(s, d).select("vec_id", "f", "nrm").as[(Long, Array[Double], Double)]
-        .mapPartitions { it =>
-          val (vid, vf) = all.value
-          val n = vid.length
-          it.flatMap { case (id1, f1, _) =>
-            val bd = new Array[Double](K) // shortlist distances (d²), ascending
-            val bi = new Array[Long](K)   // shortlist ids, tie-break ascending
-            var filled = 0
-            var c = 0
-            while (c < n) {
-              val id2 = vid(c)
-              if (id2 != id1) {
-                val f2 = vf(c)
-                var d2 = 0.0; var i = 0
-                while (i < f1.length) { val t = f1(i) - f2(i); d2 += t * t; i += 1 }
-                if (filled < K || d2 < bd(K - 1) || (d2 == bd(K - 1) && id2 < bi(K - 1))) {
-                  var p = math.min(filled, K - 1) - 1
-                  var j = math.min(filled, K - 1)
-                  while (p >= 0 && (bd(p) > d2 || (bd(p) == d2 && bi(p) > id2))) {
-                    bd(j) = bd(p); bi(j) = bi(p); p -= 1; j -= 1
-                  }
-                  bd(j) = d2; bi(j) = id2
-                  if (filled < K) filled += 1
-                }
-              }
-              c += 1
-            }
-            val ranked = Array.tabulate(filled)(i => (round6(math.sqrt(bd(i))), bi(i)))
-            ranked.sortInPlaceBy(identity)
-            val top: Iterator[(Double, Long)] =
-              if (filled == K && round6(math.sqrt(bd(K - 1))) == ranked(4)._1) {
-                // rounding collapsed the 5th..16th bins: the shortlist
-                // cannot prove the id tie-break against candidates it
-                // dropped — rescan THIS row on the exact declared key
-                val all = new scala.collection.mutable.ArrayBuffer[(Double, Long)](n)
-                var c2 = 0
-                while (c2 < n) {
-                  val id2 = vid(c2)
-                  if (id2 != id1) {
-                    val f2 = vf(c2)
-                    var dd = 0.0; var i2 = 0
-                    while (i2 < f1.length) { val t = f1(i2) - f2(i2); dd += t * t; i2 += 1 }
-                    all += ((round6(math.sqrt(dd)), id2))
-                  }
-                  c2 += 1
-                }
-                all.sortInPlace().iterator
-              } else ranked.iterator
-            top.take(5).zipWithIndex.map { case ((dist, id2), r) =>
-              (id1, r + 1, id2, dist)
-            }
-          }
-        }
-        .toDF("id1", "rank", "id2", "dist")
-        .orderBy("id1", "rank")
-      }
-    }),
+    "knn_per_vector" -> ((s, d) => knnPerVector(s, d)),
 
     // #24 per-label L2-norm quality screen
     "embedding_norm_stats" -> ((s, d) =>

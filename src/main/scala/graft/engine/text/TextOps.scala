@@ -343,10 +343,9 @@ object TextOps {
     docFeatures(s, d).select(col("doc_id"), explode(col("arr")).as("token"))
 
   /** The rarest-first PPJoin prefix rows `(doc_id, elem, rn, n)` of a
-    * per-doc set table `(doc_id, arr)`, shared by both exact-Jaccard
-    * joins (`ngram_jaccard_dedup` at t = 0.5 over trigram ids, the
-    * `minhash_recall` truth at t = 0.9 over tokens). Elements rank
-    * rarest first under the global total order (df, elem), and a doc
+    * per-doc set table `(doc_id, arr)`, the candidate side of
+    * [[jaccardPairs]]. Elements rank rarest first under the global
+    * total order (df, elem), and a doc
     * keeps ranks rn ≤ `prefixLen(n)`, n = |arr| counted in the explode.
     * Only elements with df ≥ 2 are emitted: a df = 1 element is in one
     * doc, so no prefix join can match it, and it never reaches the
@@ -372,6 +371,64 @@ object TextOps {
       .select("doc_id", "elem", "rn", "n")
   }
 
+  /** The EXACT set-similarity self-join of a per-doc set table
+    * `(doc_id, arr)`: every pair `(d1 < d2, i, u)` with i / u ≥ num/den
+    * (i = |A∩B|, u = |A∪B|) — PPJoin (Xiao et al., WWW 2008), the one
+    * join behind `ngram_jaccard_dedup` (t = 1/2 over trigram ids) and
+    * the `minhash_recall` truth (t = 9/10 over tokens, probed by the
+    * sampled docs). Every step is LOSSLESS for J ≥ t:
+    *  - prefix: under the global (df, elem) order of [[prefixRanks]],
+    *    two docs with J ≥ t share an element inside both prefixes of
+    *    length |X| − ⌈t·|X|⌉ + 1 = ⌊(den − num)·|X| / den⌋ + 1 (else
+    *    every shared element sits in both suffixes of ⌈t·|X|⌉ − 1 <
+    *    |A∩B| elements). The join keys on the RAREST elements only,
+    *    exactly where df is small;
+    *  - position: a pair meeting at 1-based ranks (rn_a, rn_b) has
+    *    overlap ≤ min(n_a − rn_a, n_b − rn_b) + 1, and J ≥ t needs
+    *    overlap ≥ num·(n_a + n_b) / (num + den), checked as exact
+    *    integer arithmetic in the join condition. A true pair's every
+    *    matched element satisfies it, so no qualifying pair loses all
+    *    its candidate rows. Since rn ≥ 1 the bound is at most
+    *    min(n_a, n_b), so it also enforces the size-ratio condition
+    *    den·min ≥ num·max without a test of its own;
+    *  - verify: the distinct candidates go through [[withOverlap]] and
+    *    are kept on the UNROUNDED i / u ≥ num/den, the same single
+    *    IEEE division of identical ints the oracle computes (a rounded
+    *    ratio would admit pairs just under t that the prefix may miss).
+    * With `probe`, only pairs with a side in it are produced (the
+    * probe side ranks only probe docs: the optimizer pushes the
+    * inferred doc_id predicate below its window). Unprobed, the pair
+    * order comes from the join condition itself, which keeps
+    * `least`/`greatest` — and an extra shuffle — out of that plan. */
+  private[graft] def jaccardPairs(sets: DataFrame, num: Int, den: Int,
+                                  probe: Option[DataFrame] = None): DataFrame = {
+    val prefix = prefixRanks(sets, n => (n * (den - num) / den).cast("bigint") + 1)
+    val (a, b) = (probe.fold(prefix)(p => prefix.join(p, "doc_id")).as("a"), prefix.as("b"))
+    val (da, db) = (col("a.doc_id"), col("b.doc_id"))
+    val (other, d1, d2) =
+      if (probe.isEmpty) (da < db, da, db) else (da =!= db, least(da, db), greatest(da, db))
+    val bound = (least(col("a.n") - col("a.rn"), col("b.n") - col("b.rn")) + 1) * (num + den) >=
+      (col("a.n") + col("b.n")) * num
+    val cand = a.join(b, col("a.elem") === col("b.elem") && other && bound)
+      .select(d1.as("d1"), d2.as("d2")).distinct()
+    withOverlap(cand, sets).filter(col("i") / col("u") >= num.toDouble / den)
+  }
+
+  /** Exact overlap `(d1, d2, i, u)` of a pair table `(d1, d2)` over a
+    * per-doc set table `(doc_id, arr)`: both sides' arrays attach by
+    * doc_id equi-joins (one row per doc, no collect_list of exploded
+    * rows), and each pair pays ONE codegen'd `array_intersect`; the
+    * set sizes come from the arrays themselves. The dedup family's
+    * only intersection: [[jaccardPairs]] verifies its candidates here,
+    * and the candidate-quality family measures its sampled pairs. */
+  private[graft] def withOverlap(pairs: DataFrame, sets: DataFrame): DataFrame =
+    pairs
+      .join(sets.select(col("doc_id").as("d1"), col("arr").as("a1")), "d1")
+      .join(sets.select(col("doc_id").as("d2"), col("arr").as("a2")), "d2")
+      .withColumn("i", size(array_intersect(col("a1"), col("a2"))).cast("long"))
+      .withColumn("u", size(col("a1")).cast("long") + size(col("a2")).cast("long") - col("i"))
+      .select("d1", "d2", "i", "u")
+
   /** Per-doc SORTED distinct-token array `(doc_id, arr)`, one row per
     * doc (NULL `arr` for NULL text): the exact-Jaccard truth build and
     * the candidate-quality family verify candidates with one
@@ -386,18 +443,11 @@ object TextOps {
     * candidate-quality family (`dedup_jaccard_histogram`,
     * `dedup_threshold_sweep`, `minhash_calibration`). The sample
     * predicate is pure pair arithmetic ((d1·31+d2) % 50 — no sample
-    * list to ship), and each sampled pair pays ONE codegen'd
-    * `array_intersect` against the memoized sorted-token arrays. */
-  private def sampledPairIU(s: SparkSession, d: String): DataFrame = {
-    val docsArr = docTokenArrays(s, d)
-    minhashPairs(s, d)
-      .filter((col("d1") * 31 + col("d2")) % 50 === 0)
-      .join(docsArr.select(col("doc_id").as("d1"), col("arr").as("a1")), "d1")
-      .join(docsArr.select(col("doc_id").as("d2"), col("arr").as("a2")), "d2")
-      .withColumn("i", size(array_intersect(col("a1"), col("a2"))).cast("long"))
-      .withColumn("u", size(col("a1")).cast("long") + size(col("a2")).cast("long") - col("i"))
-      .select("d1", "d2", "i", "u")
-  }
+    * list to ship), and each sampled pair pays ONE [[withOverlap]]
+    * against the memoized sorted-token arrays. */
+  private def sampledPairIU(s: SparkSession, d: String): DataFrame =
+    withOverlap(minhashPairs(s, d).filter((col("d1") * 31 + col("d2")) % 50 === 0),
+      docTokenArrays(s, d))
 
   /** Per-doc SORTED distinct folded-trigram-id array `(doc_id, arr)`,
     * the shared table of `ngram_jaccard_dedup` and `ngram_novelty`: one
@@ -485,72 +535,29 @@ object TextOps {
     * sampled docs against ALL docs on the raw token key: cost
     * Σ_t sampled(t)·df(t), which Zipfian head tokens (stop words in
     * ~every doc) make quadratic — 99.45 s of the 207 s round-4 bench.
-    * This build uses the RAREST-FIRST PREFIX FILTER of
-    * `ngram_jaccard_dedup` ([[prefixRanks]]), LOSSLESS for J ≥ t:
-    * under a global total order (corpus df asc, token asc), two docs
-    * with J ≥ 0.9 MUST share a token inside both prefixes of length
-    * |X| − ⌈0.9·|X|⌉ + 1 = ⌊|X|/10⌋ + 1 (otherwise every shared token
-    * sits in both suffixes of size ⌈0.9|X|⌉ − 1 < |A∩B| — a
-    * contradiction with |A∩B| ≥ ⌈0.9·|X|⌉ forced by J ≥ 0.9). So the
-    * candidate join keys on ~10% of tokens — and specifically the
-    * RAREST 10%, exactly where df is small — then survivors are
-    * verified exactly with one codegen'd `array_intersect` per pair
-    * (the PPJoin pattern). Each prefix row carries its doc's set size
-    * n, so the candidates take their sizes through the distinct and
-    * no size table joins back. Result set is provably identical to
+    * This build is [[jaccardPairs]] at t = 9/10 over the sorted token
+    * arrays, probed by the sampled docs: prefix length ⌊|X|/10⌋ + 1,
+    * so the candidate join keys on the RAREST ~10% of tokens, and the
+    * position filter prunes the candidates to near the truth set
+    * before the exact verification. Sample membership arrives via an
+    * equi-join on the per-DOC flag table, never by evaluating the
+    * md5-fold HOF per derived row. Result set is provably identical to
     * the unpruned join, so the unpruned DuckDB oracle stays the
     * independent cross-check. Package-private so ScaleShapeSpec can
     * assert the prefix filter is present on BOTH sides of the
     * token-keyed join (the spec fails on the round-4 shape), and for
     * the `builder_minhash_truth` shape row (the truth checkpoint hides
     * this plan from `minhash_recall`'s). */
-  private[graft] def minhashTruthPairs(s: SparkSession, d: String): DataFrame = {
-    // prefix length for t = 0.9: ⌊|A|/10⌋ + 1
-    val prefix = prefixRanks(docTokenArrays(s, d), n => (n / 10).cast("bigint") + 1)
-      .select("doc_id", "elem", "n")
-    // sampled-prefix × corpus-prefix: every qualifying pair has a
-    // sampled side, and its prefix must intersect the other side's.
-    // Sample membership arrives via an equi-join on the per-DOC flag
-    // table, never by evaluating the md5-fold HOF per derived row (the
-    // optimizer pushes the inferred flag predicate below the sampled
-    // side's doc_id window, so that side ranks only sampled docs). The
-    // size-ratio necessary condition sits in the join condition:
-    // J ≥ 0.9 forces min(|A|,|B|)/max(|A|,|B|) ≥ 0.9 (J ≤ min/max
-    // always), checked as exact integer arithmetic 10·min ≥ 9·max —
-    // lossless, and it prunes the array_intersect verification to
-    // near the truth set
-    val a = prefix.join(sampFlags(s, d).filter(col("samp")).select("doc_id"), "doc_id").as("a")
-    val b = prefix.as("b")
-    val fromA = col("a.doc_id") < col("b.doc_id")
-    val cand = a.join(b, col("a.elem") === col("b.elem") && col("a.doc_id") =!= col("b.doc_id")
-        && least(col("a.n"), col("b.n")) * 10 >= greatest(col("a.n"), col("b.n")) * 9)
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("d1"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("d2"),
-        when(fromA, col("a.n")).otherwise(col("b.n")).as("s1"),
-        when(fromA, col("b.n")).otherwise(col("a.n")).as("s2"))
-      .distinct()
-    // sorted arrays come map-side from the shared per-doc array table
-    // — no collect_list shuffle of the exploded rows
-    val docsArr = docTokenArrays(s, d)
-    cand
-      .join(docsArr.select(col("doc_id").as("d1"), col("arr").as("a1")), "d1")
-      .join(docsArr.select(col("doc_id").as("d2"), col("arr").as("a2")), "d2")
-      .withColumn("i", size(array_intersect(col("a1"), col("a2"))).cast("long"))
-      // threshold on the UNROUNDED ratio of identical ints — the same
-      // drift-free single IEEE division the oracle computes
-      .filter(col("i") / (col("s1") + col("s2") - col("i")) >= 0.9)
-      .select("d1", "d2")
-  }
+  private[graft] def minhashTruthPairs(s: SparkSession, d: String): DataFrame =
+    jaccardPairs(docTokenArrays(s, d), 9, 10,
+      Some(sampFlags(s, d).filter(col("samp")).select("doc_id"))).select("d1", "d2")
 
   /** Quotient-resolve threshold: largest quotient-graph edge count the
-    * driver union-find small-side move accepts. At ~16 bytes/edge the
-    * default 1M edges ≈ tens of MB of driver heap — well inside any
-    * realistic `spark.driver.memory`; override per session via
-    * `spark.conf.set("graft.neardedup.quotientMaxEdges", n)` (the
-    * ScaleShape spec forces 0 to exercise the distributed branch).
-    */
-  private def quotientMaxEdges(s: SparkSession): Long =
-    s.conf.get("graft.neardedup.quotientMaxEdges", "1000000").toLong
+    * driver union-find small-side move accepts. At ~16 bytes/edge 1M
+    * edges ≈ tens of MB of driver heap — well inside any realistic
+    * `spark.driver.memory` (ScaleShapeSpec calls [[resolveGroups]]
+    * with 0 to exercise the distributed branch). */
+  private val QuotientMaxEdges = 1000000L
 
   /** Per-position successor window of the hot-bucket cap in
     * [[minhashPairs]]: each doc pairs with at most this many successors
@@ -579,7 +586,7 @@ object TextOps {
 
   private[graft] def resolvedGroups(s: SparkSession, d: String): DataFrame =
     groupCache.get(s, d) {
-      MeasuredCheckpoint(resolveGroups(s, d, quotientMaxEdges(s)))
+      MeasuredCheckpoint(resolveGroups(s, d, QuotientMaxEdges))
     }
 
   /** near-dup pair → GROUP resolution: connected components over the
@@ -898,78 +905,24 @@ object TextOps {
         .orderBy("d1", "d2")
     }),
 
-    // n-gram (word-trigram) Jaccard near-dup, threshold 0.5, with the
-    // RAREST-FIRST PREFIX FILTER wired in (lossless for J ≥ t):
-    // order each doc's trigrams by global document frequency (ties by
-    // trigram id — a consistent total order across docs) and keep
-    // only the first |A| − ⌈t·|A|⌉ + 1; two docs with J ≥ t MUST share
-    // a prefix trigram (else all shared trigrams sit in both suffixes
-    // of length ⌈t·|X|⌉ − 1 < |A∩B|). Candidates come from the
-    // prefix-only equi-join ([[prefixRanks]]) — skewed high-df
-    // trigrams rarely make any prefix, and df = 1 trigrams (most of a
-    // corpus) fill rank slots without being shipped, so the candidate
-    // join is pruned exactly where the naive shared-trigram join blows
-    // up. Exact intersection counts are then computed only for
-    // candidate pairs. The Jaccard is one IEEE division of identical
-    // ints — drift-free.
-    "ngram_jaccard_dedup" -> ((s, d) => {
-      // The per-doc folded trigram-id SET is the shared memoized
-      // [[docTrigramIdArrays]] table — one row per doc, built map-side
-      // (no explode/distinct/collect_list shuffles; the former
-      // fold+distinct above the n-gram checkpoint was recomputed by
-      // every consumer subtree and dominated this query's ~8 s).
-      //
-      // Trigrams are FOLDED to 32-bit ids (native fold_hex of md5,
-      // the TOK discipline, mirrored in the oracle): the verify step
-      // intersects per-doc arrays for every candidate pair, and long
-      // arrays intersect several times faster than ~20-char string
-      // arrays (measured 5.2 s → the dominant cost at sf0.1). A fold
-      // collision merges the same two trigrams in BOTH engines, so
-      // parity holds exactly as for token ids; array_distinct after
-      // folding makes the per-doc id SET the declared universe on
-      // both sides.
-      val docsArr = docTrigramIdArrays(s, d)
-      // prefix length for t = 0.5: |A| − ⌈|A|/2⌉ + 1 = ⌊|A|/2⌋ + 1
-      val prefix = prefixRanks(docsArr, n => (n / 2).cast("bigint") + 1)
-      // PPJoin POSITION filter, applied inside the join condition:
-      // both prefixes are ranked under the SAME global (df, tid)
-      // order, so a pair matching at 1-based ranks (rn_a, rn_b) has
-      // overlap ≤ min(n_a − rn_a, n_b − rn_b) + 1; J ≥ 0.5 needs
-      // overlap ≥ ⌈(n_a+n_b)/3⌉, checked as exact 3·bound ≥ n_a+n_b.
-      // LOSSLESS: a true pair's every matched occurrence satisfies
-      // the bound (bound ≥ true overlap ≥ α), so no qualifying pair
-      // can lose all its candidate rows. Prunes the dup-dense
-      // fixture's candidate surface before the distinct shuffle.
-      // Since rn ≥ 1, the bound is at most min(n_a, n_b), so it also
-      // enforces the size-ratio condition 2·min ≥ max (J ≥ 0.5 forces
-      // it) without a test of its own. The set sizes ride the prefix
-      // rows through the distinct: no size table joins back.
-      val cand = prefix.as("a").join(prefix.as("b"),
-          col("a.elem") === col("b.elem") && col("a.doc_id") < col("b.doc_id")
-            && (least(col("a.n") - col("a.rn"), col("b.n") - col("b.rn")) + 1) * 3
-               >= col("a.n") + col("b.n"))
-        .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
-          col("a.n").as("s1"), col("b.n").as("s2"))
-        .distinct()
-      // PPJoin-style verification: candidates join the per-doc sorted
-      // id SETS (one row per doc) and the exact intersection is a
-      // single codegen'd array_intersect per pair — no re-join of the
-      // exploded trigram rows (that recount was measured to produce
-      // MORE join rows than it pruned on near-dup-dense corpora)
-      cand
-        .join(docsArr.select(col("doc_id").as("d1"), col("arr").as("a1")), "d1")
-        .join(docsArr.select(col("doc_id").as("d2"), col("arr").as("a2")), "d2")
-        .withColumn("inter", size(array_intersect(col("a1"), col("a2"))).cast("long"))
-        // threshold on the UNROUNDED ratio (one exact IEEE division of
-        // identical ints — drift-free): the prefix filter is lossless
-        // only for true J >= 0.5, so filtering on ROUND(jac,6) >= 0.5
-        // would admit oracle pairs with true J ∈ [0.4999995, 0.5) that
-        // the Spark prefix filter can legitimately miss. ROUND stays in
-        // the projected output only.
-        .filter(col("inter") / (col("s1") + col("s2") - col("inter")) >= 0.5)
-        .withColumn("jac", round(col("inter") / (col("s1") + col("s2") - col("inter")), 6))
-        .select("d1", "d2", "jac").orderBy("d1", "d2")
-    }),
+    // n-gram (word-trigram) Jaccard near-dup, threshold 0.5: the
+    // PPJoin of [[jaccardPairs]] (rarest-first prefix, position
+    // filter, exact verification) over the per-doc trigram-id SETS.
+    // Those are the shared memoized [[docTrigramIdArrays]] table — one
+    // row per doc, built map-side (no explode/distinct/collect_list
+    // shuffles; the former fold+distinct above the n-gram checkpoint
+    // was recomputed by every consumer subtree and dominated this
+    // query's ~8 s). Trigrams are FOLDED to 32-bit ids (native
+    // fold_hex of md5, the TOK discipline, mirrored in the oracle):
+    // long arrays intersect several times faster than ~20-char string
+    // arrays (measured 5.2 s → the dominant cost at sf0.1). A fold
+    // collision merges the same two trigrams in BOTH engines, so
+    // parity holds exactly as for token ids. ROUND sits in the
+    // projected output only; the threshold is on the unrounded ratio.
+    "ngram_jaccard_dedup" -> ((s, d) =>
+      jaccardPairs(docTrigramIdArrays(s, d), 1, 2)
+        .select(col("d1"), col("d2"), round(col("i") / col("u"), 6).as("jac"))
+        .orderBy("d1", "d2")),
 
     // #21 per-language token stats
     "text_tokenize_stats" -> ((s, d) =>

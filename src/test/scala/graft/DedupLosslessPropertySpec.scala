@@ -209,6 +209,37 @@ class DedupLosslessPropertySpec extends SparkSpec {
     }
   }
 
+  test("jaccardPairs finds pairs at J = t exactly, meeting only at the last prefix rank, with and without a probe") {
+    // The prefix length ⌊(den − num)·n / den⌋ + 1 and the position
+    // bound (min(n_a − rn_a, n_b − rn_b) + 1)·(num + den) ≥ num·(n_a + n_b)
+    // are both tight here: an off-by-one in either drops the pair.
+    //  - t = 9/10: |A| = |B| = 19, i = 18, u = 20. Each doc's private
+    //    element (df = 1) ranks first, so the pair meets first at
+    //    rank 2 = ⌊19/10⌋ + 1, where the bound is 18·19 ≥ 9·38. Docs
+    //    3 and 4 share one element less (J = 17/21) and must not pair.
+    //  - t = 1/2: A = {s}, B = {private, s}, i = 1, u = 2. The one
+    //    shared element is A's rank 1 of a 1-prefix and B's rank 2 of
+    //    a 2-prefix, where the bound is 1·3 ≥ 1·3.
+    val shared = (100L until 118L).toSeq
+    val sets = Seq(
+      1L -> (1000L +: shared), 2L -> (1001L +: shared),
+      3L -> (1002L +: 1003L +: shared.tail), 4L -> (1004L +: 1005L +: shared.tail),
+      5L -> Seq(200L), 6L -> Seq(1006L, 200L))
+      .map { case (id, arr) => (id, arr.sorted) }.toDF("doc_id", "arr")
+    val pairs = (num: Int, den: Int, probe: Seq[Long]) =>
+      TextOps.jaccardPairs(sets, num, den, if (probe.isEmpty) None else Some(probe.toDF("doc_id")))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    val at9 = (1L, 2L, 18L, 20L)
+    val at5 = (5L, 6L, 1L, 2L)
+    for (probe <- Seq(Nil, Seq(1L), Seq(2L), Seq(1L, 3L)))
+      assert(pairs(9, 10, probe) == Set(at9), s"t = 9/10, probe $probe")
+    assert(pairs(9, 10, Seq(3L, 5L)).isEmpty, "a probe without either side must find nothing")
+    for (probe <- Seq(Nil, Seq(5L), Seq(6L))) {
+      val got = pairs(1, 2, probe)
+      assert(got.contains(at5) && got.forall(p => p._3 * 2 >= p._4), s"t = 1/2, probe $probe: $got")
+    }
+  }
+
   test("simhash_dedup ≡ brute-force Hamming ≤ 3 over the same signatures (probe complete, pairs exactly-once)") {
     cases(6).foreach { rows =>
       val dir = dirOf(rows)

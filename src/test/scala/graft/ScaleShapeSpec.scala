@@ -170,21 +170,19 @@ class ScaleShapeSpec extends SparkSpec {
 
   test("near_dedup_groups distributed resolve: correct, hint-free, log-round convergence") {
     import graft.engine.text.TextOps
-    // force the distributed branch via the documented knob (threshold 0
-    // sends even the tiny sf0.001 quotient graph down the propagation
-    // path) on an isolated session so other suites keep the default
-    val s2 = spark.newSession()
-    s2.conf.set("graft.neardedup.quotientMaxEdges", "0")
-    val dist = graft.SparkEntry.queries("near_dedup_groups")(s2, sf0001)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // force the distributed branch (threshold 0 sends even the tiny
+    // sf0.001 quotient graph down the propagation path); the declared
+    // query resolves through the driver union-find
+    val distGroups = TextOps.resolveGroups(spark, sf0001, 0L)
+    val dist = distGroups.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val base = graft.SparkEntry.queries("near_dedup_groups")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(dist == base, "distributed label propagation must equal driver union-find")
+    assert(dist.nonEmpty && dist == base, "distributed label propagation must equal driver union-find")
     // hint discipline on the final membership join: the distributed
     // branch must NOT broadcast the resolved label table (it can be
     // arbitrarily large — that is the branch's reason to exist), while
     // the small-quotient branch must (it chose the small-side move)
-    val distPlan = TextOps.resolveGroups(s2, sf0001, 0L).queryExecution.analyzed.toString
+    val distPlan = distGroups.queryExecution.analyzed.toString
     assert(!distPlan.contains("ResolvedHint"),
       s"distributed branch must not hint-broadcast the label table:\n$distPlan")
     val smallPlan = TextOps.resolveGroups(spark, sf0001, 1000000L)

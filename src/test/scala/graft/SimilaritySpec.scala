@@ -61,14 +61,11 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("knn_per_vector takes the DISTRIBUTED branch above the kernel gate") {
-    // Above graft.sim.knnKernelMaxRows the query must plan a
-    // cross-join + window (no driver collect, no mapPartitions
-    // kernel) and still return identical rows — the gate is what
-    // keeps the collect kernel from being a driver-memory trap at
-    // scale.
-    val s2 = spark.newSession()
-    s2.conf.set("graft.sim.knnKernelMaxRows", "1")
-    val gated = Similarity.queries("knn_per_vector")(s2, sf0001)
+    // Above the kernel gate the query must plan a cross-join +
+    // window (no driver collect, no mapPartitions kernel) and still
+    // return identical rows — the gate is what keeps the collect
+    // kernel from being a driver-memory trap at scale.
+    val gated = Similarity.knnPerVector(spark, sf0001, gate = 1)
     val plan = gated.queryExecution.executedPlan.toString
     // the cross join plans as CartesianProduct (big-big) or
     // BroadcastNestedLoopJoin (one side under the broadcast
