@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native Catalyst expression: fused dot product over two
   * `array<double>` columns, with `doGenCode` — sibling of [[SqDist]]
@@ -20,16 +20,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 case class DotProd(left: Expression, right: Expression)
   extends BinaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"dot_prod expects (array<double>, array<double>), " +
-        s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    Kernels.check(prettyName, Kernels.vectorPair, children)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "dot_prod"
 

@@ -1,12 +1,8 @@
 package graft.engine.expr
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: fold the first `width` hex digits of a
+/** `fold_hex(h, width)`: fold the first `width` hex digits of a
   * lowercase-hex string (an md5 output) into a Long, base 16 — the
   * deterministic token/doc id at the root of EVERY dedup pipeline
   * (TextOps.foldDigitsSql documents the semantics and the DuckDB
@@ -15,10 +11,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * The higher-order-function form
   * (`aggregate(transform(sequence(1, w), i -> instr(..) - 1), 0L,
   * (acc, x) -> acc * 16 + x)`) evaluates INTERPRETED lambdas — two
-  * virtual calls and a boxed Long per hex digit per row. This
-  * expression is one generated loop over the string's bytes inside
-  * whole-stage codegen. Bit-for-bit identical semantics, including
-  * the HOF's edge behavior: a position past the end of the string
+  * virtual calls and a boxed Long per hex digit per row. [[fold]] is
+  * one loop over the string's bytes, a static call inside whole-stage
+  * codegen. Bit-for-bit identical semantics, including the HOF's
+  * edge behavior: a position past the end of the string
   * contributes 0 (substring → '' → instr = 1 → −1 + 1) and a non-hex
   * CHARACTER — including any non-ASCII code point, which is why the
   * fold iterates UTF-8 code points, not raw bytes — contributes −1
@@ -27,39 +23,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * every id unchanged.
   *
   * Contract: `width` must be ≥ 1 (internal use is md5 hex, width in
-  * [1, 15]). For width < 1 this expression returns 0 (an empty
-  * fold), deliberately NOT matching the HOF form there: Spark's
+  * [1, 15]). For width < 1 it returns 0 (an empty fold),
+  * deliberately NOT matching the HOF form there: Spark's
   * `sequence(1, 0)` defaults to step −1 and yields [1, 0], so the
   * HOF "folds" the first character twice — a sequence-default quirk,
   * not semantics worth reproducing. FoldWidthSpec pins this too.
   */
-case class FoldHex(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, IntegerType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"fold_hex expects (string, int), got (${l.simpleString}, ${r.simpleString})")
-    }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "fold_hex"
-
-  override def nullSafeEval(h: Any, w: Any): Any =
-    FoldHex.fold(h.asInstanceOf[UTF8String], w.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (h, w) =>
-      s"${ev.value} = graft.engine.expr.FoldHex.fold($h, $w);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): FoldHex =
-    copy(left = newLeft, right = newRight)
-}
-
 object FoldHex {
-  /** Shared by interpreted eval and generated code — one body, zero
-    * drift between the two execution modes. */
   def fold(s: UTF8String, width: Int): Long = {
     val b = s.getBytes
     var acc = 0L

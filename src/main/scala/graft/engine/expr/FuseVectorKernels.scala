@@ -29,8 +29,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
   * identity — anything else (ANSI interval types, reordered lambda
   * args, a different seed) is left untouched.
   *
-  * Injection: [[GraftExtensions]] (`spark.sql.extensions`) for
-  * session build, or [[GraftFunctions.register]] adds it to
+  * Injection: [[GraftFunctions.register]] adds it to
   * `spark.experimental.extraOptimizations` on a live session.
   */
 object FuseVectorKernels extends Rule[LogicalPlan] {

@@ -1,13 +1,10 @@
 package graft.engine.expr
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native Catalyst expression: fused squared-Euclidean distance over
   * two `array<double>` columns, with `doGenCode` — a single generated
@@ -24,16 +21,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 case class SqDist(left: Expression, right: Expression)
   extends BinaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"sq_dist expects (array<double>, array<double>), " +
-        s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    Kernels.check(prettyName, Kernels.vectorPair, children)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "sq_dist"
 
@@ -86,150 +75,4 @@ case class SqDist(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SqDist =
     copy(left = newLeft, right = newRight)
-}
-
-/** Registration: either `spark.sql.extensions=graft.engine.expr.GraftExtensions`
-  * at session build, or [[GraftFunctions.register]] on a live session.
-  * Exposed to SQL and `functions.call_function` as `sq_dist` /
-  * `dot_prod`.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.descriptors.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => FuseVectorKernels)
-  }
-}
-
-object GraftFunctions {
-  val sqDistDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("sq_dist"),
-    new ExpressionInfo(classOf[SqDist].getCanonicalName, "sq_dist"),
-    (children: Seq[Expression]) => SqDist(children.head, children(1)))
-
-  val dotProdDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("dot_prod"),
-    new ExpressionInfo(classOf[DotProd].getCanonicalName, "dot_prod"),
-    (children: Seq[Expression]) => DotProd(children.head, children(1)))
-
-  val foldHexDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("fold_hex"),
-    new ExpressionInfo(classOf[FoldHex].getCanonicalName, "fold_hex"),
-    (children: Seq[Expression]) => FoldHex(children.head, children(1)))
-
-  val ngramFoldIdsDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("ngram_fold_ids"),
-    new ExpressionInfo(classOf[NgramFoldIds].getCanonicalName, "ngram_fold_ids"),
-    (children: Seq[Expression]) => NgramFoldIds(children.head, children(1), children(2)))
-
-  val ngramFoldSeqDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("ngram_fold_seq"),
-    new ExpressionInfo(classOf[NgramFoldSeq].getCanonicalName, "ngram_fold_seq"),
-    (children: Seq[Expression]) => NgramFoldSeq(children.head, children(1), children(2)))
-
-  val ngramMd5SetDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("ngram_md5_set"),
-    new ExpressionInfo(classOf[NgramMd5Set].getCanonicalName, "ngram_md5_set"),
-    (children: Seq[Expression]) => NgramMd5Set(children.head, children(1)))
-
-  val chunkFpsDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("chunk_fps"),
-    new ExpressionInfo(classOf[ChunkFps].getCanonicalName, "chunk_fps"),
-    (children: Seq[Expression]) => ChunkFps(children.head, children(1), children(2)))
-
-  val charFreqDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("char_freq"),
-    new ExpressionInfo(classOf[CharFreq].getCanonicalName, "char_freq"),
-    (children: Seq[Expression]) => CharFreq(children.head))
-
-  val ngramStringsDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("ngram_strings"),
-    new ExpressionInfo(classOf[NgramStrings].getCanonicalName, "ngram_strings"),
-    (children: Seq[Expression]) => NgramStrings(children.head, children(1)))
-
-  val wordBigramsDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("word_bigrams"),
-    new ExpressionInfo(classOf[WordBigrams].getCanonicalName, "word_bigrams"),
-    (children: Seq[Expression]) => WordBigrams(children.head))
-
-  val charPairFreqDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("char_pair_freq"),
-    new ExpressionInfo(classOf[CharPairFreq].getCanonicalName, "char_pair_freq"),
-    (children: Seq[Expression]) => CharPairFreq(children.head))
-
-  val absMaxDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("abs_max"),
-    new ExpressionInfo(classOf[AbsMax].getCanonicalName, "abs_max"),
-    (children: Seq[Expression]) => AbsMax(children.head))
-
-  val quantizeI8Descriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("quantize_i8"),
-    new ExpressionInfo(classOf[QuantizeI8].getCanonicalName, "quantize_i8"),
-    (children: Seq[Expression]) => QuantizeI8(children.head, children(1)))
-
-  val quantSseDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("quant_sse"),
-    new ExpressionInfo(classOf[QuantSse].getCanonicalName, "quant_sse"),
-    (children: Seq[Expression]) => QuantSse(children.head, children(1)))
-
-  val vecHasNullElemDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("vec_has_null_elem"),
-    new ExpressionInfo(classOf[VecHasNullElem].getCanonicalName, "vec_has_null_elem"),
-    (children: Seq[Expression]) => VecHasNullElem(children.head))
-
-  val vecHasNonFiniteElemDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("vec_has_nonfinite_elem"),
-    new ExpressionInfo(classOf[VecHasNonFiniteElem].getCanonicalName, "vec_has_nonfinite_elem"),
-    (children: Seq[Expression]) => VecHasNonFiniteElem(children.head))
-
-  val minhash8Descriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("minhash8"),
-    new ExpressionInfo(classOf[Minhash8].getCanonicalName, "minhash8"),
-    (children: Seq[Expression]) => Minhash8(children.head, children(1)))
-
-  val simhash16Descriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("simhash16"),
-    new ExpressionInfo(classOf[Simhash16].getCanonicalName, "simhash16"),
-    (children: Seq[Expression]) => Simhash16(children.head))
-
-  val wordStatsDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("word_stats"),
-    new ExpressionInfo(classOf[WordStats].getCanonicalName, "word_stats"),
-    (children: Seq[Expression]) => WordStats(children.head))
-
-  val winnowStatsDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("winnow_stats"),
-    new ExpressionInfo(classOf[WinnowStats].getCanonicalName, "winnow_stats"),
-    (children: Seq[Expression]) => WinnowStats(children.head, children(1), children(2)))
-
-  val tokenPairsDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("token_pairs"),
-    new ExpressionInfo(classOf[TokenPairs].getCanonicalName, "token_pairs"),
-    (children: Seq[Expression]) => TokenPairs(children.head))
-
-  val charEntropyStatsDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("char_entropy_stats"),
-    new ExpressionInfo(classOf[CharEntropyStats].getCanonicalName, "char_entropy_stats"),
-    (children: Seq[Expression]) => CharEntropyStats(children.head))
-
-  val descriptors: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
-    Seq(sqDistDescriptor, dotProdDescriptor, foldHexDescriptor,
-      ngramFoldIdsDescriptor, ngramFoldSeqDescriptor, ngramMd5SetDescriptor,
-      chunkFpsDescriptor, charFreqDescriptor,
-      ngramStringsDescriptor, wordBigramsDescriptor, charPairFreqDescriptor,
-      absMaxDescriptor, quantizeI8Descriptor, quantSseDescriptor,
-      vecHasNullElemDescriptor, vecHasNonFiniteElemDescriptor,
-      minhash8Descriptor, simhash16Descriptor, wordStatsDescriptor,
-      winnowStatsDescriptor, tokenPairsDescriptor, charEntropyStatsDescriptor)
-
-  def register(s: SparkSession): Unit = {
-    descriptors.foreach {
-      case (id, info, builder) =>
-        s.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
-    // live-session path for the fuse rule (extensions cover new
-    // sessions); idempotent — extraOptimizations is a tiny Seq
-    if (!s.experimental.extraOptimizations.contains(FuseVectorKernels))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ FuseVectorKernels
-  }
 }

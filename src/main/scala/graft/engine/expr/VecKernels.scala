@@ -4,9 +4,9 @@ import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType}
 
 /** Native codegen'd kernels for the int8-quantization family
   * (`embedding_quantize`, `ann_sq_rescore_sweep`) — the last
@@ -85,8 +85,14 @@ object VecKernels {
       new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
     }
   }
-  /** TRUE iff the array carries a NULL element — reads only the null
-    * mask, never the values, so it works on any element type. */
+  /** `vec_has_null_elem(a)`: TRUE iff the array carries a NULL
+    * element — reads only the null mask, never the values, so it works
+    * on any element type. The codegen'd face of the vector-universe
+    * boundary ([[graft.engine.Tables.cleanVectors]]): the equivalent
+    * `forall(a, x -> x IS NOT NULL)` HOF is an INTERPRETED lambda
+    * (HOFs never enter whole-stage codegen) sitting under every
+    * similarity and clustering scan, and it breaks the no-lambda
+    * hot-path discipline ScaleShapeSpec pins. */
   def hasNullElem(a: ArrayData): Boolean = {
     val n = a.numElements()
     var i = 0
@@ -96,9 +102,16 @@ object VecKernels {
     }
     false
   }
-  /** TRUE iff the array carries a NaN or ±Infinity element (NULL
-    * elements are skipped — they are the null-mask gate's job).
-    * `isFloat` selects the element accessor at codegen time. */
+  /** `vec_has_nonfinite_elem(a)`: TRUE iff the array carries a NaN or
+    * ±Infinity element (NULL elements are skipped — they are the
+    * null-mask gate's job). `isFloat` selects the element accessor at
+    * codegen time: float32 tables and float64 projections both sit
+    * under this gate. The codegen'd face of the vector universe's
+    * FINITENESS clause (round 14): one NaN component turned
+    * whole-stage ranking keys into NaN (engine-dependent NaN
+    * ordering), fed MLlib its loud "MUST NOT be NaN or Infinity"
+    * abort, and an Infinity reached a DECIMAL round as a
+    * NumberFormatException — all from a single corrupt float. */
   def hasNonFiniteElem(a: ArrayData, isFloat: Boolean): Boolean = {
     val n = a.numElements()
     var i = 0
@@ -113,45 +126,12 @@ object VecKernels {
   }
 }
 
-/** `vec_has_null_elem(a)` — the codegen'd face of the vector-universe
-  * boundary ([[graft.engine.Tables.cleanVectors]]): the equivalent
-  * `forall(a, x -> x IS NOT NULL)` HOF is an INTERPRETED lambda (HOFs
-  * never enter whole-stage codegen) sitting under every similarity and
-  * clustering scan, and it breaks the no-lambda hot-path discipline
-  * ScaleShapeSpec pins. Null-mask-only read — element type agnostic. */
-case class VecHasNullElem(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(_, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"vec_has_null_elem expects an array, got ${t.simpleString(3)}")
-  }
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-  override def prettyName: String = "vec_has_null_elem"
-  override def nullSafeEval(a: Any): Any =
-    VecKernels.hasNullElem(a.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.engine.expr.VecKernels.hasNullElem($a);")
-  override protected def withNewChildInternal(newChild: Expression): VecHasNullElem =
-    copy(child = newChild)
-}
-
-/** `vec_has_nonfinite_elem(a)` — the codegen'd face of the vector
-  * universe's FINITENESS clause (round 14): one NaN component turned
-  * whole-stage ranking keys into NaN (engine-dependent NaN ordering),
-  * fed MLlib its loud "MUST NOT be NaN or Infinity" abort, and an
-  * Infinity reached a DECIMAL round as a NumberFormatException — all
-  * from a single corrupt float. Value read is element-type-dispatched
-  * at codegen time (float32 tables and float64 projections both sit
-  * under this gate); NULL elements are skipped, the null-mask kernel
-  * owns them. */
+/** `vec_has_nonfinite_elem(a)` over [[VecKernels.hasNonFiniteElem]]:
+  * not a [[Kernel]] row, because the generated call passes the
+  * element-type flag as a constant. */
 case class VecHasNonFiniteElem(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"vec_has_nonfinite_elem expects array<float|double>, got ${t.simpleString(3)}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    Kernels.check(prettyName, Kernels.floatingArray, children)
   private def isFloat: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
   override def dataType: DataType = org.apache.spark.sql.types.BooleanType
@@ -163,71 +143,4 @@ case class VecHasNonFiniteElem(child: Expression) extends UnaryExpression {
       s"${ev.value} = graft.engine.expr.VecKernels.hasNonFiniteElem($a, $isFloat);")
   override protected def withNewChildInternal(newChild: Expression): VecHasNonFiniteElem =
     copy(child = newChild)
-}
-
-/** `abs_max(a)` — see [[VecKernels.absMax]]. */
-case class AbsMax(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"abs_max expects array<double>, got ${t.simpleString(3)}")
-  }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "abs_max"
-  override def nullSafeEval(a: Any): Any =
-    VecKernels.absMax(a.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.engine.expr.VecKernels.absMax($a);")
-  override protected def withNewChildInternal(newChild: Expression): AbsMax =
-    copy(child = newChild)
-}
-
-/** `quantize_i8(a, sc)` — see [[VecKernels.quantizeI8]]. */
-case class QuantizeI8(left: Expression, right: Expression)
-  extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), DoubleType) => TypeCheckResult.TypeCheckSuccess
-      case (a, b) => TypeCheckResult.TypeCheckFailure(
-        s"quantize_i8 expects (array<double>, double), got " +
-          s"(${a.simpleString(3)}, ${b.simpleString(3)})")
-    }
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override def prettyName: String = "quantize_i8"
-  override def nullSafeEval(a: Any, sc: Any): Any =
-    VecKernels.quantizeI8(a.asInstanceOf[ArrayData], sc.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, sc) =>
-      s"${ev.value} = graft.engine.expr.VecKernels.quantizeI8($a, $sc);")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): QuantizeI8 =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `quant_sse(a, sc)` — see [[VecKernels.quantSse]]. */
-case class QuantSse(left: Expression, right: Expression)
-  extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), DoubleType) => TypeCheckResult.TypeCheckSuccess
-      case (a, b) => TypeCheckResult.TypeCheckFailure(
-        s"quant_sse expects (array<double>, double), got " +
-          s"(${a.simpleString(3)}, ${b.simpleString(3)})")
-    }
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "quant_sse"
-  override def nullSafeEval(a: Any, sc: Any): Any =
-    VecKernels.quantSse(a.asInstanceOf[ArrayData], sc.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, sc) => {
-      val boxed = ctx.freshName("qsse")
-      s"""java.lang.Double $boxed = graft.engine.expr.VecKernels.quantSse($a, $sc);
-         |if ($boxed == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $boxed.doubleValue(); }""".stripMargin
-    })
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): QuantSse =
-    copy(left = newLeft, right = newRight)
 }
